@@ -91,8 +91,10 @@ object CoveragePlayModel {
            pivotStats.map(s => first(col(s)).as(s)).tail: _*)
     // Spark names pivoted columns {position}_{stat}; the reference emits
     // {stat}_{position} (DefCoverage.ipynb:88-91)
-    val renamed = positions.flatMap(p => pivotStats.map(s => s"${p}_$s" -> s"${s}_$p"))
-    renamed.foldLeft(wide) { case (df, (from, to)) => df.withColumnRenamed(from, to) }
+    // in one projection: a rename per column would re-analyze the
+    // growing plan ~90 times
+    wide.withColumnsRenamed(
+        positions.flatMap(p => pivotStats.map(s => s"${p}_$s" -> s"${s}_$p")).toMap)
       .na.fill(0.0)
   }
 
@@ -168,17 +170,26 @@ object CoveragePlayModel {
 
   def rfMetrics(features0: DataFrame): DataFrame = {
     val (features, fc, _, data) = prepared(features0)
-    val (train, test) = Pipelines.stratifiedSplit(
-      data, "label", 0.8, seed = 42, idCols = Seq("gameId", "playId", "defensiveTeam"))
-    val model = newRf().fit(train)
-    import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
-    val evalAcc = new MulticlassClassificationEvaluator().setMetricName("accuracy")
+    val inTrain = Pipelines.stratifiedInTrain(
+      "label", 0.8, seed = 42, idCols = Seq("gameId", "playId", "defensiveTeam"))
+    val model = newRf().fit(data.filter(inTrain))
+    // With unit weights, MulticlassClassificationEvaluator's accuracy is
+    // (rows predicted right) / (rows), a ratio of exact integer counts,
+    // so one aggregation over the scored matrix yields the same doubles
+    // for both sides and the row count as a single job.
+    val hit = (col("prediction") === col("label")).cast("long")
+    val held = !inTrain
+    val r = model.transform(data)
+      .agg(sum(hit), count(lit(1)), sum(when(held, hit)), count(when(held, lit(1))))
+      .head()
+    val nPlays = r.getLong(1)
+    val nTest = r.getLong(3)
     val spark = features.sparkSession
     import spark.implicits._
     val out = Seq(
-      ("overall_accuracy", evalAcc.evaluate(model.transform(data))),
-      ("val_accuracy", if (test.isEmpty) -1.0 else evalAcc.evaluate(model.transform(test))),
-      ("n_plays", data.count().toDouble),
+      ("overall_accuracy", r.getLong(0).toDouble / nPlays),
+      ("val_accuracy", if (nTest == 0) -1.0 else r.getLong(2).toDouble / nTest),
+      ("n_plays", nPlays.toDouble),
       ("n_features", fc.size.toDouble)
     ).toDF("metric", "value")
     data.unpersist(); features.unpersist() // metrics are driver scalars

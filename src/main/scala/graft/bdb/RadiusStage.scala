@@ -1,6 +1,6 @@
 package graft.bdb
 
-import graft.domain.{Kernels, Openness}
+import graft.domain.Kernels
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,40 +19,22 @@ import org.apache.spark.sql.functions._
   * reference's per-chunk seeding, which changes results when the chunk
   * boundaries move.
   *
-  * Round 8: the per-row seed moved from `xxhash64(keys...)` (Spark's
-  * internal binary hashing — no second engine can replay it) to
-  * `mix64` of a *31-folded key (plain signed-long arithmetic, then the
-  * SplitMix64 scramble `OracleU64.mix64Ctes` replays in DuckDB) — the
-  * same portability move that made k2_openness oracle-checkable. That
-  * flipped `bdb_radius_stage` from rows-only+golden to DuckDB
-  * hash-checked: the oracle independently re-runs the ENTIRE MC kernel
-  * over the fixture (every sample, every defender test).
+  * The per-row seed is `mix64` of a *31-folded key: plain signed-long
+  * arithmetic, then the SplitMix64 scramble `OracleU64.mix64Ctes`
+  * replays in DuckDB. Spark's `xxhash64` would be simpler, but no second
+  * engine can replay it, and with a replayable seed the oracle re-runs
+  * the entire MC kernel over the fixture (every sample, every defender
+  * test), so `bdb_radius_stage` is hash-checked rather than golden-only.
   *
-  * Round 9: the oracle-parity move above had a silent cost — reading
-  * the `coalesce(1)` parquet replica (1,450 rows, one file) handed the
-  * ~12.7M-sample kernel to ~1 task (2.9 s → 22.1 s in the driver
-  * bench; the DuckDB side hit the SAME ≤2-thread pathology and fixed
-  * it with MATERIALIZED — BdbQueries radius oracle). The kernel
-  * projection now routes through [[graft.domain.Kernels.spread]] on
-  * the seed keys — exactly the reference's chunked parallel map
-  * (`radius_model.R:210-255`, SURVEY §2.8 K3) — which is
-  * hash-invariant because scores are seeded per row. KernelSpreadSpec
-  * makes the single-partition regression a failing test.
+  * The kernel projection routes through [[graft.domain.Kernels.spread]]
+  * on the seed keys, the reference's chunked parallel map
+  * (`radius_model.R:210-255`, SURVEY §2.8 K3). The cleaned rows are few
+  * and may arrive as one parquet file, which would hand the whole
+  * ~12.7M-sample kernel to one task; spreading is hash-invariant
+  * because scores are seeded per row. KernelSpreadSpec makes the
+  * single-partition regression a failing test.
   */
 object RadiusStage {
-
-  // Array[Double] parameters (round 14): Spark converts
-  // array<double> to primitive arrays for this signature, so the
-  // ~12.7M-sample loop never boxes a coordinate (the Seq form built a
-  // Seq[Defender] of case objects per row and unboxed per access).
-  // Same arithmetic in the same order — bit-identical scores.
-  private val openUdf = udf { (params: Array[Double], dxs: Array[Double],
-                               dys: Array[Double], dss: Array[Double], seed: Long) =>
-    Openness.openCount(params(0), params(1), params(2), params(3),
-      dxs, dys, dss, params(4), params(5), params(6), seed, reachTime = 1.0)
-  }.withName(Kernels.K2Name)
-
-  private val mix64Udf = udf { (x: Long) => Openness.mix64(x) }
 
   /** The kernel projection alone (pre-`secondId`) — public so
     * KernelSpreadSpec can assert its runtime partition spread. */
@@ -60,14 +42,14 @@ object RadiusStage {
     Kernels.spread(cleaned,
         col("gameId"), col("playId"), col("frameId"), col("nflId"))
       .withColumn("dir_rad", radians(col("dir")))
-      .withColumn("open_count", openUdf(
+      .withColumn("open_count", Kernels.k2Udf(
         array(col("s"), col("dir_rad"), col("x"), col("y"),
               col("throw_speed"), col("fx"), col("fy")),
         transform(col("defenders"), d => d.getField("x")),
         transform(col("defenders"), d => d.getField("y")),
         transform(col("defenders"), d => d.getField("s")),
-        mix64Udf(((col("gameId") * 31 + col("playId")) * 31
-                   + col("frameId")) * 31 + col("nflId"))))
+        Kernels.mix64Udf(((col("gameId") * 31 + col("playId")) * 31
+                          + col("frameId")) * 31 + col("nflId"))))
       .drop("dir_rad")
   }
 

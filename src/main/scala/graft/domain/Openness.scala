@@ -82,11 +82,39 @@ object Openness {
       defenders.map(_.x).toArray, defenders.map(_.y).toArray,
       defenders.map(_.s).toArray, vb, fx, fy, seed, reachTime)
 
-  /** Primitive-array form (round 14): the kernel UDFs hand Spark
-    * `Array[Double]` parameters directly, so the ~10⁴-sample loop runs
-    * over unboxed arrays instead of a `Seq[Defender]` of case objects
-    * (the Seq overload above delegates here — one loop, bit-identical
-    * op order, OpennessSpec pins both). */
+  /** Primitive-array form: the kernel UDFs hand Spark `Array[Double]`
+    * parameters directly, so the ~10⁴-sample loop runs over unboxed
+    * arrays (the Seq overload above delegates here — one loop).
+    *
+    * The loop skips work that cannot change the score; every skip is
+    * exact, so the result is bit-identical to evaluating every sample
+    * against every defender with `atan2` and `%` (the replay the DuckDB
+    * oracle runs, which therefore checks the skips independently):
+    *  - Heading normalization. `atan2` lies in [−π, π], so
+    *    `((ang % τ) + τ) % τ` is `a = ang + τ`, minus τ when `a ≥ τ`; that
+    *    subtraction is exact by Sterbenz's lemma (τ ≤ a < 2τ), which is
+    *    all `%` would compute. Per-row constants (box width, clamped
+    *    speeds, normalized heading) are hoisted, same values.
+    *  - Defender cull (only when `vb > 0` and finite; any other `vb`
+    *    keeps every defender). The ball reaches no sample later than
+    *    `tBallMax`, the farthest box corner's distance over `vb`; a
+    *    defender whose distance to the box over its clamped speed,
+    *    `tMin`, exceeds `tBallMax·(1+1e-9) + 1e-9` never reaches any
+    *    sample by ball arrival, so it never counts. The box is padded by
+    *    far more than the few ulps a rounded sample can fall outside it,
+    *    and the relative margin is ~10⁷ times the few-ulp error of each
+    *    rounded time, so a rounded `tDef ≤ tBall` test can never fire for
+    *    a culled defender. A NaN bound keeps the defender.
+    *  - Heading cone. With h = (cos θ, sin θ) of the normalized heading θ
+    *    (not of `dir`: τ is 2π rounded, so for a large |dir| the `atan2`
+    *    path compares against θ, which drifts from `dir` mod 2π) and v the
+    *    sample's offset from the receiver, `c = (v·h)/|v|` is
+    *    the cosine of their angle to ~1e-15. When `|v| > 1e-6` and `c` is
+    *    more than 1e-9 from cos(π/8), the angle is ≥ 1e-9 from π/8 —
+    *    far beyond the ~1e-14 error of the `atan2` path — so both paths
+    *    agree and the bonus is decided without `atan2`. Inside that band,
+    *    and for any NaN, the `atan2` path decides.
+    */
   def openCount(vs: Double, dir: Double, px: Double, py: Double,
                 dxs: Array[Double], dys: Array[Double], dss: Array[Double],
                 vb: Double, fx: Double, fy: Double,
@@ -106,36 +134,68 @@ object Openness {
     def dist(ax: Double, ay: Double, bx: Double, by: Double): Double =
       math.sqrt((ax - bx) * (ax - bx) + (ay - by) * (ay - by))
 
+    val w = x1 - x0
+    val h = y1 - y0
+    val vsC = math.max(vs, 1e-9)
+    val dirN = ((dir % Tau) + Tau) % Tau
+    val hx = math.cos(dirN)
+    val hy = math.sin(dirN)
+
+    // defenders that can reach some sample by ball arrival. The box is
+    // inverted when an off-field receiver's reach misses the field on
+    // both axes, so order its corners before padding.
+    val m = dxs.length
+    val cx = new Array[Double](m)
+    val cy = new Array[Double](m)
+    val cs = new Array[Double](m)
+    var kept = 0
+    val cull = vb > 0 && !vb.isInfinite
+    val pad = 1e-9 * (1.0 + math.max(math.max(math.abs(x0), math.abs(x1)),
+                                      math.max(math.abs(y0), math.abs(y1))))
+    val bx0 = math.min(x0, x1) - pad
+    val bx1 = math.max(x0, x1) + pad
+    val by0 = math.min(y0, y1) - pad
+    val by1 = math.max(y0, y1) + pad
+    val ballFar = math.max(math.max(dist(bx0, by0, fx, fy), dist(bx0, by1, fx, fy)),
+                           math.max(dist(bx1, by0, fx, fy), dist(bx1, by1, fx, fy)))
+    val tBallMax = ballFar / vb
+    val tBound = tBallMax * (1 + 1e-9) + 1e-9
+    var d = 0
+    while (d < m) {
+      val sd = math.max(dss(d), 1e-9)
+      val ex = math.max(math.max(bx0 - dxs(d), dxs(d) - bx1), 0.0)
+      val ey = math.max(math.max(by0 - dys(d), dys(d) - by1), 0.0)
+      val tMin = math.sqrt(ex * ex + ey * ey) / sd
+      if (!(cull && tMin > tBound)) {
+        cx(kept) = dxs(d); cy(kept) = dys(d); cs(kept) = sd
+        kept += 1
+      }
+      d += 1
+    }
+
     val rng = new SplitMix64(seed)
     var score5 = 0L // integer fifths — exact, order-independent
     var i = 0
     while (i < n) {
-      val sx = x0 + rng.nextDouble() * (x1 - x0)
-      val sy = y0 + rng.nextDouble() * (y1 - y0)
+      val sx = x0 + rng.nextDouble() * w
+      val sy = y0 + rng.nextDouble() * h
       // ball flight time to the sampled point (radius_model.R:134)
       val tBall = dist(sx, sy, fx, fy) / vb
       // receiver reach (radius_model.R:149-166)
-      val tRecv = dist(sx, sy, px, py) / math.max(vs, 1e-9)
+      val tRecv = dist(sx, sy, px, py) / vsC
       if (tRecv <= tBall) {
         // defenders contesting: reach the point by ball arrival
         // (radius_model.R:138-146)
         var k = 0
         var j = 0
-        while (j < dxs.length) {
-          val tDef = dist(sx, sy, dxs(j), dys(j)) / math.max(dss(j), 1e-9)
-          if (tDef <= tBall) k += 1
+        while (j < kept) {
+          if (dist(sx, sy, cx(j), cy(j)) / cs(j) <= tBall) k += 1
           j += 1
         }
         if (k == 0) {
           score5 += 5
           // heading bonus (radius_model.R:168-182)
-          val ang = math.atan2(sy - py, sx - px)
-          val diff = {
-            val tau = 2 * math.Pi
-            val d0 = math.abs(((ang % tau) + tau) % tau - ((dir % tau) + tau) % tau)
-            math.min(d0, tau - d0)
-          }
-          if (diff <= math.Pi / 8) score5 += 1
+          if (inCone(sx - px, sy - py, hx, hy, dirN)) score5 += 1
         } else if (k > 1) {
           score5 -= k // contested pile-up penalty (radius_model.R:186-195)
         }
@@ -143,5 +203,28 @@ object Openness {
       i += 1
     }
     score5 / 5.0
+  }
+
+  private val Tau = 2 * math.Pi
+  private val HalfCone = math.Pi / 8
+  private val ConeHi = math.cos(HalfCone) + 1e-9
+  private val ConeLo = math.cos(HalfCone) - 1e-9
+
+  /** Whether offset (vx, vy) lies within ±π/8 of the heading `dirN`
+    * (normalized to [0, τ)), whose unit vector is (hx, hy): decided by
+    * the cosine outside the 1e-9 band around cos(π/8), by the `atan2`
+    * circular distance inside it (see the `openCount` scaladoc). */
+  private[domain] def inCone(vx: Double, vy: Double,
+                             hx: Double, hy: Double, dirN: Double): Boolean = {
+    val len = math.sqrt(vx * vx + vy * vy)
+    val dot = vx * hx + vy * hy
+    if (len > 1e-6 && dot > ConeHi * len) true
+    else if (len > 1e-6 && dot < ConeLo * len) false
+    else {
+      var a = math.atan2(vy, vx) + Tau
+      if (a >= Tau) a -= Tau
+      val d0 = math.abs(a - dirN)
+      math.min(d0, Tau - d0) <= HalfCone
+    }
   }
 }

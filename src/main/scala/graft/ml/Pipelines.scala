@@ -3,7 +3,7 @@ package graft.ml
 import org.apache.spark.ml.feature.{Imputer, StandardScaler, StringIndexer, VectorAssembler}
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.ml.classification.{GBTClassifier, LogisticRegression, OneVsRest, RandomForestClassifier}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.9 — the ML surface (M1-M11) as spark.ml building blocks.
@@ -64,10 +64,16 @@ object Pipelines {
     * both sides stay lazy single-pass filters with no anti-join. */
   def stratifiedSplit(df: DataFrame, labelCol: String, trainFrac: Double,
                       seed: Long, idCols: Seq[String]): (DataFrame, DataFrame) = {
+    val inTrain = stratifiedInTrain(labelCol, trainFrac, seed, idCols)
+    (df.filter(inTrain), df.filter(!inTrain))
+  }
+
+  /** The row predicate behind [[stratifiedSplit]]: true on the train side. */
+  def stratifiedInTrain(labelCol: String, trainFrac: Double,
+                        seed: Long, idCols: Seq[String]): Column = {
     val u = pmod(xxhash64((idCols :+ labelCol).map(col) :+ lit(seed): _*),
                  lit(1000000L)).cast("double") / 1000000.0
-    val inTrain = u < trainFrac
-    (df.filter(inTrain), df.filter(!inTrain))
+    u < trainFrac
   }
 
   /** Standardize features (withMean so the oracle formula is exact:

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.QueryDef.q
-import graft.domain.{Interception, Kernels, Kinematics, Openness}
+import graft.domain.{Interception, Kernels, Kinematics}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -35,24 +35,14 @@ object KernelQueries {
     Interception.partialRadius(vp, px, py, vb, bx, by)
   }.withName(Kernels.K1Name)
 
-  /** params = [vs, dir, px, py, vb, fx, fy] packed to stay within the
-    * 10-argument Scala-UDF limit. */
-  private val k2Udf = udf { (params: Array[Double], dxs: Array[Double],
-                             dys: Array[Double], dss: Array[Double], seed: Long) =>
-    // primitive-array form (round 14, the RadiusStage change): no boxed
-    // Seq[Defender] per row; bit-identical scores
-    Openness.openCount(params(0), params(1), params(2), params(3),
-      dxs, dys, dss, params(4), params(5), params(6), seed, reachTime = 1.0)
-  }.withName(Kernels.K2Name)
-
-  private val mix64Udf = udf { (x: Long) => Openness.mix64(x) }
-
   /** DuckDB replay of the FULL k2 Monte-Carlo kernel (what makes the MC
     * oracle-checkable at all): SplitMix64's draw j is a pure function of
     * (seed, j) — state after j draws is seed + (j+1)·GOLDEN mod 2^64 —
     * so `unnest(range(n))` enumerates every sample with no recursion,
     * and the kernel's ops are all exactly-specified IEEE doubles (sqrt
-    * forms, fmod, one atan2; see Openness scaladoc). The u64 wrap
+    * forms, fmod, one atan2; see Openness scaladoc). It replays the
+    * plain loop, every sample against every defender with `atan2`, so it
+    * checks the kernel's pruning independently. The u64 wrap
     * arithmetic runs on native UBIGINT via a 32-bit-split multiply whose
     * partial products all stay below 2^64, with a single HUGEINT
     * add-then-mask per multiply; every intermediate is a NAMED CTE
@@ -149,7 +139,7 @@ object KernelQueries {
         |       round(list_aggregate(radii, 'sum') / 360, 4) AS r_mean
         |FROM r ORDER BY event_id""".stripMargin) { (s, dir) =>
       // Kernels.spread: the filtered single-file scan would feed the
-      // 360-heading kernel to 1-2 tasks (the r8 radius pathology)
+      // 360-heading kernel to 1-2 tasks
       Kernels.spread(
           kin(Tables.load(s, dir, "events").filter(col("event_id") < 2000)),
           col("event_id"))
@@ -162,9 +152,8 @@ object KernelQueries {
         .orderBy("event_id")
     },
 
-    // K2 — seeded Monte-Carlo openness, ORACLE-CHECKED (round-5 judge ask
-    // #8, taken past the ~50-row probe to the full 1000-row query): the
-    // seed is a SplitMix64 scramble of the row key — portable 64-bit
+    // K2 — seeded Monte-Carlo openness, ORACLE-CHECKED over all 1000
+    // rows: the seed is a SplitMix64 scramble of the row key — portable 64-bit
     // arithmetic both engines reproduce bit-for-bit — and every kernel op
     // is an exactly-specified IEEE double op, so DuckDB independently
     // regenerates seeds, replays all ~5M weighted MC samples, and the
@@ -172,8 +161,7 @@ object KernelQueries {
     // asserted in OpennessSpec.
     q("k2_openness", k2OracleSql) { (s, dir) =>
       // Kernels.spread: ~5M MC samples behind a 1000-row single-file
-      // scan — the same compute-dense-UDF starvation bdb_radius_stage
-      // hit at r8, guarded here before it crosses the visibility bar
+      // scan would otherwise run in one or two tasks
       Kernels.spread(
           kin(Tables.load(s, dir, "events").filter(col("event_id") < 1000)),
           col("event_id"))
@@ -182,11 +170,11 @@ object KernelQueries {
         .withColumn("dxs", array(col("px") + 3, col("px") - 4, col("px") + 1))
         .withColumn("dys", array(col("py") + 2, col("py") - 1, col("py") - 5))
         .withColumn("dss", array(lit(6.0), lit(7.0), lit(8.0)))
-        .withColumn("seed", mix64Udf(col("event_id")))
+        .withColumn("seed", Kernels.mix64Udf(col("event_id")))
         .withColumn("open_count",
-          round(k2Udf(array(col("vs"), col("dir0"), col("px"), col("py"),
-                            col("vb"), col("bx"), col("by")),
-                      col("dxs"), col("dys"), col("dss"), col("seed")), 4))
+          round(Kernels.k2Udf(array(col("vs"), col("dir0"), col("px"), col("py"),
+                                    col("vb"), col("bx"), col("by")),
+                              col("dxs"), col("dys"), col("dss"), col("seed")), 4))
         .select("event_id", "open_count")
         .orderBy("event_id")
     },

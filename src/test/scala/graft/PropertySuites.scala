@@ -198,6 +198,99 @@ object InterceptionProps extends Properties("Interception") {
     }
 }
 
+/** The pruned openness kernel against the plain loop it replaces, bit for
+  * bit, over rows built to reach every shortcut's edge: zero-speed, NaN
+  * and infinitely fast defenders, defenders inside the reach box, on its
+  * edge and at the cull bound, receivers at field corners and off the
+  * field on both axes (an inverted box), headings below 0, above 2π and
+  * aimed so the ±π/8 cone edge crosses the box, `vb` of 0, +∞ and NaN,
+  * and empty defender lists.
+  */
+object OpennessProps extends Properties("Openness") {
+  import graft.domain.{Openness, OpennessReference}
+  import Gen.{choose, const, frequency, oneOf}
+  import Prop.propBoolean
+
+  private val FX = Interception.FieldX
+  private val FY = Interception.FieldY
+  private val Nan = Double.NaN
+  private val Inf = Double.PositiveInfinity
+
+  final case class Row(vs: Double, dir: Double, px: Double, py: Double,
+                       dxs: Array[Double], dys: Array[Double], dss: Array[Double],
+                       vb: Double, fx: Double, fy: Double, seed: Long) {
+    override def toString: String =
+      s"Row($vs, $dir, $px, $py, ${dxs.mkString("[", ",", "]")}, " +
+        s"${dys.mkString("[", ",", "]")}, ${dss.mkString("[", ",", "]")}, $vb, $fx, $fy, $seed)"
+  }
+
+  private val receiver: Gen[(Double, Double)] = frequency(
+    6 -> (for { x <- choose(0.0, FX); y <- choose(0.0, FY) } yield (x, y)),
+    1 -> oneOf((0.0, 0.0), (FX, 0.0), (0.0, FY), (FX, FY)),
+    1 -> (for { x <- choose(FX + 0.5, FX + 2); y <- choose(FY + 0.5, FY + 2) } yield (x, y)))
+
+  private val ballSpeed: Gen[Double] =
+    frequency(6 -> choose(5.0, 30.0), 1 -> choose(1e-3, 1.0), 1 -> const(0.0),
+              1 -> const(Inf), 1 -> const(Nan))
+
+  private val row: Gen[Row] = for {
+    (px, py) <- receiver
+    vs <- frequency(6 -> choose(0.05, 7.0), 2 -> choose(0.05, 0.6), 1 -> const(0.0))
+    vb <- ballSpeed
+    fx <- choose(0.0, FX)
+    fy <- choose(0.0, FY)
+    // the kernel's reach box, unordered as it computes it
+    x0 = math.max(0.0, px - vs); x1 = math.min(FX, px + vs)
+    y0 = math.max(0.0, py - vs); y1 = math.min(FY, py + vs)
+    (lx, hx) = (math.min(x0, x1), math.max(x0, x1))
+    (ly, hy) = (math.min(y0, y1), math.max(y0, y1))
+    (farX, farY) = Seq((lx, ly), (lx, hy), (hx, ly), (hx, hy))
+      .maxBy { case (cx, cy) => math.hypot(cx - fx, cy - fy) }
+    farD = math.hypot(farX - fx, farY - fy)
+    tFar = farD / vb
+    inBox = for { x <- choose(lx, hx); y <- choose(ly, hy) } yield (x, y)
+    dir <- frequency(
+      3 -> choose(0.0, 2 * math.Pi),
+      1 -> choose(-20.0, 0.0),
+      1 -> choose(2 * math.Pi, 30.0),
+      2 -> (for { (qx, qy) <- inBox; sign <- oneOf(-1.0, 1.0); turns <- choose(-2, 2) }
+            yield math.atan2(qy - py, qx - px) + sign * math.Pi / 8 + turns * 2 * math.Pi))
+    defender = frequency(
+      6 -> (for { x <- choose(-5.0, FX + 5); y <- choose(-5.0, FY + 5); s <- choose(0.5, 10.0) }
+            yield (x, y, s)),
+      1 -> (for { x <- choose(0.0, FX); y <- choose(0.0, FY) } yield (x, y, 0.0)),
+      1 -> oneOf((Nan, 20.0, 5.0), (30.0, Nan, 5.0), (30.0, 20.0, Nan)),
+      1 -> (for { x <- choose(0.0, FX); y <- choose(0.0, FY) } yield (x, y, Inf)),
+      1 -> (for { (x, y) <- inBox; s <- choose(0.0, 10.0) } yield (x, y, s)),
+      1 -> (for { y <- choose(ly, hy); x <- oneOf(x0, x1); s <- choose(0.5, 10.0) }
+            yield (x, y, s)),
+      // near the cull bound: past the corner the ball reaches last, on
+      // the ray from the thrower, reaching that corner up to 3 % before
+      // the ball or 1e-6 after it, so the bound is nearly tight
+      3 -> (for { s <- choose(0.5, 10.0); rel <- choose(-0.03, 1e-6) } yield {
+              val d = s * tFar * (1 + rel) / farD
+              (farX + (farX - fx) * d, farY + (farY - fy) * d, s)
+            }))
+    m <- frequency(1 -> const(0), 6 -> choose(1, 11))
+    ds <- Gen.listOfN(m, defender)
+    seed <- Gen.long
+  } yield Row(vs, dir, px, py, ds.map(_._1).toArray, ds.map(_._2).toArray,
+              ds.map(_._3).toArray, vb, fx, fy, seed)
+
+  property("openCount is bit-identical to the unpruned loop") =
+    Prop.forAllNoShrink(row) { r =>
+      val got = Openness.openCount(r.vs, r.dir, r.px, r.py, r.dxs, r.dys, r.dss,
+        r.vb, r.fx, r.fy, r.seed, 1.0)
+      val want = OpennessReference.openCount(r.vs, r.dir, r.px, r.py, r.dxs, r.dys, r.dss,
+        r.vb, r.fx, r.fy, r.seed, 1.0)
+      (java.lang.Double.doubleToRawLongBits(got) ==
+        java.lang.Double.doubleToRawLongBits(want)) :| s"got=$got want=$want"
+    }
+
+  override def overrideParameters(p: org.scalacheck.Test.Parameters) =
+    p.withMinSuccessfulTests(500)
+}
+
 /** The x38 oracle-equivalence claim as a law: applying a VALID BPE merge
   * table sequentially in rank order equals the tokenizer-standard
   * iterative lowest-rank-pair encode loop. Valid = each merge's operands

@@ -125,6 +125,27 @@ class PipelineSpec extends SparkSpec {
       .filter(col("count") > 1).count() == 0)
   }
 
+  test("every fixture row scores bit-equal under the pruned and the plain kernel") {
+    import graft.domain.{Openness, OpennessReference}
+    def field(f: String) = transform(col("defenders"), d => d.getField(f))
+    // the same inputs and seed key RadiusStage hands the kernel
+    val rows = cleaned.select(col("s"), radians(col("dir")), col("x"), col("y"),
+        col("throw_speed"), col("fx"), col("fy"), field("x"), field("y"), field("s"),
+        (((col("gameId") * 31 + col("playId")) * 31 + col("frameId")) * 31
+          + col("nflId")).cast("long"))
+      .collect()
+    assert(rows.length == 2 * 5 * 29 * 5)
+    rows.foreach { r =>
+      val Seq(vs, dir, px, py, vb, fx, fy) = (0 until 7).map(r.getDouble)
+      val Seq(dxs, dys, dss) = (7 until 10).map(i => r.getSeq[Double](i).toArray)
+      val seed = Openness.mix64(r.getLong(10))
+      val got = Openness.openCount(vs, dir, px, py, dxs, dys, dss, vb, fx, fy, seed, 1.0)
+      val want = OpennessReference.openCount(vs, dir, px, py, dxs, dys, dss, vb, fx, fy, seed, 1.0)
+      assert(java.lang.Double.doubleToRawLongBits(got) ==
+        java.lang.Double.doubleToRawLongBits(want), s"row $r: got=$got want=$want")
+    }
+  }
+
   test("coverage features: one row per dropback play, stat_pos matrix shape") {
     val (_, _, players, _, _) = BdbMini.load(spark)
     val feats = CoveragePlayModel.features(plays, players, playerPlay, tracking,
@@ -135,6 +156,13 @@ class PipelineSpec extends SparkSpec {
     // (DefCoverage.ipynb:122): 3 keys + 9 stats × 2 positions + 5 play
     // context cols + coverage + score_diff
     assert(feats.columns.length == 3 + 9 * 2 + 5 + 1 + 1)
+    // exact names and order: reference {stat}_{position} naming, position
+    // blocks in the pinned order, stats in pivotStats order
+    val statPos = for (p <- Seq("CB", "S"); st <- Seq("x_mean", "x_std", "y_mean",
+      "y_std", "s_mean", "s_std", "a_mean", "a_std", "count_defenders")) yield s"${st}_$p"
+    assert(feats.columns.toSeq == Seq("gameId", "playId", "defensiveTeam") ++ statPos ++
+      Seq("pff_passCoverage", "down", "yardsToGo", "preSnapHomeScore",
+        "preSnapVisitorScore", "absoluteYardlineNumber", "score_diff"))
     val fc = CoveragePlayModel.featureCols(feats)
     assert(fc.size == 9 * 2 + 5 + 1)
     assert(fc.contains("x_mean_CB") && fc.contains("count_defenders_S")

@@ -55,4 +55,25 @@ class OpennessSpec extends AnyFunSuite {
   test("zero-speed receiver has zero openness (degenerate box)") {
     assert(score(Nil, vs = 0.0) == 0.0)
   }
+
+  test("heading cone: the cosine shortcut decides as atan2 does at the ±π/8 edge") {
+    // offsets within a few 1e-9 rad of the cone edge land on both sides
+    // of the shortcut's fallback band; the decision must match the
+    // reference's atan2/fmod formula on every one of them
+    val tau = 2 * math.Pi
+    val rng = new scala.util.Random(7)
+    for (_ <- 0 until 20000) {
+      val dir = rng.nextDouble() * 40 - 10
+      val dirN = ((dir % tau) + tau) % tau
+      val side = if (rng.nextBoolean()) 1.0 else -1.0
+      val edge = dir + side * math.Pi / 8 + (rng.nextDouble() - 0.5) * 2e-8
+      val r = if (rng.nextInt(10) == 0) rng.nextDouble() * 2e-6 else math.exp(rng.nextDouble() * 8 - 4)
+      val (vx, vy) = (r * math.cos(edge), r * math.sin(edge))
+      val ang = math.atan2(vy, vx)
+      val d0 = math.abs(((ang % tau) + tau) % tau - ((dir % tau) + tau) % tau)
+      val want = math.min(d0, tau - d0) <= math.Pi / 8
+      assert(inCone(vx, vy, math.cos(dirN), math.sin(dirN), dirN) == want,
+        s"dir=$dir vx=$vx vy=$vy")
+    }
+  }
 }
