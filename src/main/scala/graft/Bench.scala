@@ -28,16 +28,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // NOTE (round 13): spark.sql.join.preferSortMergeJoin=false (the
-      // optimization guide §9 baseline) was A/B-measured here over a
-      // join-heavy 12-query subset, interleaved runs: no aggregate win,
-      // and g5/x19 consistently slower under shuffled-hash (their big
-      // post-aggregate joins lose the sort reuse). Kept at the default.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // spark.sql.join.preferSortMergeJoin=false was A/B-measured over a
+    // join-heavy 12-query subset, interleaved runs: no aggregate win, and
+    // g5/x19 consistently slower under shuffled-hash (their big
+    // post-aggregate joins lose the sort reuse). Kept at the default.
+    val spark = Graft.session(Some(s"local[$cpus]"))
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: load every table once (parquet footers, codegen,
     // broadcast/shuffle thread pools) so per-query numbers measure the

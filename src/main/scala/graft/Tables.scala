@@ -34,14 +34,14 @@ object Tables {
     * microsecond TIMESTAMP, so we normalize the Spark side to match:
     *
     *  - TIMESTAMP(NANOS): Spark's schema converter rejects it outright
-    *    ([PARQUET_TYPE_ILLEGAL]); read as raw nanos via the legacy conf,
-    *    then truncate to microseconds (exactly DuckDB's behavior).
+    *    ([PARQUET_TYPE_ILLEGAL]); read as raw nanos via the `nanosAsLong`
+    *    legacy conf that `Graft.configure` sets on every session, then
+    *    truncate to microseconds (exactly DuckDB's behavior).
     *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark reads TIMESTAMP_NTZ;
     *    cast to session-local TimestampType (sessions run UTC, so values are
     *    identical) to keep downstream `unix_micros`/watermark code on the
     *    same type it has always seen. */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     import org.apache.spark.sql.functions.{col, expr}
     raw.schema("ts").dataType match {

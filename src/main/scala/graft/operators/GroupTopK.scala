@@ -123,7 +123,6 @@ object GroupTopK {
   def topKNative(df: DataFrame, groupCols: Seq[String], sortCol: String,
                  tieCol: String, k: Int, descending: Boolean = true): DataFrame = {
     val spark = df.sparkSession
-    graft.plans.GraftExtensions.install(spark)
     val lp = df.queryExecution.analyzed
     def attr(n: String) = lp.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(s"column $n not in ${lp.output.map(_.name)}"))

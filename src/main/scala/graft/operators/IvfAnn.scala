@@ -197,7 +197,6 @@ object IvfAnn {
   private def fitAssign(corpus: DataFrame, nCells: Int)
       : (DataFrame, DataFrame) = {
     val spark = corpus.sparkSession
-    graft.plans.GraftExtensions.install(spark)
     val cents = fitCentroids(corpus, nCells)
     val assigned = corpus
       .withColumn("rq", quantCol(col("embedding")))

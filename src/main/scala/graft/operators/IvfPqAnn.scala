@@ -210,9 +210,6 @@ object IvfPqAnn {
   def topK(corpus: DataFrame, queries: DataFrame, k: Int,
            cand: Int = 200, nCells: Int = NCells,
            nProbe: Int = NProbe): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.plans.GraftExtensions.install(spark)
-
     val coarse = IvfAnn.fitCentroids(corpus, nCells)
     val cmicro = coarse.map(_.map(PqAnn.microOf))
 
@@ -323,7 +320,6 @@ object IvfPqAnn {
   private[graft] def indexedScan(spark: org.apache.spark.sql.SparkSession,
                                  path: String, queries: DataFrame,
                                  nProbe: Int): (DataFrame, DataFrame) = {
-    graft.plans.GraftExtensions.install(spark)
     val coarse = spark.read.parquet(s"$path/centroids")
       .orderBy("cell").collect()
       .map(_.getSeq[Double](1).toArray)

@@ -157,8 +157,6 @@ object PqAnn {
     * Output (query_id, neighbor_id, cos, rnk). */
   def topK(corpus: DataFrame, queries: DataFrame, k: Int,
            cand: Int = 100): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.plans.GraftExtensions.install(spark)
     val cm = fitCodebooks(corpus)
     val codes = corpus
       .select(col("vec_id"), col("embedding"),

@@ -1,9 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{Add, And, Expression, GreaterThanOrEqual, LessThanOrEqual, Subtract}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{And, Cast, Expression, ExpressionInfo, GreaterThanOrEqual, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** SURVEY.md §7.3 case (c) territory — a demonstrative optimizer
   * `Rule[LogicalPlan]`: a circle predicate `within_dist(x, y, cx, cy, r)`
@@ -12,24 +14,24 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   *   cx−r ≤ x ≤ cx+r  AND  cy−r ≤ y ≤ cy+r
   *
-  * which IS sargable. The rule prepends those conjuncts; constant
-  * folding collapses cx±r to literals, `PushDownPredicates` moves them
-  * to the scan, and Parquet row-group statistics skip everything outside
-  * the box — at 100 TB this is the difference between a full scan and
-  * reading only the row groups near the query point. The exact circle
-  * test still runs (codegen'd) over the surviving rows, so semantics
-  * are unchanged.
+  * which IS sargable. The rule prepends those conjuncts with cx±r
+  * folded to literals, `PushDownPredicates` moves them to the scan, and
+  * Parquet row-group statistics skip everything outside the box — at
+  * 100 TB this is the difference between a full scan and reading only
+  * the row groups near the query point. The exact circle test still
+  * runs (codegen'd) over the surviving rows, so semantics are unchanged.
   *
-  * Registered through `GraftExtensions` (spark.sql.extensions) or
-  * `spark.experimental.extraOptimizations`.
+  * Registered only through `GraftExtensions`, which injects it into the
+  * optimizer's operator-optimization batch.
   */
 object DistancePushdownRule extends Rule[LogicalPlan] {
 
-  /** Fold the box edges to literals HERE: extraOptimizations run after
-    * the main optimizer's ConstantFolding batch, and only literal
-    * comparisons are recognized by the data-source filter translation. */
+  /** Fold the box edges to literals here rather than leave `cx − r` to
+    * ConstantFolding. Only literal comparisons are translated into
+    * data-source filters. The batch would fold them on a later pass, but
+    * folding here makes the conjuncts sargable in the pass that adds them,
+    * whatever the rule's position in the batch. */
   private def bounds(w: WithinDist): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
     val cxv = w.cx.eval().asInstanceOf[Double]
     val cyv = w.cy.eval().asInstanceOf[Double]
     val rv = w.r.eval().asInstanceOf[Double]
@@ -60,194 +62,78 @@ object DistancePushdownRule extends Rule[LogicalPlan] {
   }
 }
 
-/** `spark.sql.extensions=graft.plans.GraftExtensions` wires the engine's
-  * custom expression + rule into any session at build time. */
+/** `spark.sql.extensions=graft.plans.GraftExtensions` (set by
+  * `Graft.configure`) is the one way the engine's SQL functions, pushdown
+  * rule and GroupTopK strategy reach a session. Sessions made with
+  * `newSession()` share the parent's extensions, so they inherit all of it. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => DistancePushdownRule)
-    ext.injectFunction(GraftExtensions.withinDistDescriptor)
-    ext.injectFunction(GraftExtensions.cosineSimDescriptor)
-    ext.injectFunction(GraftExtensions.mix64Descriptor)
-    ext.injectFunction(GraftExtensions.countMinDescriptor)
-    ext.injectFunction(GraftExtensions.hllDescriptor)
-    ext.injectFunction(GraftExtensions.amsDescriptor)
-    ext.injectFunction(GraftExtensions.kmvDescriptor)
-    ext.injectFunction(GraftExtensions.bloomDescriptor)
     ext.injectPlannerStrategy(_ => GroupTopKStrategy)
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), GraftExtensions.build(f)))
+    }
   }
 }
 
 object GraftExtensions {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-  val withinDistDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("within_dist"),
-    new ExpressionInfo(classOf[WithinDist].getName, "within_dist"),
-    (args: Seq[Expression]) => {
-      require(args.length == 5, "within_dist(x, y, cx, cy, r) takes 5 arguments")
-      // normalize numeric literals (SQL decimals under ANSI) to DOUBLE
-      val a = args.map {
-        case e if e.dataType == org.apache.spark.sql.types.DoubleType => e
-        case e => org.apache.spark.sql.catalyst.expressions.Cast(
-          e, org.apache.spark.sql.types.DoubleType)
-      }
-      WithinDist(a(0), a(1), a(2), a(3), a(4))
-    })
+  /** One SQL function. The trailing `intParams.size` arguments must be
+    * integer literals (named in the error); `longKey` casts the leading
+    * argument, the key, to BIGINT. `make` gets the leading arguments and
+    * the literal values. */
+  private[graft] final case class SqlFunction(
+      name: String, cls: Class[_ <: Expression], arity: Int, usage: String,
+      intParams: Seq[String], longKey: Boolean,
+      make: (Seq[Expression], Seq[Int]) => Expression)
 
-  val cosineSimDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("cosine_sim"),
-    new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-    (args: Seq[Expression]) => {
-      require(args.length == 2, "cosine_sim(a, b) takes 2 arguments")
-      CosineSim(args(0), args(1))
-    })
+  private def castTo(t: DataType)(e: Expression): Expression =
+    if (e.dataType == t) e else Cast(e, t)
 
-  val mix64Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("mix64"),
-    new ExpressionInfo(classOf[Mix64].getName, "mix64"),
-    (args: Seq[Expression]) => {
-      require(args.length == 1, "mix64(x) takes 1 argument")
-      Mix64(args.head)
-    })
+  private[graft] val functions: Seq[SqlFunction] = Seq(
+    // numeric literals (SQL decimals under ANSI) are normalized to DOUBLE
+    SqlFunction("within_dist", classOf[WithinDist], 5,
+      "within_dist(x, y, cx, cy, r) takes 5 arguments", Nil, longKey = false,
+      (a, _) => {
+        val d = a.map(castTo(DoubleType))
+        WithinDist(d(0), d(1), d(2), d(3), d(4))
+      }),
+    SqlFunction("cosine_sim", classOf[CosineSim], 2,
+      "cosine_sim(a, b) takes 2 arguments", Nil, longKey = false,
+      (a, _) => CosineSim(a(0), a(1))),
+    SqlFunction("mix64", classOf[Mix64], 1,
+      "mix64(x) takes 1 argument", Nil, longKey = false,
+      (a, _) => Mix64(a(0))),
+    SqlFunction("count_min", classOf[CountMinAgg], 3,
+      "count_min(key, depth, width) takes 3 arguments (depth/width literal ints)",
+      Seq("depth", "width"), longKey = true,
+      (a, n) => CountMinAgg(a(0), n(0), n(1))),
+    SqlFunction("hll_sketch", classOf[HllAgg], 2,
+      "hll_sketch(key, p) takes 2 arguments (precision p a literal int)",
+      Seq("precision"), longKey = true,
+      (a, n) => HllAgg(a(0), n(0))),
+    SqlFunction("ams_sketch", classOf[AmsAgg], 3,
+      "ams_sketch(key, depth, width) takes 3 arguments (depth/width literal ints)",
+      Seq("depth", "width"), longKey = true,
+      (a, n) => AmsAgg(a(0), n(0), n(1))),
+    SqlFunction("kmv_sketch", classOf[KmvAgg], 2,
+      "kmv_sketch(key, k) takes 2 arguments (k a literal int)",
+      Seq("k"), longKey = true,
+      (a, n) => KmvAgg(a(0), n(0))),
+    SqlFunction("bloom_agg", classOf[BloomAgg], 3,
+      "bloom_agg(key, bits, depth) takes 3 arguments (bits/depth literal ints)",
+      Seq("bits", "depth"), longKey = true,
+      (a, n) => BloomAgg(a(0), n(0), n(1))))
 
-  val countMinDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("count_min"),
-    new ExpressionInfo(classOf[CountMinAgg].getName, "count_min"),
-    (args: Seq[Expression]) => {
-      require(args.length == 3,
-        "count_min(key, depth, width) takes 3 arguments (depth/width literal ints)")
-      def lit(e: Expression, what: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"count_min $what must be an integer literal, got $other")
-      }
-      val key = args.head.dataType match {
-        case org.apache.spark.sql.types.LongType => args.head
-        case _ => org.apache.spark.sql.catalyst.expressions.Cast(
-          args.head, org.apache.spark.sql.types.LongType)
-      }
-      CountMinAgg(key, lit(args(1), "depth"), lit(args(2), "width"))
-    })
-
-  val hllDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("hll_sketch"),
-    new ExpressionInfo(classOf[HllAgg].getName, "hll_sketch"),
-    (args: Seq[Expression]) => {
-      require(args.length == 2,
-        "hll_sketch(key, p) takes 2 arguments (precision p a literal int)")
-      val p = args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"hll_sketch precision must be an integer literal, got $other")
-      }
-      val key = args.head.dataType match {
-        case org.apache.spark.sql.types.LongType => args.head
-        case _ => org.apache.spark.sql.catalyst.expressions.Cast(
-          args.head, org.apache.spark.sql.types.LongType)
-      }
-      HllAgg(key, p)
-    })
-
-  val amsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("ams_sketch"),
-    new ExpressionInfo(classOf[AmsAgg].getName, "ams_sketch"),
-    (args: Seq[Expression]) => {
-      require(args.length == 3,
-        "ams_sketch(key, depth, width) takes 3 arguments (depth/width literal ints)")
-      def lit(e: Expression, what: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"ams_sketch $what must be an integer literal, got $other")
-      }
-      val key = args.head.dataType match {
-        case org.apache.spark.sql.types.LongType => args.head
-        case _ => org.apache.spark.sql.catalyst.expressions.Cast(
-          args.head, org.apache.spark.sql.types.LongType)
-      }
-      AmsAgg(key, lit(args(1), "depth"), lit(args(2), "width"))
-    })
-
-  val kmvDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("kmv_sketch"),
-    new ExpressionInfo(classOf[KmvAgg].getName, "kmv_sketch"),
-    (args: Seq[Expression]) => {
-      require(args.length == 2,
-        "kmv_sketch(key, k) takes 2 arguments (k a literal int)")
-      val k = args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"kmv_sketch k must be an integer literal, got $other")
-      }
-      val key = args.head.dataType match {
-        case org.apache.spark.sql.types.LongType => args.head
-        case _ => org.apache.spark.sql.catalyst.expressions.Cast(
-          args.head, org.apache.spark.sql.types.LongType)
-      }
-      KmvAgg(key, k)
-    })
-
-  val bloomDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bloom_agg"),
-    new ExpressionInfo(classOf[BloomAgg].getName, "bloom_agg"),
-    (args: Seq[Expression]) => {
-      require(args.length == 3,
-        "bloom_agg(key, bits, depth) takes 3 arguments (bits/depth literal ints)")
-      def lit(e: Expression, what: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"bloom_agg $what must be an integer literal, got $other")
-      }
-      val key = args.head.dataType match {
-        case org.apache.spark.sql.types.LongType => args.head
-        case _ => org.apache.spark.sql.catalyst.expressions.Cast(
-          args.head, org.apache.spark.sql.types.LongType)
-      }
-      BloomAgg(key, lit(args(1), "bits"), lit(args(2), "depth"))
-    })
-
-  /** Register on an already-built session (Verify/Bench sessions are
-    * constructed without extensions). Idempotent. */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "within_dist",
-      args => withinDistDescriptor._3(args),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      args => cosineSimDescriptor._3(args),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mix64",
-      args => mix64Descriptor._3(args),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_min",
-      args => countMinDescriptor._3(args),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_sketch",
-      args => hllDescriptor._3(args),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ams_sketch",
-      args => amsDescriptor._3(args),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_sketch",
-      args => kmvDescriptor._3(args),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg",
-      args => bloomDescriptor._3(args),
-      "built-in")
-    if (!spark.experimental.extraOptimizations.contains(DistancePushdownRule)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ DistancePushdownRule
+  private[graft] def build(f: SqlFunction)(args: Seq[Expression]): Expression = {
+    require(args.length == f.arity, f.usage)
+    val (lead, lits) = args.splitAt(f.arity - f.intParams.size)
+    val ints = f.intParams.zip(lits).map {
+      case (_, Literal(v: Int, _)) => v
+      case (what, other) => throw new IllegalArgumentException(
+        s"${f.name} $what must be an integer literal, got $other")
     }
-    if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GroupTopKStrategy
-    }
+    f.make(if (f.longKey) lead.map(castTo(LongType)) else lead, ints)
   }
 }

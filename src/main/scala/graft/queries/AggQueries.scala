@@ -542,7 +542,6 @@ object AggQueries {
         |FROM ex JOIN est USING (event_type)
         |ORDER BY event_type""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s) // bare Verify/Bench sessions
       Tables.load(s, dir, "events")
         .groupBy("event_type")
         .agg(countDistinct(col("user_id")).as("exact_users"),
@@ -841,7 +840,6 @@ object AggQueries {
         |FROM lineitem
         |CROSS JOIN ${graft.plans.CountMinAgg.hashRowsSql(4)}
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s) // bare Verify/Bench sessions
       Tables.load(s, dir, "lineitem")
         .agg(expr("count_min(l_partkey, 4, 64)").as("cms"))
         .select(posexplode(col("cms")).as(Seq("i", "cnt")))
@@ -908,7 +906,6 @@ object AggQueries {
         |FROM regs JOIN est USING (l_returnflag)
         |JOIN est_low USING (l_returnflag)
         |ORDER BY l_returnflag, reg""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s) // bare Verify/Bench sessions
       Tables.load(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(expr("hll_sketch(l_orderkey, 6)").as("regs"),
@@ -976,7 +973,6 @@ object AggQueries {
         |       ${hllCorrectedSql("est_union", "vu")} AS est_union_corrected,
         |       ${hllBandSql("est_union", "vu")} AS band_union
         |FROM ests ORDER BY flag_a, flag_b""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s) // bare Verify/Bench sessions
       val sk = Tables.load(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(expr("hll_sketch(l_orderkey, 6)").as("regs"))
@@ -1045,7 +1041,6 @@ object AggQueries {
         |SELECT est_join_size, true_join_size,
         |       est_join_size - true_join_size AS err
         |FROM es CROSS JOIN tr""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s) // bare Verify/Bench sessions
       val amsL = Tables.load(s, dir, "lineitem")
         .agg(expr("ams_sketch(l_orderkey, 5, 8192)").as("c1"))
       val amsO = Tables.load(s, dir, "orders")
@@ -1093,7 +1088,6 @@ object AggQueries {
         |       FROM (SELECT count(*) AS n FROM lineitem GROUP BY l_partkey))
         |SELECT est_f2, true_f2, est_f2 - true_f2 AS err
         |FROM es CROSS JOIN tr""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s) // bare Verify/Bench sessions
       val est = Tables.load(s, dir, "lineitem")
         .agg(expr("ams_sketch(l_partkey, 5, 8192)").as("c1"))
         .select(posexplode(expr("transform(c1, x -> x * x)"))
@@ -1132,7 +1126,6 @@ object AggQueries {
         |       n_kept, est, band
         |FROM kept JOIN kstats USING (l_returnflag)
         |ORDER BY l_returnflag, pos""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s) // bare Verify/Bench sessions
       Tables.load(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(expr(s"kmv_sketch(l_orderkey, $KmvK)").as("kept"))
@@ -1195,7 +1188,6 @@ object AggQueries {
         |FROM cnts c JOIN pairs p
         |  ON p.flag_a = c.flag_a AND p.flag_b = c.flag_b
         |ORDER BY c.flag_a, c.flag_b""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s) // bare Verify/Bench sessions
       val sk = Tables.load(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(expr(s"kmv_sketch(l_orderkey, $KmvK)").as("kept"))
@@ -1274,7 +1266,6 @@ object AggQueries {
         |       fp_hits * 10000 // fp_probes AS fpr_bp
         |FROM words CROSS JOIN bset CROSS JOIN stats
         |ORDER BY word_idx""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s) // bare Verify/Bench sessions
       val bf = Tables.load(s, dir, "orders")
         .agg(expr(s"bloom_agg(o_orderkey, $BloomBits, 3)").as("words"))
         .withColumn("bits_set",

@@ -206,7 +206,6 @@ object ScalarFuncQueries {
         |      + (CAST(user_id AS DOUBLE) - 10.0) * (CAST(user_id AS DOUBLE) - 10.0)
         |      <= 900.0
         |ORDER BY event_id""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s)
       Tables.load(s, dir, "events").createOrReplaceTempView("f18_events")
       s.sql("""SELECT event_id FROM f18_events
               |WHERE within_dist(value, CAST(user_id AS DOUBLE), 50.0, 10.0, 30.0)

@@ -38,7 +38,7 @@ object SimilarityQueries {
     * (graft.plans) — identical math to `cosine` (left-to-right double
     * folds, so the result is bitwise equal to the DuckDB oracle) with
     * the loop compiled into whole-stage codegen instead of a UDF
-    * boundary. Callers must `GraftExtensions.install(s)` first. */
+    * boundary. */
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 
   /** DuckDB mirror of the product-quantization ANN (operators.PqAnn):
@@ -471,7 +471,6 @@ object SimilarityQueries {
     // Rank on the rounded score (+ vec_id tie-break) so ordering is robust
     // to sub-round float drift between engines.
     q("v1_cosine_topk", bruteTopkSql) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.load(s, dir, "embeddings")
       val queries = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -508,7 +507,6 @@ object SimilarityQueries {
          |WHERE ${sqlDot("a.embedding", "b.embedding")}
          |      / (${sqlNorm("a.embedding")} * ${sqlNorm("b.embedding")}) >= 0.35
          |ORDER BY vec_a, vec_b""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s)
       val k = 8
       val chunks = array((0 until k).map(lit): _*)
       val e = Tables.load(s, dir, "embeddings")
@@ -599,7 +597,6 @@ object SimilarityQueries {
          |            ORDER BY cos DESC, neighbor_id) AS rnk
          |  FROM rerank)
          |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.load(s, dir, "embeddings")
       // Deterministic iid-Gaussian hyperplanes (fixed seed, one stream
       // indexed h[t][b][i] = g[((t*bits)+b)*dim + i]). NOT a closed-form
@@ -749,7 +746,6 @@ object SimilarityQueries {
          |            ORDER BY cos DESC, neighbor_id) AS rnk
          |  FROM rerank)
          |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.load(s, dir, "embeddings")
       // compiled one-loop-per-row quantize + int cosine (ArrayOps.sq8*):
       // the HOF formulation (aggregate/zip_with lambdas) ran interpreted
@@ -952,7 +948,6 @@ object SimilarityQueries {
          |FROM exact_r e LEFT JOIN approx_r a
          |  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
          |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.load(s, dir, "embeddings")
       val queries = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -1012,7 +1007,6 @@ object SimilarityQueries {
          |  WHERE c.cos <= 0.98 * t1.top1)
          |SELECT query_id, neg_id, cos, rnk
          |FROM hard WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.load(s, dir, "embeddings")
       val idxPath = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_${dir.hashCode.toHexString}"
       graft.operators.IvfPqAnn.ensureIndex(e.select("vec_id", "embedding"), idxPath)
@@ -1058,7 +1052,6 @@ object SimilarityQueries {
          |WHERE ${sqlDot("q.embedding", "c.embedding")}
          |      / (${sqlNorm("q.embedding")} * ${sqlNorm("c.embedding")}) >= 0.3
          |ORDER BY query_id, neighbor_id""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.load(s, dir, "embeddings")
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_${dir.hashCode.toHexString}"
       graft.operators.IvfAnn.ensureIndex(
@@ -1119,7 +1112,6 @@ object SimilarityQueries {
     q("v17_quantizer_drift",
       ivfDriftSql(nCells = 16, iters = graft.operators.IvfAnn.LloydIters,
                   fitWhere = Some("vec_id % 5 <> 0"))) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.load(s, dir, "embeddings")
       // the standing v16 index path: drift is measured against the SAME
       // frozen centroids the update lifecycle serves queries from
@@ -1205,7 +1197,6 @@ object SimilarityQueries {
                pqIters = graft.operators.PqAnn.PqIters,
                k = 5, cand = 200,
                deleteWhere = Some("af0.vec_id % 7 = 3"))) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.load(s, dir, "embeddings")
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpqdel_${dir.hashCode.toHexString}"
       graft.operators.IvfPqAnn.ensureDeletedIndex(
@@ -1248,7 +1239,6 @@ object SimilarityQueries {
          |    ON a.cluster = b.cluster AND a.vec_id < b.vec_id)
          |SELECT vb AS dropped_id, min(va) AS canonical_id, min(cluster) AS cluster
          |FROM pairs WHERE cos >= 0.35 GROUP BY vb ORDER BY dropped_id""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.load(s, dir, "embeddings")
       val cents = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("cluster"), col("embedding").as("ce"))
@@ -1313,7 +1303,6 @@ object SimilarityQueries {
          |  WHERE s.rnk < 8)
          |SELECT CAST(rnk AS BIGINT) AS rnk, vec_id, mmr_score
          |FROM sel ORDER BY rnk""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.load(s, dir, "embeddings")
       val probe = e.filter(col("vec_id") === 0)
         .select(col("embedding").as("qe"))

@@ -1004,7 +1004,6 @@ object TextQueries {
          |       row_number() OVER (PARTITION BY epoch ORDER BY skey, doc_id) AS pos,
          |       doc_id
          |FROM keyed ORDER BY epoch, pos""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.install(s)
       val d = Tables.load(s, dir, "documents").select("doc_id")
       val nDocs = broadcast(d.agg(count(lit(1)).as("n_docs")))
       val keyed = d
@@ -1326,7 +1325,6 @@ object TextQueries {
         |ORDER BY source, rk""".stripMargin
     }) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftExtensions.install(s)
       val d = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("source"),
                 expr("mix64(doc_id)").as("skey"))

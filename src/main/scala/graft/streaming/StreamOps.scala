@@ -22,13 +22,13 @@ object StreamOps {
     "event_type STRING, value DOUBLE, props STRING"
 
   /** File-source stream over parquet event files. The testdata's ts is
-    * TIMESTAMP(NANOS); reading through the nanosAsLong legacy conf and
-    * truncating to micros matches Tables.load / the DuckDB oracle.
+    * TIMESTAMP(NANOS); reading through the nanosAsLong legacy conf (set
+    * by `Graft.configure`) and truncating to micros matches Tables.load /
+    * the DuckDB oracle.
     * `maxFilesPerTrigger` throttles micro-batch size (rate-limited
     * replay; also how specs force multi-batch execution). */
   def eventStream(spark: SparkSession, path: String,
                   maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // readStream needs an explicit schema; probe the files' physical ts type
     // once (batch footer reads) so both generator vintages — TIMESTAMP(NANOS)
     // read as raw longs, and TIMESTAMP(MICROS) read as NTZ — normalize to the

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: R-scaling of the two BPE encode forms over the documents
@@ -38,11 +37,7 @@ object BpeEncodeProbe {
     val rs = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
              else Seq(8, 64, 256, 1024)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(Some(s"local[$cpus]"))
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = graft.Tables.load(spark, sfDir, "documents")

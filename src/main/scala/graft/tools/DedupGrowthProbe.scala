@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the dedup family's growth row (round-11 verdict ask #7 —
@@ -50,11 +49,7 @@ object DedupGrowthProbe {
                 else Seq("d2_jaccard_pairs", "d3_minhash_lsh",
                          "d5_dedup_clusters", "x18_pretrain_pipeline")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(Some(s"local[$cpus]"))
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = graft.Tables.load(spark, sfDir, "documents")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump the physical plans that carry the engine's scale
@@ -23,9 +22,7 @@ object ExplainDump {
     line.replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session(Some("local[4]"))
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     val sb = new StringBuilder
@@ -57,8 +54,7 @@ object ExplainDump {
     dump("f18_within_dist",
       "DistancePushdownRule's bounding box reaches the scan as PushedFilters; " +
       "the exact circle test runs codegen'd over the survivors.",
-      { graft.plans.GraftExtensions.install(spark)
-        graft.Tables.load(spark, dir, "events").createOrReplaceTempView("exp_ev")
+      { graft.Tables.load(spark, dir, "events").createOrReplaceTempView("exp_ev")
         spark.sql("SELECT event_id FROM exp_ev WHERE within_dist(value, CAST(user_id AS DOUBLE), 50.0, 10.0, 30.0)") },
       l => l.contains("PushedFilters") || l.contains("Filter") || l.contains("Scan"))
     dump("d2_jaccard_pairs",

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the index-lifecycle growth row (the DedupGrowthProbe
@@ -35,11 +34,7 @@ object IvfLifecycleProbe {
     val sfDir = args(0)
     val nDeltas = if (args.length > 1) args(1).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(Some(s"local[$cpus]"))
     spark.sparkContext.setLogLevel("WARN")
 
     val e = graft.Tables.load(spark, sfDir, "embeddings")

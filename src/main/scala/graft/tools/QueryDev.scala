@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: explain + time individual registered queries.
   * Usage: runMain graft.tools.QueryDev <sfDir> <query> [query...]
@@ -11,11 +10,7 @@ object QueryDev {
     val sfDir = args(0)
     val names = args.drop(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(Some(s"local[$cpus]"))
     spark.sparkContext.setLogLevel("WARN")
     graft.Tables.names.foreach { n =>
       try graft.Tables.load(spark, sfDir, n).count()

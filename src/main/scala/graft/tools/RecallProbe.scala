@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: ANN recall vs the exact brute-force result at a given data
   * dir — the number SimilaritySpec asserts at sf0.001/0.01/0.1, made
@@ -12,11 +11,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(Some(s"local[$cpus]"))
     spark.sparkContext.setLogLevel("WARN")
     def pairs(name: String): Set[(Long, Long)] =
       graft.SparkEntry.queries(name)(spark, sfDir)

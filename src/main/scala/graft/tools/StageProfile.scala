@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Round-13 measurement tool (guide §1): run ONE registered query under
   * the bench protocol (cache reset, noop sink, terminal sort stripped)
@@ -17,9 +16,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session(Some(s"local[$cpus]"))
     spark.sparkContext.setLogLevel("WARN")
     graft.Tables.names.foreach { n =>
       try graft.Tables.load(spark, sfDir, n).count()

@@ -1,5 +1,9 @@
 package graft
 
+import graft.plans.GraftExtensions
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+
 /** The `Graft` front door: one call yields a session where the custom
   * SQL functions, pushdown rule, planner strategy, and engine confs are
   * all live. */
@@ -9,6 +13,7 @@ class GraftSessionSpec extends SparkSpec {
     val s = Graft.session() // getOrCreate joins the suite's context
     assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4") // local[4]
     // custom functions callable from plain SQL
     val r = s.sql(
       "SELECT within_dist(3.0, 4.0, 0.0, 0.0, 5.0) AS hit, " +
@@ -22,5 +27,68 @@ class GraftSessionSpec extends SparkSpec {
       groupCols = Seq("o_orderpriority"), sortCol = "o_totalprice",
       tieCol = "o_orderkey", k = 2)
     assert(topk.count() > 0)
+  }
+
+  test("an isolated newSession() inherits every extension") {
+    val iso = Graft.session(Some(SparkSpec.Master)).newSession()
+    val calls = Map(
+      "within_dist" -> "within_dist(3.0, 4.0, 0.0, 0.0, 5.0)",
+      "cosine_sim" -> "cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F))",
+      "mix64" -> "mix64(id)",
+      "count_min" -> "count_min(id, 4, 64)",
+      "hll_sketch" -> "hll_sketch(id, 6)",
+      "ams_sketch" -> "ams_sketch(id, 5, 64)",
+      "kmv_sketch" -> "kmv_sketch(id, 64)",
+      "bloom_agg" -> "bloom_agg(id, 16384, 3)")
+    assert(calls.keySet == GraftExtensions.functions.map(_.name).toSet)
+    calls.foreach { case (name, call) =>
+      val row = iso.sql(s"SELECT $call FROM range(10)").head()
+      assert(!row.isNullAt(0), name)
+    }
+
+    val topk = graft.operators.GroupTopK.topKNative(
+      iso.range(100).selectExpr("id % 3 AS g", "id", "CAST(id AS DOUBLE) AS v"),
+      groupCols = Seq("g"), sortCol = "v", tieCol = "id", k = 2)
+    assert(topk.queryExecution.executedPlan.toString.contains("GroupTopKFinal"))
+    assert(topk.count() == 6)
+
+    // f18's circle becomes a bounding box at the scan: cx ± r = 50 ± 30
+    iso.conf.set("spark.sql.maxMetadataStringLength", "2000")
+    val f18 = SparkEntry.queries("f18_within_dist")(iso, sfDir)
+    val scan = f18.queryExecution.sparkPlan.toString.linesIterator
+      .find(_.contains("PushedFilters")).getOrElse("")
+    assert(scan.contains("GreaterThanOrEqual(value,20.0)"), scan)
+    assert(scan.contains("LessThanOrEqual(value,80.0)"), scan)
+  }
+
+  test("Graft.session rejects a session built without the extensions") {
+    val bare = spark.newSession()
+    bare.sessionState.functionRegistry.dropFunction(FunctionIdentifier("within_dist"))
+    val prev = SparkSession.getActiveSession
+    SparkSession.setActiveSession(bare)
+    try {
+      val e = intercept[IllegalStateException](Graft.session())
+      assert(e.getMessage.contains("Graft.configure"), e.getMessage)
+    } finally prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+  }
+
+  test("every SQL function names itself when misused") {
+    def failure(sql: String): String = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    GraftExtensions.functions.foreach { f =>
+      val tooMany = failure(
+        s"SELECT ${f.name}(${Seq.fill(f.arity + 1)("id").mkString(", ")}) FROM range(3)")
+      assert(tooMany.contains(f.usage), s"${f.name}: $tooMany")
+      f.intParams.indices.foreach { i =>
+        val lits = f.intParams.indices.map(j => if (j == i) "id" else "64")
+        val leads = Seq.fill(f.arity - lits.size)("id")
+        val msg = failure(s"SELECT ${f.name}(${(leads ++ lits).mkString(", ")}) FROM range(3)")
+        assert(msg.contains(s"${f.name} ${f.intParams(i)} must be an integer literal"),
+          s"${f.name}: $msg")
+      }
+    }
   }
 }

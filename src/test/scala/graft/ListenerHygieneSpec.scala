@@ -15,22 +15,11 @@ import org.scalatest.funsuite.AnyFunSuite
 class ListenerHygieneSpec extends AnyFunSuite {
 
   test("addSparkListener appears only inside ScopedStageListener") {
-    val roots = Seq("src/test/scala", "src/main/scala")
-      .map(java.nio.file.Paths.get(_))
-    assert(roots.forall(java.nio.file.Files.isDirectory(_)),
-      s"source roots not found from ${System.getProperty("user.dir")} — " +
-        "the forked test JVM must run from the repo root")
-    import scala.jdk.CollectionConverters._
     // the CALL shape, not the bare name (this very test talks about the
     // name in strings); concatenated so this file can never self-match
     val call = ".addSpark" + "Listener("
-    val offenders = roots.flatMap { root =>
-      java.nio.file.Files.walk(root).iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filterNot(_.getFileName.toString == "ScopedStageListener.scala")
-        .filter(p => java.nio.file.Files.readString(p).contains(call))
-        .map(_.toString)
-    }
+    val offenders =
+      SourceTree.offenders(_.contains(call), exempt = Set("ScopedStageListener.scala"))
     assert(offenders.isEmpty,
       s"raw addSparkListener outside ScopedStageListener: $offenders — " +
         "use ScopedStageListener.measure, which owns the cross-suite " +

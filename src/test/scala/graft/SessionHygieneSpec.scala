@@ -1,0 +1,36 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Meta-test: one session factory and one extension path. Every session
+  * is built by `Graft.session`, so the engine that tests and Verify
+  * check is the one Bench measures, and the `GraftExtensions` class
+  * (named by `Graft.configure`) is the only way the engine's functions,
+  * rule and strategy reach a session. The needles are concatenated so
+  * this file never matches itself. */
+class SessionHygieneSpec extends AnyFunSuite {
+
+  private def assertNone(what: String, offenders: Seq[String], why: String): Unit =
+    assert(offenders.isEmpty, s"$what found in $offenders — $why")
+
+  test("sessions are built only in Graft.scala") {
+    val call = "SparkSession." + "builder("
+    assertNone(call, SourceTree.offenders(_.contains(call), Set("Graft.scala")),
+      "build sessions with Graft.session")
+  }
+
+  test("no imperative extension registration") {
+    Seq("GraftExtensions." + "install", "experimental." + "extraOptimizations",
+      "experimental." + "extraStrategies").foreach { needle =>
+      assertNone(needle, SourceTree.offenders(_.contains(needle)),
+        "register through the GraftExtensions class, which Graft.configure names")
+    }
+  }
+
+  test("nanosAsLong is set only in Graft.scala") {
+    val setter = ("""(set|config)\(\s*"[^"]*nanos""" + "AsLong\"").r
+    assertNone("a nanosAsLong setter",
+      SourceTree.offenders(setter.findFirstIn(_).isDefined, Set("Graft.scala")),
+      "Graft.configure sets it on every session")
+  }
+}

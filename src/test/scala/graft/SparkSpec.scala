@@ -5,16 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for specs. One session per suite keeps the
-  * JVM warm; local[4] with 4 shuffle partitions mirrors the driver's
-  * verify configuration at miniature scale. */
+  * JVM warm; local[4] (which pins 4 shuffle partitions) mirrors the
+  * Verify configuration at miniature scale. `Graft.session` builds it,
+  * so specs run against the same engine as Verify and Bench. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session(Some(SparkSpec.Master))
 
   val sfDir = "/root/testdata/sf0.001"
 
@@ -35,14 +30,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   * changes MLlib's per-partition bootstrap streams. Every conf-mutating
   * suite must extend this trait: `newSession()` shares the
   * SparkContext (warm JVM preserved) but owns its SQLConf, so the
-  * builder-level defaults still apply and nothing leaks across suites.
+  * builder-level defaults and the graft extensions still apply and
+  * nothing leaks across suites.
   */
 trait IsolatedSparkSpec extends SparkSpec {
-  override lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-    .newSession()
+  override lazy val spark: SparkSession =
+    Graft.session(Some(SparkSpec.Master)).newSession()
+}
+
+object SparkSpec {
+  /** The specs' and the goldens' master: seeded ML training is
+    * deterministic only per partitioning. */
+  val Master = "local[4]"
 }

@@ -74,16 +74,10 @@ object Golden {
     (header +: rows).mkString("", "\n", "\n")
   }
 
-  /** Writes the goldens into the source tree for committing. The session
-    * config MUST mirror SparkSpec (local[4], shuffle=4, UTC): seeded ML
-    * training is deterministic only per partitioning. */
+  /** Writes the goldens into the source tree for committing, from the
+    * same session SparkSpec builds. */
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("golden-gen")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.Graft.session(Some(graft.SparkSpec.Master))
     try {
       val outDir = java.nio.file.Paths.get("src/test/resources/goldens")
       java.nio.file.Files.createDirectories(outDir)

@@ -11,10 +11,8 @@ class AmsSpec extends SparkSpec {
   private val Depth = 5
   private val Width = 8192
 
-  private lazy val li = {
-    GraftExtensions.install(spark)
+  private lazy val li =
     graft.Tables.load(spark, sfDir, "lineitem").select("l_orderkey").cache()
-  }
   private lazy val ord =
     graft.Tables.load(spark, sfDir, "orders").select("o_orderkey").cache()
 

@@ -12,10 +12,8 @@ class BloomSpec extends SparkSpec {
   private val Bits = 1 << 14
   private val D = 3
 
-  private lazy val li = {
-    GraftExtensions.install(spark)
+  private lazy val li =
     graft.Tables.load(spark, sfDir, "orders").select("o_orderkey").cache()
-  }
 
   private lazy val words: Seq[Long] =
     li.agg(expr(s"bloom_agg(o_orderkey, $Bits, $D)")).head().getSeq[Long](0)

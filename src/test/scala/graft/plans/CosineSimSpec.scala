@@ -6,10 +6,8 @@ import org.apache.spark.sql.functions._
 
 class CosineSimSpec extends IsolatedSparkSpec {
 
-  private lazy val emb = {
-    GraftExtensions.install(spark)
+  private lazy val emb =
     Tables.load(spark, sfDir, "embeddings").limit(50).cache()
-  }
 
   test("cosine_sim matches the HOF fold bitwise (same fold order)") {
     val pairs = emb.select(col("vec_id"), col("embedding").as("a"))

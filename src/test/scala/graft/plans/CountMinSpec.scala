@@ -11,10 +11,8 @@ class CountMinSpec extends SparkSpec {
   private val Depth = 4
   private val Width = 64
 
-  private lazy val li = {
-    GraftExtensions.install(spark)
+  private lazy val li =
     graft.Tables.load(spark, sfDir, "lineitem").select("l_partkey").cache()
-  }
 
   private lazy val sketch: Array[Long] =
     li.agg(expr(s"count_min(l_partkey, $Depth, $Width)"))

@@ -12,10 +12,8 @@ class HllSpec extends SparkSpec {
   private val P = 6
   private val M = 1 << P
 
-  private lazy val li = {
-    GraftExtensions.install(spark)
+  private lazy val li =
     graft.Tables.load(spark, sfDir, "lineitem").select("l_orderkey").cache()
-  }
 
   private lazy val regs: Array[Long] =
     li.agg(expr(s"hll_sketch(l_orderkey, $P)")).head().getSeq[Long](0).toArray

@@ -11,10 +11,8 @@ class KmvSpec extends SparkSpec {
 
   private val K = 64
 
-  private lazy val li = {
-    GraftExtensions.install(spark)
+  private lazy val li =
     graft.Tables.load(spark, sfDir, "lineitem").select("l_orderkey").cache()
-  }
 
   private lazy val kept: Seq[Long] =
     li.agg(expr(s"kmv_sketch(l_orderkey, $K)")).head().getSeq[Long](0)

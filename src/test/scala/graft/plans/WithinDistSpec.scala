@@ -5,11 +5,6 @@ import org.apache.spark.sql.functions._
 
 class WithinDistSpec extends IsolatedSparkSpec {
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    GraftExtensions.install(spark)
-  }
-
   test("within_dist matches the sqrt formula on the events table") {
     Tables.load(spark, sfDir, "events").createOrReplaceTempView("ev")
     val mismatches = spark.sql(

@@ -57,7 +57,6 @@ class EpochShuffleSpec extends SparkSpec {
   test("the permutation is invariant to input partitioning") {
     val a = run().collect().map(_.toString).toSeq
     // same query over a repartitioned source view must give byte-equal order
-    graft.plans.GraftExtensions.install(spark)
     val d = Tables.load(spark, sfDir, "documents").select("doc_id")
       .repartition(13)
     val nDocs = broadcast(d.agg(count(lit(1)).as("n_docs")))

@@ -509,7 +509,6 @@ class StreamOpsSpec extends SparkSpec {
     // partials — a broken serialize/deserialize or a non-commutative
     // merge shows up here as a drifted register file, not a crash
     import org.apache.spark.sql.functions._
-    graft.plans.GraftExtensions.install(spark)
     val ev = Tables.load(spark, sfDir, "events")
     val dir = java.nio.file.Files.createTempDirectory("graft_sketch_recov")
     stageSlice(ev.filter(dayofmonth(col("ts")) <= 15), dir, "h1", 1000000L)
@@ -714,7 +713,6 @@ class StreamOpsSpec extends SparkSpec {
     // batch buffer — not approximately, not modulo ordering: the same
     // 256 longs. The standing-sketch ingest monitor shape: heavy-user
     // tracking with one 2 KiB state whatever the user cardinality.
-    graft.plans.GraftExtensions.install(spark)
     import org.apache.spark.sql.functions.expr
     val batch = Tables.load(spark, sfDir, "events")
       .agg(expr("count_min(user_id, 4, 64)").as("cms"))
@@ -735,7 +733,6 @@ class StreamOpsSpec extends SparkSpec {
     // inflate the registers the way re-added CMS counts would) — the
     // standing distinct-visitor monitor shape: one 64-byte state
     // whatever the user cardinality.
-    graft.plans.GraftExtensions.install(spark)
     import org.apache.spark.sql.functions.expr
     val batch = Tables.load(spark, sfDir, "events")
       .agg(expr("hll_sketch(user_id, 6)").as("regs"))
@@ -754,7 +751,6 @@ class StreamOpsSpec extends SparkSpec {
     // ams_sketch): signed-sum merge is order-independent, so the
     // drained complete-mode stream ends in exactly the batch buffer —
     // the standing join-size/self-join-moment monitor shape.
-    graft.plans.GraftExtensions.install(spark)
     import org.apache.spark.sql.functions.expr
     val batch = Tables.load(spark, sfDir, "events")
       .agg(expr("ams_sketch(user_id, 5, 64)").as("ams"))
@@ -773,7 +769,6 @@ class StreamOpsSpec extends SparkSpec {
     // idempotent, so the drained complete-mode stream holds exactly
     // the batch words — the standing membership gate shape (e.g. a
     // live "seen this key?" prune on an ingest stream).
-    graft.plans.GraftExtensions.install(spark)
     import org.apache.spark.sql.functions.expr
     val batch = Tables.load(spark, sfDir, "events")
       .agg(expr("bloom_agg(user_id, 16384, 3)").as("words"))
@@ -795,7 +790,6 @@ class StreamOpsSpec extends SparkSpec {
     // standing overlap/Jaccard monitor shape: two live KMV states
     // answer "how much do these streams' key sets overlap" at any
     // moment via a34's algebra, no rescan.
-    graft.plans.GraftExtensions.install(spark)
     import org.apache.spark.sql.functions.expr
     val batch = Tables.load(spark, sfDir, "events")
       .agg(expr("kmv_sketch(user_id, 64)").as("kept"))
