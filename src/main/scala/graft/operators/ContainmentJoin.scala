@@ -72,9 +72,13 @@ object ContainmentJoin {
     // strings — cheaper aggregate hashing, 8-byte exchange keys (guide
     // §2.3). Lossless: the prefix theorem and the JOSIE length/position
     // bounds hold for ANY shared total order ((df, hash) is one), a
-    // collision only MERGES shingle identities — extra candidates the
-    // exact string-array verify in selfJoin/probeJoin drops — and the
-    // brute-force oracle never sees the candidate set.
+    // collision only MERGES shingle identities, so it can add candidates
+    // but never lose one. The verify in selfJoin/probeJoin is hash-exact,
+    // not string-exact: it intersects the same xxhash64 sets, so when a
+    // shingle of a and a DIFFERENT shingle of b (one a lacks) share a
+    // hash, |∩| over-counts by one and a pair just under the threshold
+    // can pass (odds ≈ na·nb / 2⁶⁴ per pair). The brute-force oracle
+    // compares strings and never sees the candidate set.
     val exploded = base.select(col("sid"), col("n"), explode(col("sh")).as("gs"))
       .select(col("sid"), col("n"), xxhash64(col("gs")).as("g"))
     // global shingle document-frequency → rarest-first canonical order;

@@ -76,7 +76,7 @@ object NearDupPairs {
   /** Document frequency per shingle hash (one agg over the exploded
     * sets), then each doc re-assembles its hashes sorted by (df, h) —
     * a global total order, so positions are comparable across docs.
-    * package-visible for tools.DedupGrowthProbe's bucket-pair-volume
+    * package-visible for AdversarialDedupSpec's bucket-pair-volume
     * counterfactual (df order vs hashed order). */
   private[graft] def shFrame(shingled: DataFrame): DataFrame = {
     val ex = shingled
@@ -134,12 +134,12 @@ object NearDupPairs {
       .filter(col("jraw") >= 0.7)
       .select(col("doc_a"), col("doc_b"), col("jraw"))
 
-  /** Dev/measurement hook (tools.DedupGrowthProbe): candidate and true
-    * pair counts for a shingled frame, through the exact plan `over`
-    * runs — the candidates/true-pairs ratio per growth decade is the
+  /** Candidate and true pair counts for a shingled frame, through the
+    * exact plan `over` runs — the candidates/true-pairs ratio is the
     * number the prefix ordering's "linear-ish at 10⁹ docs" claim rests
-    * on. Not memoized; bypasses `over`'s cache. */
-  def stats(shingled: DataFrame): (Long, Long) = {
+    * on (AdversarialDedupSpec asserts it; SCALING.md records the
+    * decades). Not memoized; bypasses `over`'s cache. */
+  private[graft] def stats(shingled: DataFrame): (Long, Long) = {
     val sh = shFrame(shingled).cache()
     val cand = candidatesOf(sh).cache()
     val nCand = cand.count()

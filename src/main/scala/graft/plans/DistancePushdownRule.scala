@@ -105,26 +105,26 @@ object GraftExtensions {
     SqlFunction("mix64", classOf[Mix64], 1,
       "mix64(x) takes 1 argument", Nil, longKey = false,
       (a, _) => Mix64(a(0))),
-    SqlFunction("count_min", classOf[CountMinAgg], 3,
+    SqlFunction("count_min", classOf[SketchAgg], 3,
       "count_min(key, depth, width) takes 3 arguments (depth/width literal ints)",
       Seq("depth", "width"), longKey = true,
-      (a, n) => CountMinAgg(a(0), n(0), n(1))),
+      (a, n) => SketchAgg(a(0), Sketch.CountMin(n(0), n(1)))),
     SqlFunction("hll_sketch", classOf[HllAgg], 2,
       "hll_sketch(key, p) takes 2 arguments (precision p a literal int)",
       Seq("precision"), longKey = true,
       (a, n) => HllAgg(a(0), n(0))),
-    SqlFunction("ams_sketch", classOf[AmsAgg], 3,
+    SqlFunction("ams_sketch", classOf[SketchAgg], 3,
       "ams_sketch(key, depth, width) takes 3 arguments (depth/width literal ints)",
       Seq("depth", "width"), longKey = true,
-      (a, n) => AmsAgg(a(0), n(0), n(1))),
+      (a, n) => SketchAgg(a(0), Sketch.Ams(n(0), n(1)))),
     SqlFunction("kmv_sketch", classOf[KmvAgg], 2,
       "kmv_sketch(key, k) takes 2 arguments (k a literal int)",
       Seq("k"), longKey = true,
       (a, n) => KmvAgg(a(0), n(0))),
-    SqlFunction("bloom_agg", classOf[BloomAgg], 3,
+    SqlFunction("bloom_agg", classOf[SketchAgg], 3,
       "bloom_agg(key, bits, depth) takes 3 arguments (bits/depth literal ints)",
       Seq("bits", "depth"), longKey = true,
-      (a, n) => BloomAgg(a(0), n(0), n(1))))
+      (a, n) => SketchAgg(a(0), Sketch.Bloom(n(0), n(1)))))
 
   private[graft] def build(f: SqlFunction)(args: Seq[Expression]): Expression = {
     require(args.length == f.arity, f.usage)

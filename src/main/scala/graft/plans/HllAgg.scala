@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * claim, like the Count-Min twin).
   *
   * Portability is the design constraint (the engine's exact-oracle
-  * discipline, same as [[CountMinAgg]]): mix64 replays in DuckDB via
+  * discipline, same as [[SketchAgg]]): mix64 replays in DuckDB via
   * `OracleU64.mix64Ctes`, the rank is `64-p - bitlength(w) + 1`
   * (`length(bin(w))` in SQL), and the harmonic-mean estimate is exact
   * integer arithmetic — `floor(alpha_num·2^(2p+(64-p)+1) / (alpha_den·S))`

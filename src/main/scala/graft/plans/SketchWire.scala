@@ -2,10 +2,10 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-/** Versioned wire format for the `Array[Long]` sketch aggregation
-  * buffers (Count-Min / AMS / Bloom).
+/** Versioned wire format for the `Array[Long]` buffers of [[SketchAgg]]
+  * (Count-Min / AMS / Bloom).
   *
-  * Why a version byte (round-9 ADVICE on CountMinAgg.cell): these
+  * Why a version byte: these
   * buffers outlive the process — Structured Streaming's aggregation
   * operator persists the serialized `TypedImperativeAggregate` buffer
   * in the state store, and the sketch twins' restart-recovery test

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.QueryDef.q
+import graft.plans.SketchHash
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -174,13 +175,12 @@ object AggQueries {
   private val BloomBits = 131072
 
   /** Membership of SQL column `k` in a35's broadcast `words` bitmap —
-    * the same affine positions as BloomAgg.update, as pure column
+    * the same affine positions as `bloom_agg`, as pure column
     * arithmetic (codegen'd; no UDF on the probe path). */
   private def bloomMemberSql(k: String): String =
     (0 until 3).map { d =>
-      val a = graft.plans.CountMinAgg.HashA(d)
-      val b = graft.plans.CountMinAgg.HashB(d)
-      val pos = s"(((($k % 2147483647) * $a + $b) % 2147483647) % $BloomBits)"
+      import SketchHash.{A, B, P}
+      val pos = s"(((($k % $P) * ${A(d)} + ${B(d)}) % $P) % $BloomBits)"
       s"((shiftright(element_at(words, CAST($pos div 64 AS INT) + 1), " +
       s"CAST($pos % 64 AS INT)) & 1) = 1)"
     }.mkString(" AND ")
@@ -823,7 +823,7 @@ object AggQueries {
     // A28 — Count-Min sketch of the l_partkey frequency distribution
     // (round 8): x21_heavy_hitters' bounded-memory scale twin, built by
     // the custom `count_min` TypedImperativeAggregate
-    // (plans/CountMinAgg.scala — extension tier (b): a custom Catalyst
+    // (plans/SketchAgg.scala — extension tier (b): a custom Catalyst
     // aggregate, injected via GraftExtensions). The aggregation state
     // is ONE 4x64 Long array whatever the key cardinality: partials
     // combine map-side and the exchange moves one 2 KiB buffer per
@@ -838,7 +838,7 @@ object AggQueries {
       s"""SELECT d, (((l_partkey % 2147483647) * a + b) % 2147483647) % 64 AS w,
         |       CAST(count(*) AS BIGINT) AS cnt
         |FROM lineitem
-        |CROSS JOIN ${graft.plans.CountMinAgg.hashRowsSql(4)}
+        |CROSS JOIN ${SketchHash.affineRowsSql(4)}
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       Tables.load(s, dir, "lineitem")
         .agg(expr("count_min(l_partkey, 4, 64)").as("cms"))
@@ -1001,7 +1001,7 @@ object AggQueries {
     },
 
     // A31 — join-SIZE estimation from AMS/AGMS signed sketches
-    // (plans/AmsAgg.scala, the third sketch in the family): the
+    // (plans/SketchAgg.scala, the third sketch in the family): the
     // query-planning primitive that prices |lineitem ⋈ orders| from
     // two 320 KiB register files WITHOUT touching either table again —
     // at 100 TB the sketches ride the same scan as any per-partition
@@ -1021,14 +1021,14 @@ object AggQueries {
         |         sum((((s3 * (l_orderkey % 2147483647) + s2) % 2147483647
         |              * (l_orderkey % 2147483647) + s1) % 2147483647
         |              * (l_orderkey % 2147483647) + s0) % 2147483647 % 2 * 2 - 1) AS n
-        |  FROM lineitem CROSS JOIN ${graft.plans.AmsAgg.hashRowsSql(5)}
+        |  FROM lineitem CROSS JOIN ${SketchHash.signedRowsSql(5)}
         |  GROUP BY 1, 2),
         |c2 AS (
         |  SELECT d, (((o_orderkey % 2147483647) * a + b) % 2147483647) % 8192 AS w,
         |         sum((((s3 * (o_orderkey % 2147483647) + s2) % 2147483647
         |              * (o_orderkey % 2147483647) + s1) % 2147483647
         |              * (o_orderkey % 2147483647) + s0) % 2147483647 % 2 * 2 - 1) AS n
-        |  FROM orders CROSS JOIN ${graft.plans.AmsAgg.hashRowsSql(5)}
+        |  FROM orders CROSS JOIN ${SketchHash.signedRowsSql(5)}
         |  GROUP BY 1, 2),
         |dots AS (
         |  SELECT c1.d, CAST(sum(c1.n * c2.n) AS BIGINT) AS dot
@@ -1078,7 +1078,7 @@ object AggQueries {
         |         sum((((s3 * (l_partkey % 2147483647) + s2) % 2147483647
         |              * (l_partkey % 2147483647) + s1) % 2147483647
         |              * (l_partkey % 2147483647) + s0) % 2147483647 % 2 * 2 - 1) AS n
-        |  FROM lineitem CROSS JOIN ${graft.plans.AmsAgg.hashRowsSql(5)}
+        |  FROM lineitem CROSS JOIN ${SketchHash.signedRowsSql(5)}
         |  GROUP BY 1, 2),
         |dots AS (
         |  SELECT d, CAST(sum(n * n) AS BIGINT) AS dot
@@ -1206,12 +1206,12 @@ object AggQueries {
         .orderBy("flag_a", "flag_b")
     },
 
-    // A35 — Bloom filter as a mergeable aggregate (plans/BloomAgg
+    // A35 — Bloom filter as a mergeable aggregate (plans/SketchAgg
     // .scala, the fifth sketch): the membership structure behind every
     // "does this key exist on the other side" prune — j16's semi-join
     // bloom, d10's containment bloom — as first-class oracle-checked
-    // state. Bit positions are CountMinAgg.cell's affine maps (shared
-    // code), so DuckDB regenerates the ENTIRE 16 KiB bitmap; merge is
+    // state. Bit positions are Count-Min's affine maps (SketchHash.cell,
+    // shared code), so DuckDB regenerates the ENTIRE 16 KiB bitmap; merge is
     // element-wise OR (idempotent — re-delivery safe). The output is
     // the engineering contract made measurable, per row of the word
     // table: (a) the no-false-negative invariant as data —
@@ -1223,7 +1223,7 @@ object AggQueries {
     // losing a member) — the sizing lesson (bits ~ 1.44 d n) as
     // hash-checked output instead of a doc footnote.
     q("a35_bloom_filter",
-      s"""WITH h AS (SELECT * FROM ${graft.plans.CountMinAgg.hashRowsSql(3)}),
+      s"""WITH h AS (SELECT * FROM ${SketchHash.affineRowsSql(3)}),
         |pos AS (
         |  SELECT DISTINCT (((o_orderkey % 2147483647) * a + b) % 2147483647)
         |                  % $BloomBits AS p

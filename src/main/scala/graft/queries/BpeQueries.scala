@@ -271,8 +271,8 @@ object BpeQueries {
     // scale twin: ONE UDF node looping lowest-rank-first over a
     // broadcast rank map, proven equal to this chain by
     // PropertySuites.BpeEncodeProps (random trained tables) and pinned
-    // to this query's output in BpeTrainSpec; R-scaling measured in
-    // SCALING.md (tools.BpeEncodeProbe).
+    // to this query's output in BpeTrainSpec; R-scaling is recorded in
+    // SCALING.md.
     q("x38_bpe_encode", encodeOracle) { (s, dir) =>
       val merges = standingMerges(s, dir)
       val enc0 = Tables.load(s, dir, "documents")

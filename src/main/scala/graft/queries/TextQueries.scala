@@ -614,7 +614,7 @@ object TextQueries {
     // 1-row total broadcast back; the sketch path (count-min, never
     // underestimates — SketchSpec bounds Spark's built-in, and
     // `a28_countmin` is the engine's own ORACLE-CHECKED CMS aggregate,
-    // plans/CountMinAgg.scala) replaces the exact count when the
+    // plans/SketchAgg.scala) replaces the exact count when the
     // vocabulary itself no longer fits a shuffle.
     q("x21_heavy_hitters",
       """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS token

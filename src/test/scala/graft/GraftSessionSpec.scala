@@ -90,5 +90,19 @@ class GraftSessionSpec extends SparkSpec {
           s"${f.name}: $msg")
       }
     }
+    // out-of-range literals: each sketch names the parameter and its range
+    Seq(
+      "count_min(id, 0, 64)" -> "count_min depth must be in [1, 4]",
+      "count_min(id, 5, 64)" -> "count_min depth must be in [1, 4]",
+      "count_min(id, 4, 1)" -> "count_min width must be in [2, 2^20]",
+      "ams_sketch(id, 6, 64)" -> "ams_sketch depth must be in [1, 5]",
+      "bloom_agg(id, 100, 3)" -> "bloom_agg bits must be a multiple of 64 in [64, 2^26]",
+      "bloom_agg(id, 16384, 5)" -> "bloom_agg depth must be in [1, 4]",
+      "hll_sketch(id, 3)" -> "hll_sketch precision must be in [4, 16]",
+      "kmv_sketch(id, 1)" -> "kmv_sketch k must be in [2, 65536]"
+    ).foreach { case (call, want) =>
+      val msg = failure(s"SELECT $call FROM range(3)")
+      assert(msg.contains(want), s"$call: $msg")
+    }
   }
 }

@@ -124,7 +124,7 @@ object KmvProps extends Properties("KmvAgg") {
 }
 
 object BloomProps extends Properties("BloomAgg") {
-  import graft.plans.BloomAgg
+  import graft.plans.Sketch.Bloom
 
   private val Bits = 1 << 10
   private val D = 3
@@ -134,26 +134,26 @@ object BloomProps extends Properties("BloomAgg") {
     forAll(keys, Gen.choose(0, 1000)) { (xs, cut) =>
       val k = if (xs.isEmpty) 0 else cut % (xs.length + 1)
       val (a, b) = xs.splitAt(k)
-      BloomAgg.bitmapOf(a, Bits, D).zip(BloomAgg.bitmapOf(b, Bits, D))
+      Bloom.bitmapOf(a, Bits, D).zip(Bloom.bitmapOf(b, Bits, D))
         .map { case (x, y) => x | y }.toSeq ==
-        BloomAgg.bitmapOf(xs, Bits, D).toSeq
+        Bloom.bitmapOf(xs, Bits, D).toSeq
     }
 
   property("idempotent under re-delivery (xs ++ xs == xs)") =
     forAll(keys)(xs =>
-      BloomAgg.bitmapOf(xs ++ xs, Bits, D).toSeq ==
-        BloomAgg.bitmapOf(xs, Bits, D).toSeq)
+      Bloom.bitmapOf(xs ++ xs, Bits, D).toSeq ==
+        Bloom.bitmapOf(xs, Bits, D).toSeq)
 
   property("no false negatives: every inserted key tests positive") =
     forAll(keys) { xs =>
-      val w = BloomAgg.bitmapOf(xs, Bits, D)
-      xs.forall(BloomAgg.contains(w, _, Bits, D))
+      val w = Bloom.bitmapOf(xs, Bits, D)
+      xs.forall(Bloom.contains(w, _, Bits, D))
     }
 
   property("membership is monotone: a superset bitmap keeps all members") =
     forAll(keys, keys) { (xs, ys) =>
-      val w = BloomAgg.bitmapOf(xs ++ ys, Bits, D)
-      xs.forall(BloomAgg.contains(w, _, Bits, D))
+      val w = Bloom.bitmapOf(xs ++ ys, Bits, D)
+      xs.forall(Bloom.contains(w, _, Bits, D))
     }
 }
 

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** THE sanctioned way for a spec to collect per-task metrics (round-12
@@ -31,12 +33,17 @@ import org.apache.spark.sql.SparkSession
   *     keep a median-floor second layer at the assertion site (ghost
   *     stages reproduce the round-10 signature: a real-looking max over
   *     a median of 0) — see SkewStressSpec.
-  *  3. the listener bus is async: after the body returns, the result is
-  *     polled until no new task rows arrive for 3 consecutive 200 ms
-  *     windows, then the listener is REMOVED (a leaked listener keeps
-  *     observing every later suite).
+  *  3. the listener bus is async: after the body returns, the bus is
+  *     drained (every event posted so far delivered, bounded by
+  *     [[DrainTimeoutMs]]), then the listener is REMOVED (a leaked
+  *     listener keeps observing every later suite). A poll for "no new
+  *     rows for a while" can call the bus idle during a GC pause and
+  *     under-count.
   */
 object ScopedStageListener {
+
+  /** Longest wait for the listener bus to drain before failing. */
+  val DrainTimeoutMs: Long = 60000L
 
   /** One task's metrics: write records matter independently of read — an
     * output-expansion hot task (a dominant bucket emitting its quadratic
@@ -74,17 +81,28 @@ object ScopedStageListener {
     sc.addSparkListener(listener)
     try {
       body
-      var last = -1
-      var stable = 0
-      while (stable < 3) { // 3×200 ms with no new events = bus drained
-        Thread.sleep(200)
-        val now = rows.synchronized(rows.size)
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
+      GraftListenerBridge.drain(sc, DrainTimeoutMs)
     } finally {
       sc.removeSparkListener(listener)
       sc.clearJobGroup()
     }
     rows.synchronized(rows.toSeq)
+  }
+
+  /** Run `body` with `onStage` observing every completed stage, then drain
+    * the bus and deregister. No job-group attribution: for the single-JVM
+    * tools in `graft.tools`, which own the whole SparkContext. */
+  def observe[T](spark: SparkSession)(onStage: SparkListenerStageCompleted => Unit)
+                (body: => T): T = {
+    val sc = spark.sparkContext
+    val l = new SparkListener {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = onStage(s)
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      GraftListenerBridge.drain(sc, DrainTimeoutMs)
+      r
+    } finally sc.removeSparkListener(l)
   }
 }

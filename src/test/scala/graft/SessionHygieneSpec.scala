@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * is built by `Graft.session`, so the engine that tests and Verify
   * check is the one Bench measures, and the `GraftExtensions` class
   * (named by `Graft.configure`) is the only way the engine's functions,
-  * rule and strategy reach a session. The needles are concatenated so
-  * this file never matches itself. */
+  * rule and strategy reach a session. The production tree ships no dev
+  * tools: its only mains are Bench and Verify. The needles are
+  * concatenated so this file never matches itself. */
 class SessionHygieneSpec extends AnyFunSuite {
 
   private def assertNone(what: String, offenders: Seq[String], why: String): Unit =
@@ -32,5 +33,20 @@ class SessionHygieneSpec extends AnyFunSuite {
     assertNone("a nanosAsLong setter",
       SourceTree.offenders(setter.findFirstIn(_).isDefined, Set("Graft.scala")),
       "Graft.configure sets it on every session")
+  }
+
+  private def mainOffenders(found: String => Boolean, exempt: Set[String] = Set.empty) =
+    SourceTree.offenders(found, exempt).filter(_.startsWith("src/main"))
+
+  test("src/main has no mains but Bench and Verify") {
+    val needle = "def " + "main("
+    assertNone(needle, mainOffenders(_.contains(needle), Set("Bench.scala", "Verify.scala")),
+      "dev tools live in src/test/scala/graft/tools (sbt Test/runMain)")
+  }
+
+  test("src/main never reaches the private[spark] listener bus") {
+    val needle = "listener" + "Bus"
+    assertNone(needle, mainOffenders(_.contains(needle)),
+      "listener-bus drains belong to the test-tree ScopedStageListener")
   }
 }

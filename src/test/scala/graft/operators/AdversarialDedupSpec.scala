@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * re-ordered next round without a test going red. The full-scale
   * numbers (×1/×10/×30 decades, wall clocks, the 1.144 B bucket-pair
   * counterfactual at 30 copies) live in SCALING.md's adversarial-decade
-  * tables, measured by `tools/DedupGrowthProbe` over
-  * `tools/make_adversarial.py` fixtures — this spec holds the LINE, the
-  * probe measures the SLOPE.
+  * tables, measured over `tools/make_adversarial.py` fixtures — this spec
+  * holds the LINE at CI size through the same `NearDupPairs.stats` and
+  * `shFrame` hooks.
   *
   * Fixture (the make_adversarial.py recipes, in memory, ~2k docs):
   *  - corpus-wide boilerplate: a universal 3-token phrase on 30% of
@@ -58,8 +58,8 @@ class AdversarialDedupSpec extends SparkSpec {
         graft.functions.TextFunctions.shingles(col("text"), 3).as("s"))
   }
 
-  /** Σ_h C(n_h, 2) over prefix buckets — DedupGrowthProbe's
-    * bucket-pair-volume counterfactual at CI size (computed by
+  /** Σ_h C(n_h, 2) over prefix buckets — the bucket-pair-volume
+    * counterfactual at CI size (computed by
     * aggregation; the hashed-order join itself would BE the blowup). */
   private def bucketPairVolume(sh: DataFrame): Long =
     sh.select(col("doc_id"),

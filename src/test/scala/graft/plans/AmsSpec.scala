@@ -50,16 +50,17 @@ class AmsSpec extends SparkSpec {
     val s1 = sketch(li, "l_orderkey")
     val keys = li.collect().map(_.getLong(0))
     (0 until Depth).foreach { d =>
-      val want = keys.map(k => AmsAgg.sign(k, d)).sum
+      val want = keys.map(k => SketchHash.sign(k, d)).sum
       val got = (0 until Width).map(w => s1(d * Width + w)).sum
       assert(got == want, s"row $d signed mass $got != $want")
     }
   }
 
   test("serde roundtrip preserves the buffer bit-for-bit") {
-    val agg = AmsAgg(org.apache.spark.sql.catalyst.expressions.Literal(1L),
-      Depth, Width)
+    val agg = SketchAgg(org.apache.spark.sql.catalyst.expressions.Literal(1L),
+      Sketch.Ams(Depth, Width))
     val buf = sketch(li, "l_orderkey")
     assert(agg.deserialize(agg.serialize(buf)).toSeq == buf.toSeq)
+    assert(agg.serialize(SketchWireBytes.Buffer).toSeq == SketchWireBytes.Expected)
   }
 }

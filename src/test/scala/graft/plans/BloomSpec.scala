@@ -21,18 +21,18 @@ class BloomSpec extends SparkSpec {
   private lazy val keys: Array[Long] = li.distinct().collect().map(_.getLong(0))
 
   test("bitmap matches a driver-side recompute of the same hash math") {
-    assert(words == BloomAgg.bitmapOf(keys, Bits, D).toSeq, "bitmap diverged")
+    assert(words == Sketch.Bloom.bitmapOf(keys, Bits, D).toSeq, "bitmap diverged")
   }
 
   test("no false negatives: every build key tests positive") {
     val w = words.toArray
-    assert(keys.forall(BloomAgg.contains(w, _, Bits, D)))
+    assert(keys.forall(Sketch.Bloom.contains(w, _, Bits, D)))
   }
 
   test("false-positive rate of disjoint keys tracks the fill ratio") {
     val w = words.toArray
     val nonMembers = keys.map(_ + 1000000000L)
-    val fp = nonMembers.count(BloomAgg.contains(w, _, Bits, D)).toDouble
+    val fp = nonMembers.count(Sketch.Bloom.contains(w, _, Bits, D)).toDouble
     val fill = w.map(java.lang.Long.bitCount).sum.toDouble / Bits
     val predicted = math.pow(fill, D)
     val measured = fp / nonMembers.length
@@ -58,8 +58,10 @@ class BloomSpec extends SparkSpec {
   }
 
   test("serde roundtrip preserves the buffer bit-for-bit") {
-    val agg = BloomAgg(org.apache.spark.sql.catalyst.expressions.Literal(1L), Bits, D)
+    val agg = SketchAgg(org.apache.spark.sql.catalyst.expressions.Literal(1L),
+      Sketch.Bloom(Bits, D))
     val buf = words.toArray
     assert(agg.deserialize(agg.serialize(buf)).toSeq == buf.toSeq)
+    assert(agg.serialize(SketchWireBytes.Buffer).toSeq == SketchWireBytes.Expected)
   }
 }

@@ -19,7 +19,7 @@ class CountMinSpec extends SparkSpec {
       .head().getSeq[Long](0).toArray
 
   private def estimate(k: Long): Long =
-    (0 until Depth).map(d => sketch(d * Width + CountMinAgg.cell(k, d, Width))).min
+    (0 until Depth).map(d => sketch(d * Width + SketchHash.cell(k, d, Width))).min
 
   test("point estimates dominate the true counts (CMS one-sided guarantee)") {
     val exact = li.groupBy("l_partkey").count()
@@ -58,9 +58,10 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("serde roundtrip preserves the buffer bit-for-bit") {
-    val agg = CountMinAgg(org.apache.spark.sql.catalyst.expressions.Literal(1L),
-      Depth, Width)
+    val agg = SketchAgg(org.apache.spark.sql.catalyst.expressions.Literal(1L),
+      Sketch.CountMin(Depth, Width))
     val buf = sketch.clone()
     assert(agg.deserialize(agg.serialize(buf)).toSeq == buf.toSeq)
+    assert(agg.serialize(SketchWireBytes.Buffer).toSeq == SketchWireBytes.Expected)
   }
 }

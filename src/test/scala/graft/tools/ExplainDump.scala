@@ -2,8 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-/** Dev tool: dump the physical plans that carry the engine's scale
-  * story into EXPLAIN.md (run after plan-affecting changes).
+/** Dump the physical plans that carry the engine's scale story into
+  * EXPLAIN.md (run after plan-affecting changes, from the repo root:
+  * `sbt "Test/runMain graft.tools.ExplainDump"`).
   *
   * Output is STABLE across runs (round-12 verdict ask #6): Catalyst's
   * per-session expression ids (`l_orderkey#31660`) and exchange/plan ids

@@ -1,13 +1,13 @@
 package graft.tools
 
+import graft.ScopedStageListener
 
-/** Round-13 measurement tool (guide §1): run ONE registered query under
-  * the bench protocol (cache reset, noop sink, terminal sort stripped)
-  * while aggregating per-stage executor time, task count and shuffle
-  * volume — the local-mode stand-in for the Spark UI's stage table.
-  * Dev-only; never part of the driver contract.
+/** Run registered queries under the bench protocol (cache reset, noop
+  * sink, terminal sort stripped) while aggregating per-stage executor
+  * time, task count and shuffle volume — the local-mode stand-in for the
+  * Spark UI's stage table.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.tools.StageProfile <query> [<query>...]
+  * Usage: SPARK_GRAFT_SF_DIR=... sbt "Test/runMain graft.tools.StageProfile <query> [<query>...]"
   */
 object StageProfile {
   final case class Agg(name: String, runMs: Long, cpuMs: Long, tasks: Int,

@@ -19,7 +19,7 @@ candidate-growth table is NOT fixture-guaranteed linear:
       boundary shingles where doc tail meets phrase head.
   If df-ascending prefix selection ever admitted these, the inverted
   index would grow a bucket quadratic in corpus size — exactly the
-  failure mode the probe must be ABLE to see.
+  failure mode the dedup checks must be ABLE to see.
 - CROSS-COPY NEAR-DUP CLIQUES: every ~401st doc becomes a clique base
   whose text is a fixed 80-token string; each copy carries that base
   with an 11-token copy-specific mutation block (J = 65/91 ≈ 0.714
@@ -32,8 +32,9 @@ candidate-growth table is NOT fixture-guaranteed linear:
   token suffixes on non-clique text, one parquet file per copy.
 
 Usage: python3 tools/make_adversarial.py [src_dir] [dst_dir] [copies]
-Probe:  sbt "runMain graft.tools.DedupGrowthProbe <dst_dir>
-             d2_jaccard_pairs d3_minhash_lsh d5_dedup_clusters"
+Check:  sbt "testOnly graft.operators.AdversarialDedupSpec" runs a CI-sized
+        in-memory replica of this fixture; SCALING.md records the
+        full-scale decades.
 """
 import os
 import sys
