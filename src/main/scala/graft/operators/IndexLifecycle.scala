@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,7 +29,7 @@ private[operators] object IndexTombstones {
     * pre-lifecycle ones (no vacuous anti-join in every EXPLAIN). */
   def setOpt(spark: SparkSession, path: String): Option[DataFrame] =
     if (fsOf(spark, path).exists(new Path(path, "tombstones")))
-      Some(spark.read.parquet(s"$path/tombstones").select("vec_id").distinct())
+      Some(Tables.parquet(spark, s"$path/tombstones").select("vec_id").distinct())
     else None
 
   /** Anti-join the tombstone set out of `rows` (broadcast — compaction
@@ -62,7 +63,7 @@ private[operators] object IndexTombstones {
                  (beforeSwap: String => Unit): Unit = {
     val fs = fsOf(spark, path)
     val survivors = drop(spark, path,
-        spark.read.parquet(s"$path/$dataDir"))
+        Tables.parquet(spark, s"$path/$dataDir"))
       .repartition(col("cell"))
     val staging = s"$path/${dataDir}_compact_staging"
     survivors.write.mode("overwrite").partitionBy("cell").parquet(staging)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import graft.queries.SimilarityQueries.{cosineSim, normD}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -280,7 +281,7 @@ object IvfAnn {
     * enough that the right operation is a rebuild, not an update. */
   def updateIndex(delta: DataFrame, path: String): Unit = {
     val spark = delta.sparkSession
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = Tables.parquet(spark, s"$path/centroids")
     val cents = centroids.orderBy("cell").collect() // nCells rows — bounded
       .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
     val assignedDelta = delta
@@ -358,9 +359,9 @@ object IvfAnn {
       // the recomputed (smaller) radii are sound while the OLD assigned
       // dir + tombstone anti-join still serve reads — survivors' radii
       // cover exactly the rows the anti-join leaves visible
-      val centroids = spark.read.parquet(s"$path/centroids")
+      val centroids = Tables.parquet(spark, s"$path/centroids")
         .select(col("cell"), unitCol(col("centroid")).as("anchor"))
-      val recomputed = spark.read.parquet(staging)
+      val recomputed = Tables.parquet(spark, staging)
         .join(broadcast(centroids), "cell")
         .select(col("cell"), col("anchor"),
           distCol(unitCol(col("embedding")), col("anchor")).as("d"))
@@ -416,12 +417,12 @@ object IvfAnn {
     * the top k). */
   def topKFromIndex(spark: SparkSession, path: String,
                     queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = Tables.parquet(spark, s"$path/centroids")
     val probes = probeCells(queries, centroids, nProbe)
     val cells = probes.select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
     val assigned = dropTombstoned(spark, path,
-      spark.read.parquet(s"$path/assigned")
+      Tables.parquet(spark, s"$path/assigned")
         .filter(col("cell").isin(cells: _*))) // static partition pruning
     assigned.join(probes, Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -475,7 +476,7 @@ object IvfAnn {
   def rangeSearch(spark: SparkSession, path: String,
                   queries: DataFrame, minCos: Double): DataFrame = {
     val (live, cells, nCellsTotal) = rangeLive(spark, path, queries, minCos)
-    val assigned = spark.read.parquet(s"$path/assigned")
+    val assigned = Tables.parquet(spark, s"$path/assigned")
     val pruned =
       if (cells.size > nCellsTotal * IsinCutoverFraction) assigned
       else assigned.filter(col("cell").isin(cells: _*)) // static partition pruning
@@ -513,9 +514,9 @@ object IvfAnn {
     * publishes the result as the first cellstats generation, so at scale
     * query batches read nCells rows instead of re-scanning the index. */
   private def rangeStats(spark: SparkSession, path: String): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = Tables.parquet(spark, s"$path/centroids")
       .select(col("cell"), unitCol(col("centroid")).as("anchor"))
-    spark.read.parquet(s"$path/assigned")
+    Tables.parquet(spark, s"$path/assigned")
       .join(broadcast(centroids), "cell")
       .select(col("cell"), col("anchor"),
         distCol(unitCol(col("embedding")), col("anchor")).as("d"))
@@ -586,9 +587,9 @@ object IvfAnn {
                                        path: String): DataFrame = {
     val fs = fsOf(spark, path)
     currentCellstatsGen(fs, path) match {
-      case Some((_, p)) => spark.read.parquet(p.toString)
+      case Some((_, p)) => Tables.parquet(spark, p.toString)
       case None if fs.exists(new Path(path, "cellstats")) =>
-        spark.read.parquet(s"$path/cellstats")
+        Tables.parquet(spark, s"$path/cellstats")
       case None => rangeStats(spark, path)
     }
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -320,11 +321,11 @@ object IvfPqAnn {
   private[graft] def indexedScan(spark: org.apache.spark.sql.SparkSession,
                                  path: String, queries: DataFrame,
                                  nProbe: Int): (DataFrame, DataFrame) = {
-    val coarse = spark.read.parquet(s"$path/centroids")
+    val coarse = Tables.parquet(spark, s"$path/centroids")
       .orderBy("cell").collect()
       .map(_.getSeq[Double](1).toArray)
     val cmicro = coarse.map(_.map(PqAnn.microOf))
-    val cbRows = spark.read.parquet(s"$path/codebooks").collect()
+    val cbRows = Tables.parquet(spark, s"$path/codebooks").collect()
     val subs = cbRows.map(_.getInt(0)).max + 1
     val ks = cbRows.map(_.getInt(1)).max + 1
     val dsub = cbRows.map(_.getInt(2)).max + 1
@@ -336,7 +337,7 @@ object IvfPqAnn {
     // tombstones drop BEFORE ADC (deleted codes neither score nor eat
     // the cand budget); no-delete indexes skip the join — plan unchanged
     val codes = IndexTombstones.drop(spark, path,
-      spark.read.parquet(s"$path/codes")
+      Tables.parquet(spark, s"$path/codes")
         .filter(col("cell").isin(cells: _*))) // static partition pruning
     (codes, qp)
   }

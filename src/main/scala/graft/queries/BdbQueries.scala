@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.QueryDef
+import graft.{QueryDef, Tables}
 import graft.QueryDef.{q, qRowsOnly}
 import graft.bdb._
 
@@ -391,10 +391,10 @@ object BdbQueries {
     // semantics, not the oracle).
     q("bdb_press_pipeline", pressOracle) { (s, _) =>
       val fix = BdbMini.writeFixture(s)
-      val plays = s.read.parquet(s"$fix/plays")
-      val players = s.read.parquet(s"$fix/players")
-      val playerPlay = s.read.parquet(s"$fix/player_play")
-      val tracking = s.read.parquet(s"$fix/tracking")
+      val plays = Tables.parquet(s, s"$fix/plays")
+      val players = Tables.parquet(s, s"$fix/players")
+      val playerPlay = Tables.parquet(s, s"$fix/player_play")
+      val tracking = Tables.parquet(s, s"$fix/tracking")
       val timing = ReadOrder.dropbackTiming(tracking, plays, players)
       val reads = ReadOrder.readsData(tracking, playerPlay)
       val throws = QBMetrics.throwScoring(plays, playerPlay, timing, reads)
@@ -409,9 +409,9 @@ object BdbQueries {
     // defender reach test — and the integer-fifths scores hash-match.
     q("bdb_radius_stage", radiusOracle) { (s, _) =>
       val fix = BdbMini.writeFixture(s)
-      val plays = s.read.parquet(s"$fix/plays")
-      val playerPlay = s.read.parquet(s"$fix/player_play")
-      val tracking = s.read.parquet(s"$fix/tracking")
+      val plays = Tables.parquet(s, s"$fix/plays")
+      val playerPlay = Tables.parquet(s, s"$fix/player_play")
+      val tracking = Tables.parquet(s, s"$fix/tracking")
       val cleaned = OpennessPrep(tracking, plays, playerPlay)
       RadiusStage(cleaned)
         .select("gameId", "playId", "frameId", "nflId", "secondId", "open_count")
@@ -425,9 +425,9 @@ object BdbQueries {
     // over the very same files.
     q("bdb_mirror_matchups", mirrorOracle) { (s, _) =>
       val fix = BdbMini.writeFixture(s)
-      val plays = s.read.parquet(s"$fix/plays")
-      val playerPlay = s.read.parquet(s"$fix/player_play")
-      val tracking = s.read.parquet(s"$fix/tracking")
+      val plays = Tables.parquet(s, s"$fix/plays")
+      val playerPlay = Tables.parquet(s, s"$fix/player_play")
+      val tracking = Tables.parquet(s, s"$fix/tracking")
       val trees = MatchupAnalysis.routeTrees(tracking, playerPlay, plays)
       MatchupAnalysis.mirrorMatches(trees)
         .orderBy("gameId", "playId")
@@ -440,10 +440,10 @@ object BdbQueries {
     // whole 28-column matrix hash-matches.
     q("bdb_coverage_features", coverageFeaturesOracle) { (s, _) =>
       val fix = BdbMini.writeFixture(s)
-      val plays = s.read.parquet(s"$fix/plays")
-      val players = s.read.parquet(s"$fix/players")
-      val playerPlay = s.read.parquet(s"$fix/player_play")
-      val tracking = s.read.parquet(s"$fix/tracking")
+      val plays = Tables.parquet(s, s"$fix/plays")
+      val players = Tables.parquet(s, s"$fix/players")
+      val playerPlay = Tables.parquet(s, s"$fix/player_play")
+      val tracking = Tables.parquet(s, s"$fix/tracking")
       CoveragePlayModel.features(plays, players, playerPlay, tracking,
           positions = Seq("CB", "S"))
         .orderBy("gameId", "playId")

@@ -155,7 +155,7 @@ object BpeQueries {
         mergesCkptWritten.add(path)
       }
     }
-    s.read.parquet(path).orderBy("round").collect()
+    Tables.parquet(s, path).orderBy("round").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toSeq
   }

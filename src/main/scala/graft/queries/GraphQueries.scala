@@ -71,7 +71,7 @@ object GraphQueries {
         ckptWritten.add(path)
       }
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** Symmetrized, deduplicated supplier↔part edge list (checkpointed). */

@@ -1120,7 +1120,7 @@ object SimilarityQueries {
         base = e.filter(col("vec_id") % 5 =!= 0).select("vec_id", "embedding"),
         delta = e.filter(col("vec_id") % 5 === 0).select("vec_id", "embedding"),
         nCells = 16, path = path)
-      val cents = s.read.parquet(s"$path/centroids").orderBy("cell").collect()
+      val cents = Tables.parquet(s, s"$path/centroids").orderBy("cell").collect()
         .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
       val p = graft.operators.IvfAnn
         .assignWithDist(e.select("vec_id", "embedding"), cents)

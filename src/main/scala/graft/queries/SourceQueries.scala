@@ -55,7 +55,7 @@ object SourceQueries {
       val e = Tables.load(s, dir, "events").select("event_id", "user_id", "value")
       graft.operators.ZOrder.cluster(e, "user_id", "value")
         .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .filter(col("user_id").between(2, 6) && col("value").between(50, 150))
         .orderBy("event_id")
     },
@@ -139,7 +139,7 @@ object SourceQueries {
       val r = Tables.load(s, dir, "region").select("r_regionkey")
       r.write.mode(SaveMode.Overwrite).parquet(out)
       r.write.mode(SaveMode.Append).parquet(out)
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .groupBy("r_regionkey").agg(count(lit(1)).cast("int").as("n_copies"))
         .orderBy("r_regionkey")
     },
@@ -157,7 +157,7 @@ object SourceQueries {
         .groupBy("o_orderpriority", "o_custkey")
         .agg(sum("o_totalprice").as("total"))
         .write.mode(SaveMode.Overwrite).parquet(out)
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .groupBy("o_orderpriority")
         .agg(round(sum("total"), 2).as("grand"))
         .orderBy("o_orderpriority")
@@ -175,7 +175,7 @@ object SourceQueries {
         .select("l_returnflag", "l_linestatus", "l_quantity")
         .write.mode(SaveMode.Overwrite)
         .partitionBy("l_returnflag").parquet(out)
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .filter(col("l_returnflag") === "R") // prunes to one partition dir
         .groupBy("l_linestatus")
         .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("qty"))
@@ -445,7 +445,7 @@ object SourceQueries {
           case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
         }
       }
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
         .orderBy("event_type")
@@ -568,10 +568,10 @@ object SourceQueries {
       Tables.load(s, dir, "orders").select("o_orderkey", "o_orderpriority")
         .repartition(64) // the incremental-append fragmentation
         .write.mode(SaveMode.Overwrite).parquet(frag)
-      s.read.parquet(frag)
+      Tables.parquet(s, frag)
         .repartition(4) // the compaction rewrite
         .write.mode(SaveMode.Overwrite).parquet(opt)
-      s.read.parquet(opt)
+      Tables.parquet(s, opt)
         .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
         .orderBy("o_orderpriority")
     },
@@ -586,14 +586,15 @@ object SourceQueries {
     q("s22_corrupt_tolerance",
       """SELECT n_nationkey, n_name FROM nation ORDER BY n_nationkey""") { (s, dir) =>
       val out = scratch(s, dir, "s22")
-      Tables.load(s, dir, "nation").select("n_nationkey", "n_name")
-        .repartition(2)
+      val good = Tables.load(s, dir, "nation").select("n_nationkey", "n_name")
+      good.repartition(2)
         .write.mode(SaveMode.Overwrite).parquet(out)
       // a torn write: valid magic prefix, garbage tail, .parquet suffix
       val torn = new java.io.FileOutputStream(s"$out/part-junk.parquet")
       torn.write("PAR1".getBytes ++ Array.fill[Byte](64)(0x5a))
       torn.close()
-      s.read.option("ignoreCorruptFiles", "true").parquet(out)
+      // the written schema is known: no inference job over the landing zone
+      s.read.option("ignoreCorruptFiles", "true").schema(good.schema).parquet(out)
         .orderBy("n_nationkey")
     },
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
@@ -46,7 +47,7 @@ import org.apache.spark.sql.DataFrame
   *     inert and overwritten by the redelivery.
   *
   * Both bookkeeping dirs live INSIDE the sink path and start with `_`,
-  * which Spark/Hadoop data discovery ignores — `spark.read.parquet(path)`
+  * which Spark/Hadoop data discovery ignores — `Tables.parquet(spark, path)`
   * sees exactly the published data files. A crash at ANY point leaves a
   * state the redelivery repairs: before staging (nothing happened),
   * mid-staging (overwritten), mid-publish (swept and re-published),
@@ -346,7 +347,7 @@ object IdempotentLanding {
     val covered = entries.map(_._1).max
     // 2. consolidate into staging, publish by rename
     val staging = new Path(path, s"_graft_staging/compact_$gen")
-    spark.read.parquet(entries.map(e => new Path(path, e._2).toString): _*)
+    Tables.parquet(spark, entries.map(e => new Path(path, e._2).toString): _*)
       .coalesce(numFiles)
       .write.mode("overwrite").parquet(staging.toString)
     val parts = fs.listStatus(staging).map(_.getPath)
@@ -378,7 +379,7 @@ object IdempotentLanding {
     * exactly the files the commit markers certify, so a stray
     * uncommitted file in the sink directory — a half-published batch on
     * a non-atomic store, a crashed writer's orphan, a foreign file — is
-    * never observed, where `spark.read.parquet(path)`'s directory
+    * never observed, where `Tables.parquet(spark, path)`'s directory
     * listing would pick it up. Returns an empty (zero-column) frame for
     * a sink with no commits. */
   def readCommitted(spark: org.apache.spark.sql.SparkSession,
@@ -386,6 +387,6 @@ object IdempotentLanding {
     val files = manifest(spark, path).map { case (_, f) =>
       new Path(path, f).toString }
     if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(files: _*)
+    else Tables.parquet(spark, files: _*)
   }
 }

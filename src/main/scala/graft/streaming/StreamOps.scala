@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -30,9 +31,10 @@ object StreamOps {
   def eventStream(spark: SparkSession, path: String,
                   maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     // readStream needs an explicit schema; probe the files' physical ts type
-    // once (batch footer reads) so both generator vintages — TIMESTAMP(NANOS)
-    // read as raw longs, and TIMESTAMP(MICROS) read as NTZ — normalize to the
-    // same session-UTC TimestampType the downstream watermarks expect.
+    // once (footer reads on the driver, no job) so both generator vintages —
+    // TIMESTAMP(NANOS) read as raw longs, and TIMESTAMP(MICROS) read as NTZ —
+    // normalize to the same session-UTC TimestampType the downstream
+    // watermarks expect.
     // One probed schema is applied to every file the stream ever picks up,
     // so a source directory must hold a single generator vintage: the probe
     // reads EVERY present file's footer (footer reads are cheap driver-side
@@ -52,10 +54,10 @@ object StreamOps {
         if (fs.exists(hPath))
           fs.listStatus(hPath).filter(s => s.isFile &&
               s.getPath.getName.endsWith(".parquet"))
-            .map(_.getPath.toString).sorted.toSeq
-        else Seq.empty[String]
+            .map(_.getPath).sortBy(_.toString).toSeq
+        else Seq.empty
       files.flatMap(f =>
-        scala.util.Try(spark.read.parquet(f).schema("ts").dataType).toOption)
+        scala.util.Try(Tables.fileSchema(spark, f)("ts").dataType).toOption)
         .distinct
     }
     require(vintages.size <= 1,
@@ -305,7 +307,7 @@ object StreamOps {
   def upsertBatch(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
     val existingKeys =
-      (try Some(spark.read.parquet(path))
+      (try Some(Tables.parquet(spark, path))
        catch {
          // first batch: sink directory does not exist yet
          case e: org.apache.spark.sql.AnalysisException

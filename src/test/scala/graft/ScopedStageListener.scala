@@ -55,17 +55,27 @@ object ScopedStageListener {
     * stages ITS jobs spawned (best-effort attribution — see the scaladoc
     * layers). The listener is registered before and removed after, even
     * on body failure. */
-  def measure(spark: SparkSession, label: String)(body: => Unit): Seq[TaskRow] = {
+  def measure(spark: SparkSession, label: String)(body: => Unit): Seq[TaskRow] =
+    scoped(spark, label)(body)._2
+
+  /** Run `body` under a scoped job group and return how many jobs it
+    * started (same attribution as [[measure]]). */
+  def jobs(spark: SparkSession, label: String)(body: => Unit): Int =
+    scoped(spark, label)(body)._1
+
+  private def scoped(spark: SparkSession, label: String)
+                    (body: => Unit): (Int, Seq[TaskRow]) = {
     val sc = spark.sparkContext
     val group = s"graft-scoped-$label-${System.nanoTime()}"
     val rows = scala.collection.mutable.Buffer.empty[TaskRow]
     val trackedStages = scala.collection.mutable.Set.empty[Int]
+    var jobCount = 0
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val g = Option(j.properties)
           .map(_.getProperty("spark.jobGroup.id")).orNull
         if (g != null && g == group)
-          trackedStages.synchronized { trackedStages ++= j.stageIds }
+          trackedStages.synchronized { trackedStages ++= j.stageIds; jobCount += 1 }
       }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         val mine = trackedStages.synchronized(trackedStages.contains(t.stageId))
@@ -86,7 +96,7 @@ object ScopedStageListener {
       sc.removeSparkListener(listener)
       sc.clearJobGroup()
     }
-    rows.synchronized(rows.toSeq)
+    (trackedStages.synchronized(jobCount), rows.synchronized(rows.toSeq))
   }
 
   /** Run `body` with `onStage` observing every completed stage, then drain

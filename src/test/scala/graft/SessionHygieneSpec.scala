@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * check is the one Bench measures, and the `GraftExtensions` class
   * (named by `Graft.configure`) is the only way the engine's functions,
   * rule and strategy reach a session. The production tree ships no dev
-  * tools: its only mains are Bench and Verify. The needles are
+  * tools: its only mains are Bench and Verify. Parquet is read through
+  * `Tables.parquet`, so no read runs a schema-inference job. The needles are
   * concatenated so this file never matches itself. */
 class SessionHygieneSpec extends AnyFunSuite {
 
@@ -42,6 +43,23 @@ class SessionHygieneSpec extends AnyFunSuite {
     val needle = "def " + "main("
     assertNone(needle, mainOffenders(_.contains(needle), Set("Bench.scala", "Verify.scala")),
       "dev tools live in src/test/scala/graft/tools (sbt Test/runMain)")
+  }
+
+  test("src/main reads parquet only through Tables.parquet") {
+    // a reader chain that reaches parquet without a schema runs Spark's
+    // schema-inference job; Tables.parquet reads the footer instead
+    val raw = ("""\.read(\s*\.options?\([^()]*\))*\s*\.""" +
+      """(parquet\(|format\("parquet"\))""").r
+    // s20_schema_evolution asks Spark to merge the schemas of its files
+    val exempt = Set("SourceQueries.scala" ->
+      (".read.option(\"mergeSchema\", \"true\")." + "parquet("))
+    val found = for {
+      (path, text) <- SourceTree.files
+      name = path.getFileName.toString
+      if path.startsWith("src/main") && name != "Tables.scala"
+      m <- raw.findAllMatchIn(text) if !exempt(name -> m.matched)
+    } yield s"$path:${text.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
+    assertNone("a raw parquet read", found, "read through Tables.parquet")
   }
 
   test("src/main never reaches the private[spark] listener bus") {

@@ -685,6 +685,17 @@ class StreamOpsSpec extends SparkSpec {
       Tables.load(spark, sfDir, "events").count())
   }
 
+  test("the vintage probe reads footers on the driver: no job for a 3-file directory") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_probe_src")
+    Seq("a", "b", "c").foreach(n => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sfDir/events.parquet"), dir.resolve(s"$n.parquet")))
+    var stream: DataFrame = null
+    assert(graft.ScopedStageListener.jobs(spark, "probe") {
+      stream = StreamOps.eventStream(spark, dir.toString)
+    } == 0)
+    assert(stream.isStreaming)
+  }
+
   test("mixed ts vintages in one source directory fail fast at the probe") {
     val dir = java.nio.file.Files.createTempDirectory("graft_mixed_src")
     // vintage A: the generator's file as-is (NTZ-micros or nanos-as-long)
