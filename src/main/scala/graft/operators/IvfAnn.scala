@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.operators.Lloyd.quantCol
 import graft.queries.SimilarityQueries.{cosineSim, normD}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -41,12 +42,12 @@ import org.apache.spark.sql.functions._
   * Scale shape: candidate selection is an equi-join on `cell` — the
   * shuffle key cardinality is nCells and Lloyd balances occupancy, so
   * there is no skew pile-up; per-query work drops from O(N) to
-  * O(N · nProbe / nCells). Each Lloyd pass is one map-only assignment
-  * plus a partial-aggregated (cell, dim) sum — the shuffle moves
-  * nCells·dim rows per partition, not N rows. At 100 TB you fit the
-  * quantizer on a sample (Lloyd converges on samples), keep nCells ~ √N
-  * so cells stay executor-sized, and the assignment/search stay
-  * map-side + one join.
+  * O(N · nProbe / nCells). The fit is [[Lloyd.fit]]: one stage per
+  * round, no shuffle — each partition folds its vectors into dense
+  * nCells·dim Long sums and `treeReduce` merges them. At 100 TB you fit
+  * the quantizer on a sample (Lloyd converges on samples), keep
+  * nCells ~ √N so cells stay executor-sized, and the assignment/search
+  * stay map-side + one join.
   *
   * == Index lifecycle (round 13 completes it) ==
   * build ([[buildIndex]]) → search ([[topKFromIndex]], [[rangeSearch]])
@@ -84,16 +85,6 @@ object IvfAnn {
     * oracle unrolls exactly this many steps). */
   val LloydIters = 5
 
-  private val QScale = 1000000.0
-
-  /** Exact integer micro-units, half-away-from-zero — the v5 rounding
-    * scheme, reproduced by DuckDB's floor(v+0.5) mirror. Stays in
-    * whole-stage codegen (builtin transform, no UDF). */
-  private def quantCol(c: Column): Column =
-    transform(c, x =>
-      when(x.cast("double") >= 0, floor(x.cast("double") * QScale + 0.5))
-        .otherwise(-floor(-x.cast("double") * QScale + 0.5)).cast("long"))
-
   /** The nearest-centroid loop both assignment UDFs share: argmin cell
     * by squared-L2 over v_i = r_i/1e6, left-to-right fold, ties to the
     * lowest cell id — the exact comparison DuckDB replays. ONE
@@ -101,7 +92,7 @@ object IvfAnn {
     * silently diverge from the index's (the v17 oracle gate depends on
     * bit-for-bit parity between the two). */
   private def nearest(cents: Array[Array[Double]],
-                      rq: Seq[Long]): (Int, Double) = {
+                      rq: Array[Long]): (Int, Double) = {
     var best = 0
     var bestD = Double.MaxValue
     var cIdx = 0
@@ -122,7 +113,7 @@ object IvfAnn {
   }
 
   private def assignUdf(cents: Array[Array[Double]]) =
-    udf { (rq: Seq[Long]) => nearest(cents, rq)._1 }
+    udf { (rq: Seq[Long]) => nearest(cents, rq.toArray)._1 }
 
   /** [[assignUdf]] plus the winning distance, micro-quantized: returns
     * (cell, nano-units of √bestD) — the drift monitor's per-vector
@@ -134,52 +125,20 @@ object IvfAnn {
     * norms — sample beyond that). */
   private def assignDistUdf(cents: Array[Array[Double]]) =
     udf { (rq: Seq[Long]) =>
-      val (best, bestD) = nearest(cents, rq)
+      val (best, bestD) = nearest(cents, rq.toArray)
       (best, math.floor(math.sqrt(bestD) * 1e9 + 0.5).toLong)
     }
 
-  /** Deterministic Lloyd fit: returns the final centroids (dense
-    * nCells × dim doubles). One Spark job per iteration; the per-cell
-    * per-dimension sums partial-aggregate map-side so each pass shuffles
-    * O(partitions · nCells · dim) rows regardless of corpus size. */
+  /** Deterministic Lloyd fit ([[Lloyd.fit]], one block): returns the
+    * final centroids (dense nCells × dim doubles). One stage per round,
+    * no shuffle: each partition sums its vectors' micro components per
+    * cell and `treeReduce` merges the nCells·dim partial sums. */
   def fitCentroids(corpus: DataFrame, nCells: Int,
-                   iters: Int = LloydIters): Array[Array[Double]] = {
-    // cache the quantized frame for the fit's iters+1 driver-coordinated
-    // passes (round 13): uncached, every Lloyd step re-ran the scan +
-    // quantization lineage — iters+1 redundant corpus reads for a frame
-    // that is two narrow columns (guide §5: reuse across actions is the
-    // case caching exists for). Values are identical either way; the
-    // cache is released before returning.
-    val rq = corpus.select(col("vec_id"), quantCol(col("embedding")).as("rq"))
-      .cache()
-    var cents: Array[Array[Double]] = rq
-      .withColumn("h", (col("vec_id") * lit(1103515245L) + lit(12345L)) % lit(2147483648L))
-      .orderBy(col("h"), col("vec_id"))
-      .limit(nCells)
-      .select("rq").collect()
-      .map(_.getSeq[Long](0).toArray.map(_.toDouble / QScale))
-    var it = 0
-    while (it < iters) {
-      val sums = rq
-        .withColumn("cell", assignUdf(cents)(col("rq")))
-        .select(col("cell"), posexplode(col("rq")).as(Seq("pos", "r")))
-        .groupBy("cell", "pos")
-        .agg(sum("r").as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = cents.map(_.clone())
-      sums.foreach { row =>
-        val cell = row.getInt(0)
-        val pos = row.getInt(1)
-        val s = row.getLong(2)
-        val n = row.getLong(3)
-        next(cell)(pos) = s.toDouble / (n.toDouble * QScale)
-      }
-      cents = next
-      it += 1
-    }
-    rq.unpersist(blocking = false)
-    cents
-  }
+                   iters: Int = LloydIters): Array[Array[Double]] =
+    Lloyd.fit(corpus.select(col("vec_id"), quantCol(col("embedding"))),
+      nCells, blocks = 1, iters, Lloyd.DoubleMean) {
+      (cells, v, _, _) => nearest(cells, v)._1
+    }.head
 
   /** Per-vector (cell, quantization error) against a FIXED centroid
     * table — the drift monitor's primitive (v17): one map-only pass,

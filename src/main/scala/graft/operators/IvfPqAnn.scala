@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.operators.Lloyd.{microOf, quantCol}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,9 +34,10 @@ import org.apache.spark.sql.functions._
   * per-cell ADC tables broadcast (nProbe · M · K longs per query). The
   * candidate cut is GroupTopK (map-side partial heaps), so the only
   * per-query shuffle is ≤ cand · partitions candidate rows. Fit cost:
-  * coarse Lloyd is v4's (sample-fit at scale); the residual PQ fit adds
-  * PqIters passes of (sub, cell, pos) partial sums — M·K·dsub rows per
-  * partition per pass, corpus-size-independent shuffle volume.
+  * coarse Lloyd is v4's (sample-fit at scale); the residual PQ fit
+  * ([[Lloyd.fit]] via `PqAnn.fitMicro`) adds PqIters rounds of one
+  * stage each, no shuffle — per partition M·K·dsub Long partial sums,
+  * whatever the corpus size, merged by `treeReduce`.
   */
 object IvfPqAnn {
 
@@ -47,29 +49,12 @@ object IvfPqAnn {
     * 8/200 → 0.725 (SCALING.md table). */
   val NProbe = 8
 
-  private val QScale = 1000000.0
-
   /** Integer argmin cell over micro-quantized centroids; ties to the
     * lowest cell id — the comparison the oracle replays with idist. */
   private def assignIntUdf(cmicro: Array[Array[Long]]) =
     udf { (rq: Seq[Long]) =>
-      var best = 0
-      var bestD = Long.MaxValue
-      var c = 0
-      while (c < cmicro.length) {
-        val cm = cmicro(c)
-        var d = 0L
-        var i = 0
-        val n = math.min(cm.length, rq.length)
-        while (i < n) {
-          val diff = rq(i) - cm(i)
-          d += diff * diff
-          i += 1
-        }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
+      val v = rq.toArray
+      Lloyd.nearestMicro(cmicro, v, 0, v.length)
     }
 
   /** BIGINT residual vs the assigned cell's micro centroid. */
@@ -102,57 +87,15 @@ object IvfPqAnn {
         .map(_._1)
     }
 
-  /** Deterministic per-subspace Lloyd fit on RESIDUAL micro vectors —
-    * `PqAnn.fitCodebooks`' integer scheme with the residual column as
-    * input (seeds are the same LCG-hash-ranked rows, contributing their
-    * residual subvectors). Input: (vec_id, res: array<long>). */
-  def fitResidualCodebooks(res: DataFrame): Array[Array[Array[Long]]] = {
-    val seeds = res
-      .withColumn("h", (col("vec_id") * lit(1103515245L) + lit(12345L)) % lit(2147483648L))
-      .orderBy(col("h"), col("vec_id"))
-      .limit(PqAnn.K)
-      .select("res").collect()
-      .map(_.getSeq[Long](0).toArray)
-    val dim = seeds.head.length
-    val dsub = dim / PqAnn.M
-    var cm: Array[Array[Array[Long]]] = Array.tabulate(PqAnn.M, PqAnn.K, dsub) {
-      (m, k, i) => seeds(k)(m * dsub + i)
-    }
-    var it = 0
-    while (it < PqAnn.PqIters) {
-      val enc = PqAnn.encodeUdf(cm)
-      val sums = res
-        .withColumn("codes", enc(col("res")))
-        .select(posexplode(col("res")).as(Seq("pos", "r")), col("codes"))
-        .withColumn("sub", (col("pos") / dsub).cast("int"))
-        .withColumn("cell", element_at(col("codes"), col("sub") + 1))
-        .groupBy("sub", "cell", "pos")
-        .agg(sum("r").as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = cm.map(_.map(_.clone()))
-      sums.foreach { row =>
-        val sub = row.getInt(0)
-        val cell = row.getInt(1)
-        val pos = row.getInt(2) % dsub
-        val s = row.getLong(3)
-        val n = row.getLong(4)
-        next(sub)(cell)(pos) = PqAnn.microOf(s.toDouble / (n.toDouble * QScale))
-      }
-      cm = next
-      it += 1
-    }
-    cm
-  }
-
   /** Quantize → integer cell assignment → BIGINT residual (ONE pass
-    * over the corpus — callers persist the result so the PqIters
-    * codebook-fit collects and the final encode all read the same
-    * materialization instead of re-running the lineage each time). */
+    * over the corpus — callers persist the result so the residual
+    * codebook fit and the final encode read the same materialization
+    * instead of re-running the lineage each). */
   private def assignResiduals(corpus: DataFrame,
                               cmicro: Array[Array[Long]]): DataFrame =
     corpus
       .select(col("vec_id"), col("embedding"),
-              PqAnn.quantCol(col("embedding")).as("rq"))
+              quantCol(col("embedding")).as("rq"))
       .withColumn("cell", assignIntUdf(cmicro)(col("rq")))
       .withColumn("res", residualUdf(cmicro)(col("rq"), col("cell")))
 
@@ -163,17 +106,12 @@ object IvfPqAnn {
                           nProbe: Int): DataFrame =
     queries
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-              PqAnn.quantCol(col("embedding")).as("qrq"))
+              quantCol(col("embedding")).as("qrq"))
       .withColumn("pcell", explode(probeUdf(coarse, nProbe)(col("qe"))))
       .withColumn("qres", residualUdf(cmicro)(col("qrq"), col("pcell")))
       .withColumn("qtable", PqAnn.qtableUdf(cm)(col("qres")))
       .select("query_id", "qe", "pcell", "qtable")
 
-  /** ADC scan of the probed cells + candidate cut + exact re-rank —
-    * the search tail shared by the fit-and-search and standing-index
-    * paths. Map-only ADC: the equi-join on cell keeps corpus rows
-    * outside the probe set untouched, and the per-row score is M
-    * integer lookups in whole-stage codegen. */
   /** The ADC-scored (query, candidate) frame — the LAST plan-visible
     * stage before GroupTopK's RDD pass (whose output plan prints as
     * `Scan ExistingRDD`), so pruning properties of the code scan are
@@ -189,6 +127,11 @@ object IvfPqAnn {
             element_at(col("qtable"),
               m * PqAnn.K + element_at(col("codes"), m + 1) + 1)))
 
+  /** ADC scan of the probed cells + candidate cut + exact re-rank —
+    * the search tail shared by the fit-and-search and standing-index
+    * paths. Map-only ADC: the equi-join on cell keeps corpus rows
+    * outside the probe set untouched, and the per-row score is M
+    * integer lookups in whole-stage codegen. */
   private def searchCodes(codes: DataFrame, qp: DataFrame,
                           k: Int, cand: Int): DataFrame = {
     val adc = adcScores(codes, qp)
@@ -212,17 +155,16 @@ object IvfPqAnn {
            cand: Int = 200, nCells: Int = NCells,
            nProbe: Int = NProbe): DataFrame = {
     val coarse = IvfAnn.fitCentroids(corpus, nCells)
-    val cmicro = coarse.map(_.map(PqAnn.microOf))
+    val cmicro = coarse.map(_.map(microOf))
 
-    // persist: fitResidualCodebooks runs PqIters collect passes and the
-    // final encode reads it once more — uncached, each would re-run the
-    // full quantize/assign/residual lineage (~PqIters+2 corpus passes),
-    // contrary to the one-assignment-pass scale claim above. Evicted by
-    // the session's cache clear (Caches.reset); the standing-index path
-    // (buildIndex) unpersists explicitly.
+    // persist: the residual fit and the final encode both read it —
+    // uncached, each would re-run the full quantize/assign/residual
+    // lineage, contrary to the one-assignment-pass scale claim above.
+    // Evicted by the session's cache clear (Caches.reset); the
+    // standing-index path (buildIndex) unpersists explicitly.
     val assigned = assignResiduals(corpus, cmicro).persist()
 
-    val cm = fitResidualCodebooks(assigned.select(col("vec_id"), col("res")))
+    val cm = PqAnn.fitMicro(assigned.select(col("vec_id"), col("res")))
     val codes = assigned
       .select(col("vec_id"), col("embedding"), col("cell"),
               PqAnn.encodeUdf(cm)(col("res")).as("codes"))
@@ -231,12 +173,6 @@ object IvfPqAnn {
       k, cand)
   }
 
-  /** Persist the IVF-PQ index (the v8 standing-index pattern applied to
-    * IVF-PQ): the code table laid out PARTITIONED BY cell — a probed
-    * search touches only nProbe directories — plus the tiny coarse
-    * centroid and residual-codebook tables. The operational shape at
-    * 100 TB: quantizers fit once, corpus assigned + encoded once, every
-    * query batch reads the standing 8-byte-per-vector index. */
   /** Write-once-per-JVM guard around [[buildIndex]] (the graph-
     * checkpoint convention): index content is a pure deterministic
     * function of the corpus, so a rebuild is always byte-identical and
@@ -285,6 +221,12 @@ object IvfPqAnn {
                    path: String): Unit =
     IndexTombstones.compactData(spark, path, "codes")(_ => ())
 
+  /** Persist the IVF-PQ index (the v8 standing-index pattern applied to
+    * IVF-PQ): the code table laid out PARTITIONED BY cell — a probed
+    * search touches only nProbe directories — plus the tiny coarse
+    * centroid and residual-codebook tables. The operational shape at
+    * 100 TB: quantizers fit once, corpus assigned + encoded once, every
+    * query batch reads the standing 8-byte-per-vector index. */
   def buildIndex(corpus: DataFrame, path: String, nCells: Int = NCells): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -292,9 +234,9 @@ object IvfPqAnn {
     // previous process must not apply to the rebuilt index
     IndexTombstones.clear(spark, path)
     val coarse = IvfAnn.fitCentroids(corpus, nCells)
-    val cmicro = coarse.map(_.map(PqAnn.microOf))
+    val cmicro = coarse.map(_.map(microOf))
     val assigned = assignResiduals(corpus, cmicro).persist()
-    val cm = fitResidualCodebooks(assigned.select(col("vec_id"), col("res")))
+    val cm = PqAnn.fitMicro(assigned.select(col("vec_id"), col("res")))
     assigned
       .select(col("vec_id"), col("embedding"), col("cell"),
               PqAnn.encodeUdf(cm)(col("res")).as("codes"))
@@ -310,11 +252,6 @@ object IvfPqAnn {
       .write.mode("overwrite").parquet(s"$path/codebooks")
   }
 
-  /** Top-k search against a persisted index: reconstruct the two tiny
-    * quantizer tables (bounded collects: nCells×dim + M·K·dsub rows),
-    * then prune the code scan to the probed cells — the isin on the
-    * partition column becomes static partition pruning, so only
-    * nProbe/nCells of the standing index is ever read. */
   /** Prepped queries + probed-cell-pruned code scan from a persisted
     * index (the shared head of [[topKFromIndex]]; package-private so
     * the pruned-scan property is plan-assertable — see adcScores). */
@@ -324,7 +261,7 @@ object IvfPqAnn {
     val coarse = Tables.parquet(spark, s"$path/centroids")
       .orderBy("cell").collect()
       .map(_.getSeq[Double](1).toArray)
-    val cmicro = coarse.map(_.map(PqAnn.microOf))
+    val cmicro = coarse.map(_.map(microOf))
     val cbRows = Tables.parquet(spark, s"$path/codebooks").collect()
     val subs = cbRows.map(_.getInt(0)).max + 1
     val ks = cbRows.map(_.getInt(1)).max + 1
@@ -342,6 +279,11 @@ object IvfPqAnn {
     (codes, qp)
   }
 
+  /** Top-k search against a persisted index: reconstruct the two tiny
+    * quantizer tables (bounded collects: nCells×dim + M·K·dsub rows),
+    * then prune the code scan to the probed cells — the isin on the
+    * partition column becomes static partition pruning, so only
+    * nProbe/nCells of the standing index is ever read. */
   def topKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                     queries: DataFrame, k: Int, cand: Int = 200,
                     nProbe: Int = NProbe): DataFrame = {

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.operators.Lloyd.quantCol
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,11 +29,13 @@ import org.apache.spark.sql.functions._
   * to mirror, no ulp risk in any cross-row aggregation; DuckDB replays
   * init -> 3 Lloyd rounds -> encode -> ADC -> re-rank bit-for-bit.
   *
-  * Scale shape: codebook fit shuffles O(M*K*dsub) partial sums per
-  * partition regardless of corpus size (fit on a sample at 100 TB —
-  * Lloyd converges on samples); encoding is map-only; the search is a
-  * broadcast of Q prepped queries against the codes scan — corpus rows
-  * never shuffle until the per-query top-C candidate cut.
+  * Scale shape: the codebook fit is [[Lloyd.fit]] with M blocks — one
+  * stage per round, no shuffle: each partition folds its vectors into
+  * M*K*dsub Long sums, whatever the corpus size, and `treeReduce`
+  * merges them (fit on a sample at 100 TB — Lloyd converges on
+  * samples); encoding is map-only; the search is a broadcast of Q
+  * prepped queries against the codes scan — corpus rows never shuffle
+  * until the per-query top-C candidate cut.
   */
 object PqAnn {
 
@@ -40,117 +43,37 @@ object PqAnn {
   val K = 16         // centroids per subspace (4-bit codes)
   val PqIters = 3    // fixed Lloyd rounds — part of the algorithm identity
 
-  private val QScale = 1000000.0
-
-  /** v5's micro-unit rounding (half away from zero), DuckDB-mirrored. */
-  private[operators] def quantCol(c: Column): Column =
-    transform(c, x =>
-      when(x.cast("double") >= 0, floor(x.cast("double") * QScale + 0.5))
-        .otherwise(-floor(-x.cast("double") * QScale + 0.5)).cast("long"))
-
-  /** Centroid double -> micro-units, same rounding, driver-side. */
-  private[operators] def microOf(v: Double): Long =
-    if (v >= 0) math.floor(v * QScale + 0.5).toLong
-    else -math.floor(-v * QScale + 0.5).toLong
-
-  /** Exact integer squared-L2 between a vector's micro subvector and a
-    * micro-quantized centroid; ties break to the lowest code. */
+  /** Code per subspace: the integer argmin over that subspace's
+    * micro-quantized centroids; ties break to the lowest code. */
   private[operators] def encodeUdf(cm: Array[Array[Array[Long]]]) =
     udf { (rq: Seq[Long]) =>
-      val dsub = rq.length / M
-      (0 until M).map { m =>
-        var best = 0
-        var bestD = Long.MaxValue
-        var k = 0
-        while (k < K) {
-          var d = 0L
-          var i = 0
-          while (i < dsub) {
-            val diff = rq(m * dsub + i) - cm(m)(k)(i)
-            d += diff * diff
-            i += 1
-          }
-          if (d < bestD) { bestD = d; best = k }
-          k += 1
-        }
-        best
-      }
+      val v = rq.toArray
+      val dsub = v.length / M
+      (0 until M).map(m => Lloyd.nearestMicro(cm(m), v, m * dsub, dsub))
     }
 
   /** Per-query ADC table: entry [m*K + k] = exact integer squared-L2
     * between the query's m-th micro subvector and centroid (m, k). */
   private[operators] def qtableUdf(cm: Array[Array[Array[Long]]]) =
     udf { (rq: Seq[Long]) =>
-      val dsub = rq.length / M
-      val out = new Array[Long](M * K)
-      var m = 0
-      while (m < M) {
-        var k = 0
-        while (k < K) {
-          var d = 0L
-          var i = 0
-          while (i < dsub) {
-            val diff = rq(m * dsub + i) - cm(m)(k)(i)
-            d += diff * diff
-            i += 1
-          }
-          out(m * K + k) = d
-          k += 1
-        }
-        m += 1
-      }
-      out
+      val v = rq.toArray
+      val dsub = v.length / M
+      Array.tabulate(M * K)(j => Lloyd.sqDist(v, (j / K) * dsub, dsub, cm(j / K)(j % K)))
     }
 
-  /** Deterministic per-subspace Lloyd fit. Returns micro-quantized
-    * codebooks cm(m)(k)(dsub). Seeds: the K lowest rows of the v4 LCG
-    * hash order, each contributing its m-th subvector to subspace m. */
-  def fitCodebooks(corpus: DataFrame): Array[Array[Array[Long]]] = {
-    // cached across the seed pass + PqIters collect passes (round 13,
-    // the fitCentroids change): uncached, each pass re-ran the scan +
-    // quantization lineage. Same values, one materialization.
-    val rq = corpus.select(col("vec_id"), quantCol(col("embedding")).as("rq"))
-      .cache()
-    val seeds = rq
-      .withColumn("h", (col("vec_id") * lit(1103515245L) + lit(12345L)) % lit(2147483648L))
-      .orderBy(col("h"), col("vec_id"))
-      .limit(K)
-      .select("rq").collect()
-      .map(_.getSeq[Long](0).toArray)
-    val dim = seeds.head.length
-    val dsub = dim / M
-    // centroids as micro-longs; doubles only exist transiently as s/n
-    var cm: Array[Array[Array[Long]]] = Array.tabulate(M, K, dsub) {
-      (m, k, i) => seeds(k)(m * dsub + i)
-    }
-    var it = 0
-    while (it < PqIters) {
-      val enc = encodeUdf(cm)
-      val sums = rq
-        .withColumn("codes", enc(col("rq")))
-        .select(posexplode(col("rq")).as(Seq("pos", "r")), col("codes"))
-        .withColumn("sub", (col("pos") / dsub).cast("int"))
-        .withColumn("cell", element_at(col("codes"), col("sub") + 1))
-        .groupBy("sub", "cell", "pos")
-        .agg(sum("r").as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = cm.map(_.map(_.clone()))
-      sums.foreach { row =>
-        val sub = row.getInt(0)
-        val cell = row.getInt(1)
-        val pos = row.getInt(2) % dsub
-        val s = row.getLong(3)
-        val n = row.getLong(4)
-        // new centroid s/(n*1e6) as double, re-quantized to micro —
-        // the only float op, replayed identically by the oracle
-        next(sub)(cell)(pos) = microOf(s.toDouble / (n.toDouble * QScale))
-      }
-      cm = next
-      it += 1
-    }
-    rq.unpersist(blocking = false)
-    cm
-  }
+  /** Deterministic per-subspace Lloyd fit ([[Lloyd.fit]], M blocks).
+    * Returns micro-quantized codebooks cm(m)(k)(dsub). Seeds: the K
+    * lowest rows of the v4 LCG hash order, each contributing its m-th
+    * subvector to subspace m. Centroids are micro-longs; a double exists
+    * only transiently as each round's s/(n·1e6), the one float op,
+    * replayed identically by the oracle. */
+  def fitCodebooks(corpus: DataFrame): Array[Array[Array[Long]]] =
+    fitMicro(corpus.select(col("vec_id"), quantCol(col("embedding"))))
+
+  /** [[fitCodebooks]] on vectors already in micro-units
+    * (vec_id, array<long>) — IvfPqAnn fits its residuals with it. */
+  private[graft] def fitMicro(vectors: DataFrame): Array[Array[Array[Long]]] =
+    Lloyd.fit(vectors, K, blocks = M, PqIters, Lloyd.MicroMean)(Lloyd.nearestMicro)
 
   /** Full v-family search: encode corpus, ADC-score against `queries`,
     * take `cand` candidates per query, re-rank by exact cosine to `k`.

@@ -57,7 +57,7 @@ object SimilarityQueries {
       s"""list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(list_zip($a, $b),
          |  p -> (CAST(p[1] AS BIGINT) - CAST(p[2] AS BIGINT))
          |     * (CAST(p[1] AS BIGINT) - CAST(p[2] AS BIGINT)))), (x, y) -> x + y)""".stripMargin
-    // PqAnn.microOf: half-away-from-zero micro-unit rounding
+    // Lloyd.microOf: half-away-from-zero micro-unit rounding
     def micro(v: String) =
       s"""CASE WHEN ($v) >= 0 THEN CAST(floor(($v)*1000000.0 + 0.5) AS BIGINT)
          |     ELSE -CAST(floor(-($v)*1000000.0 + 0.5) AS BIGINT) END""".stripMargin
@@ -132,14 +132,6 @@ object SimilarityQueries {
        |WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
   }
 
-  /** DuckDB mirror of the deterministic IVF quantizer + search
-    * (operators.IvfAnn): regenerates the Lloyd centroids from the same
-    * exact arithmetic — integer micro-unit quantization, hash-ranked
-    * init, `LloydIters` unrolled assign/update steps with exact BIGINT
-    * dimension sums — then replays assign→probe→re-rank. Every float
-    * step is a correctly-rounded scalar op or a left-to-right double
-    * fold, so centroids, cells, probes and the final rounded cosines
-    * hash-match bit-for-bit. */
   /** Squared-L2 between quantized micro-units and a centroid double
     * list, left-to-right fold — the exact comparison IvfAnn.assignUdf
     * makes. */
@@ -197,7 +189,16 @@ object SimilarityQueries {
        |$iterCtes""".stripMargin
   }
 
-  /** `candPredicate`: optional SQL boolean over alias `ce` (the
+  /** DuckDB mirror of the deterministic IVF quantizer + search
+    * (operators.IvfAnn): regenerates the Lloyd centroids from the same
+    * exact arithmetic — integer micro-unit quantization, hash-ranked
+    * init, `LloydIters` unrolled assign/update steps with exact BIGINT
+    * dimension sums — then replays assign→probe→re-rank. Every float
+    * step is a correctly-rounded scalar op or a left-to-right double
+    * fold, so centroids, cells, probes and the final rounded cosines
+    * hash-match bit-for-bit.
+    *
+    * `candPredicate`: optional SQL boolean over alias `ce` (the
     * candidate's embeddings row) — the filtered-ANN variant (v10).
     * `deleteWhere` (v18): SQL boolean over alias `a` (the candidate
     * assignment row) naming the TOMBSTONED ids — candidates matching it
@@ -289,8 +290,9 @@ object SimilarityQueries {
     * IVF-PQ-specific step in EXACT BIGINT arithmetic — integer cell
     * assignment, residual subtraction, the residual-space per-subspace
     * Lloyd fit (pqSql's scheme over residuals), encoding, and ADC —
-    * plus v4's cosine cell probing for the query side. */
-  /** `deleteWhere` (v19): SQL boolean over alias `af0` (the coarse
+    * plus v4's cosine cell probing for the query side.
+    *
+    * `deleteWhere` (v19): SQL boolean over alias `af0` (the coarse
     * assignment row) naming the TOMBSTONED ids — matching codes are
     * excluded from ADC scoring (before the `cand` cut), replaying
     * IvfPqAnn's tombstone anti-join exactly. */

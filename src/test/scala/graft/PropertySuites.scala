@@ -398,3 +398,112 @@ object BpeEncodeProps extends Properties("BpeEncode") {
         encodeSeq(word, merges)
     }
 }
+
+/** The shared Lloyd fit against the three per-operator loops it
+  * replaced (kept in test code as IvfReference, PqReference and
+  * IvfPqReference): IVF centroids equal by raw double bits, PQ and
+  * residual-PQ codebooks equal as exact longs. Each corpus is fitted by
+  * the reference once and by `Lloyd.fit` at 1 and at 7 input
+  * partitions. The corpora mix fresh vectors with repeats of a small
+  * pool (ties, and cells left empty when seeds coincide), negative
+  * components and components at ±k.5e-6 (the micro-rounding edge);
+  * IVF corpora run down to a single row, below nCells, and residual
+  * inputs are signed micro-units. Each fit is a few Spark jobs, hence
+  * the small sample count.
+  */
+object LloydProps extends Properties("Lloyd") {
+  import graft.operators.{IvfAnn, IvfPqReference, IvfReference, PqAnn, PqReference}
+  import Gen.{choose, frequency, listOfN, oneOf}
+  import Prop.propBoolean
+  import org.apache.spark.sql.DataFrame
+
+  private lazy val spark = Graft.session(Some(SparkSpec.Master))
+
+  private val component: Gen[Double] = frequency(
+    4 -> choose(-1.0, 1.0),
+    2 -> choose(-40, 40).map(k => (k + 0.5) / 1e6),
+    1 -> choose(-3, 3).map(_.toDouble))
+
+  /** Unique vec_ids, negative ones included, each with a vector that is
+    * either fresh or one of a pool of 1-4 repeated vectors. */
+  private def rows[A](minRows: Int, vector: Gen[Array[A]]): Gen[Seq[(Long, Array[A])]] =
+    for {
+      pool <- choose(1, 4).flatMap(listOfN(_, vector))
+      n <- choose(minRows, 40)
+      vecs <- listOfN(n, frequency(2 -> vector, 3 -> oneOf(pool)))
+      ids <- Gen.listOfN(n, choose(-1000000000L, 1000000000L))
+      if ids.distinct.size == n
+    } yield ids.zip(vecs)
+
+  private def embeddings(dim: Int, minRows: Int) =
+    rows(minRows, listOfN(dim, component).map(_.toArray))
+
+  private def frame(parts: Int, rs: Seq[(Long, Array[Double])]): DataFrame = {
+    val s = spark
+    import s.implicits._
+    s.sparkContext.parallelize(rs.map { case (id, v) => (id, v.toSeq) }, parts)
+      .toDF("vec_id", "embedding")
+  }
+
+  private def resFrame(parts: Int, rs: Seq[(Long, Array[Long])]): DataFrame = {
+    val s = spark
+    import s.implicits._
+    s.sparkContext.parallelize(rs.map { case (id, v) => (id, v.toSeq) }, parts)
+      .toDF("vec_id", "res")
+  }
+
+  private def bits(c: Array[Array[Double]]): Seq[Seq[Long]] =
+    c.toSeq.map(_.toSeq.map(java.lang.Double.doubleToRawLongBits))
+
+  private def longs(c: Array[Array[Array[Long]]]): Seq[Seq[Seq[Long]]] =
+    c.toSeq.map(_.toSeq.map(_.toSeq))
+
+  property("IVF centroids are bit-identical to the reference loop") =
+    Prop.forAllNoShrink(oneOf(3, 8).flatMap(embeddings(_, 1)), choose(1, 16)) { (rs, nCells) =>
+      val want = bits(IvfReference.fitCentroids(frame(4, rs), nCells))
+      Seq(1, 7).forall(p => bits(IvfAnn.fitCentroids(frame(p, rs), nCells)) == want) :|
+        s"${rs.size} rows, nCells $nCells"
+    }
+
+  property("PQ codebooks are identical to the reference loop") =
+    Prop.forAllNoShrink(embeddings(16, PqAnn.K)) { rs =>
+      val want = longs(PqReference.fitCodebooks(frame(4, rs)))
+      Seq(1, 7).forall(p => longs(PqAnn.fitCodebooks(frame(p, rs))) == want) :|
+        s"${rs.size} rows"
+    }
+
+  property("residual PQ codebooks are identical to the reference loop") =
+    Prop.forAllNoShrink(rows(PqAnn.K,
+        listOfN(16, frequency(3 -> choose(-2000000L, 2000000L), 1 -> choose(-3L, 3L)))
+          .map(_.toArray))) { rs =>
+      val want = longs(IvfPqReference.fitResidualCodebooks(resFrame(4, rs)))
+      Seq(1, 7).forall(p => longs(PqAnn.fitMicro(resFrame(p, rs))) == want) :|
+        s"${rs.size} rows"
+    }
+
+  /** Two vectors sharing a cell with a 9e12 component: their micro sums
+    * (about 1.8e19) overflow a Long, so both fits must throw rather than
+    * wrap. The PQ corpus is exactly K rows, all seeds, with the two big
+    * vectors equal so that both land in the lower of their two cells. */
+  property("a Long overflow in the sums throws, as the reference's ANSI sum does") =
+    Prop.lzy {
+      def arithmetic(t: Throwable): Boolean =
+        Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+          .exists(_.isInstanceOf[ArithmeticException])
+      def throwsArithmetic(body: => Any): Boolean =
+        try { body; false } catch { case t: Throwable => arithmetic(t) }
+      val big = Array.fill(16)(0.0).updated(3, 9e12)
+      val rs = Seq(1L -> big, 2L -> big) ++
+        (3L to PqAnn.K.toLong).map(id => id -> Array.fill(16)(id.toDouble / 100))
+      val ivf = frame(2, rs.take(2))
+      val pq = frame(2, rs)
+      Prop.all(
+        throwsArithmetic(IvfReference.fitCentroids(ivf, 1)) :| "IVF reference",
+        throwsArithmetic(IvfAnn.fitCentroids(ivf, 1)) :| "IVF",
+        throwsArithmetic(PqReference.fitCodebooks(pq)) :| "PQ reference",
+        throwsArithmetic(PqAnn.fitCodebooks(pq)) :| "PQ")
+    }
+
+  override def overrideParameters(p: org.scalacheck.Test.Parameters) =
+    p.withMinSuccessfulTests(10)
+}

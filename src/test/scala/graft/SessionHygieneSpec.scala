@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (named by `Graft.configure`) is the only way the engine's functions,
   * rule and strategy reach a session. The production tree ships no dev
   * tools: its only mains are Bench and Verify. Parquet is read through
-  * `Tables.parquet`, so no read runs a schema-inference job. The needles are
+  * `Tables.parquet`, so no read runs a schema-inference job. Every doc
+  * block in src/main documents a definition. The needles are
   * concatenated so this file never matches itself. */
 class SessionHygieneSpec extends AnyFunSuite {
 
@@ -66,5 +67,18 @@ class SessionHygieneSpec extends AnyFunSuite {
     val needle = "listener" + "Bus"
     assertNone(needle, mainOffenders(_.contains(needle)),
       "listener-bus drains belong to the test-tree ScopedStageListener")
+  }
+
+  test("no doc block in src/main directly follows another") {
+    // scaladoc keeps only the last of two adjacent doc blocks, so the
+    // first one silently documents nothing
+    val found = for {
+      (path, text) <- SourceTree.files if path.startsWith("src/main")
+      lines = text.split("\n", -1)
+      i <- 1 until lines.length
+      if lines(i - 1).trim.endsWith("*" + "/") && lines(i).trim.startsWith("/" + "**")
+    } yield s"$path:${i + 1}"
+    assertNone("a doc block right after another", found,
+      "merge the two or move the first onto the definition it documents")
   }
 }
