@@ -19,10 +19,7 @@ import org.apache.spark.sql.SparkSession
   * Honesty control: `Caches.reset` runs before EVERY timed run, so each
   * run pays the query's full cost — the second run can never return a
   * memoized result (NearDupPairs pairs, x18/x19 stage frames) another run
-  * already computed. Side effect vs earlier rounds: x19 no longer
-  * piggybacks on x18's stage memo inside the bench, so its reported time
-  * is its full isolated cost (the production sharing still exists; the
-  * bench now states per-query cost, not marginal cost).
+  * already computed. The bench states per-query cost, not marginal cost.
   */
 object Bench {
   def main(args: Array[String]): Unit = {

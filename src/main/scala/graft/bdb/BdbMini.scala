@@ -167,24 +167,20 @@ object BdbMini {
 
   /** Parquet replica of the fixture at a FIXED path, so an external
     * engine (the driver's DuckDB oracle) can replay queries over exactly
-    * the rows the Spark side computes on. Hardcoded `/tmp` (not
-    * java.io.tmpdir) because the oracle SQL embeds this path as a static
-    * string — both sides derive it from this one constant so they can
-    * never drift. Written once per JVM (content is a pure function of
-    * this file, so a rewrite is always byte-identical; a fresh JVM
-    * rewrites to heal any stale copy from an older binary). */
+    * the rows the Spark side computes on. A hardcoded `/tmp` path, not a
+    * [[graft.Caches.scratch]] one, because the oracle SQL embeds it as a
+    * static string: both sides derive it from this one constant so they
+    * can never drift. Written [[graft.Caches.once]] per JVM; the content
+    * is a pure function of this file. */
   val fixturePath = "/tmp/graft_bdbmini"
 
-  @volatile private var fixtureWritten = false
-
-  def writeFixture(spark: SparkSession): String = synchronized {
-    if (!fixtureWritten) {
+  def writeFixture(spark: SparkSession): String = {
+    graft.Caches.once(fixturePath, "bdbmini fixture") {
       val (g, p, pl, pp, tr) = load(spark)
       Seq("games" -> g, "plays" -> p, "players" -> pl,
           "player_play" -> pp, "tracking" -> tr).foreach { case (name, df) =>
         df.coalesce(1).write.mode("overwrite").parquet(s"$fixturePath/$name")
       }
-      fixtureWritten = true
     }
     fixturePath
   }

@@ -85,29 +85,3 @@ private[operators] object IndexTombstones {
     clear(spark, path)
   }
 }
-
-/** Per-JVM (path → lifecycle) build memo, one instance per index
-  * family: a path built earlier in this JVM is current (index content
-  * is a pure deterministic function of its inputs), and keying by
-  * lifecycle makes the ensure* entry points mutually exclusive per
-  * path — ensureIndex(p) followed by ensureDeletedIndex(..., p) must
-  * not silently skip the delete, so a cross-lifecycle hit throws. */
-private[operators] final class LifecycleMemo(family: String) {
-  private val built = scala.collection.mutable.Map.empty[String, String]
-
-  def ensure(path: String, lifecycle: String)(build: => Unit): Unit =
-    synchronized {
-      built.get(path) match {
-        case Some(l) if l == lifecycle => ()
-        case Some(other) =>
-          throw new IllegalStateException(
-            s"$family index path $path is owned by lifecycle '$other' in " +
-            s"this JVM; refusing '$lifecycle' — one path, one ensure* " +
-            "entry point (use a distinct path per lifecycle)")
-        case None =>
-          build
-          built.put(path, lifecycle)
-          ()
-      }
-    }
-}

@@ -257,7 +257,7 @@ object IvfAnn {
     // drain-then-read contract a reader sees either the old complete
     // generation or the new one, never a half-written directory.
     // (ensureUpdatedIndex also heals any crashed update by rebuilding,
-    // since the memo marks completion last.)
+    // since Caches.once marks a path built only when its build returns.)
     val anchors = centroids
       .select(col("cell"), unitCol(col("centroid")).as("anchor"))
     val deltaStats = assignedDelta
@@ -328,21 +328,12 @@ object IvfAnn {
       publishCellstats(spark, path, recomputed)
     }
 
-  /** Per-JVM (path → lifecycle) build memo — see [[LifecycleMemo]]. */
-  private val memo = new LifecycleMemo("IVF")
-
-  private def ensureLifecycle(path: String, lifecycle: String)
-                             (build: => Unit): Unit =
-    memo.ensure(path, lifecycle)(build)
-
-  /** Build-once guard (IvfPqAnn.ensureIndex's pattern): the index is a
-    * pure deterministic function of (corpus, nCells), so a path built
-    * earlier in this JVM is current; rebuilding per query batch re-pays
-    * the Lloyd fit + full-corpus assignment the standing index exists
-    * to amortize. The per-JVM memo still rewrites once per process,
-    * healing any stale copy an older binary left behind. */
+  /** Build-once guard ([[graft.Caches.once]]): the index is a pure
+    * deterministic function of (corpus, nCells), so a path built earlier
+    * in this JVM is current; rebuilding per query batch re-pays the Lloyd
+    * fit + full-corpus assignment the standing index exists to amortize. */
   def ensureIndex(corpus: DataFrame, nCells: Int, path: String): Unit =
-    ensureLifecycle(path, "build") { buildIndex(corpus, nCells, path) }
+    graft.Caches.once(path, "IVF build") { buildIndex(corpus, nCells, path) }
 
   /** Build-once guard for the build-then-update lifecycle (v16): fit +
     * assign the BASE corpus, then absorb `delta` via [[updateIndex]] —
@@ -351,7 +342,7 @@ object IvfAnn {
     * process appended, so the append below never double-lands. */
   def ensureUpdatedIndex(base: DataFrame, delta: DataFrame, nCells: Int,
                          path: String): Unit =
-    ensureLifecycle(path, "build+update") {
+    graft.Caches.once(path, "IVF build+update") {
       buildIndex(base, nCells, path)
       updateIndex(delta, path)
     }
@@ -363,7 +354,7 @@ object IvfAnn {
     * delete never double-applies across processes. */
   def ensureDeletedIndex(corpus: DataFrame, deleteIds: DataFrame,
                          nCells: Int, path: String): Unit =
-    ensureLifecycle(path, "build+delete") {
+    graft.Caches.once(path, "IVF build+delete") {
       buildIndex(corpus, nCells, path)
       deleteFromIndex(deleteIds, path)
     }

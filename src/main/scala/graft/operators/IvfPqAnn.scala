@@ -160,7 +160,7 @@ object IvfPqAnn {
     // persist: the residual fit and the final encode both read it —
     // uncached, each would re-run the full quantize/assign/residual
     // lineage, contrary to the one-assignment-pass scale claim above.
-    // Evicted by the session's cache clear (Caches.reset); the
+    // Released by the session's cache clear (Caches.reset); the
     // standing-index path (buildIndex) unpersists explicitly.
     val assigned = assignResiduals(corpus, cmicro).persist()
 
@@ -173,30 +173,18 @@ object IvfPqAnn {
       k, cand)
   }
 
-  /** Write-once-per-JVM guard around [[buildIndex]] (the graph-
-    * checkpoint convention): index content is a pure deterministic
-    * function of the corpus, so a rebuild is always byte-identical and
-    * a fresh JVM's rebuild heals any stale copy an older binary left
-    * behind; within a JVM the standing index is built exactly once and
-    * every subsequent search pays only the probe + pruned code scan.
-    * Keyed by (path, lifecycle) like IvfAnn's memo: one path, one
-    * ensure* entry point — a cross-lifecycle hit throws instead of
-    * silently skipping the other lifecycle's extra step. */
-  private val memo = new LifecycleMemo("IVF-PQ")
-
-  private def ensureLifecycle(path: String, lifecycle: String)
-                             (build: => Unit): Unit =
-    memo.ensure(path, lifecycle)(build)
-
+  /** Build-once guard around [[buildIndex]] ([[graft.Caches.once]]):
+    * within a JVM the standing index is built exactly once and every
+    * subsequent search pays only the probe + pruned code scan. */
   def ensureIndex(corpus: DataFrame, path: String,
                   nCells: Int = NCells): Unit =
-    ensureLifecycle(path, "build") { buildIndex(corpus, path, nCells) }
+    graft.Caches.once(path, "IVF-PQ build") { buildIndex(corpus, path, nCells) }
 
   /** Build-once guard for the build-then-delete lifecycle (v19 — the
     * IVF-PQ twin of IvfAnn.ensureDeletedIndex). */
   def ensureDeletedIndex(corpus: DataFrame, deleteIds: DataFrame,
                          path: String, nCells: Int = NCells): Unit =
-    ensureLifecycle(path, "build+delete") {
+    graft.Caches.once(path, "IVF-PQ build+delete") {
       buildIndex(corpus, path, nCells)
       deleteFromIndex(deleteIds, path)
     }

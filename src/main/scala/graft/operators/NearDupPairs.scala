@@ -35,32 +35,16 @@ import org.apache.spark.sql.functions._
   */
 object NearDupPairs {
 
-  /** Memoized per (session, canonicalized input plan): d2, d5 and the x18
-    * pipeline all ask for pairs over semantically identical shingle
-    * frames — one computation serves them all, and only the SMALL pairs
-    * result stays resident (the wide hashed-shingle cache is released as
-    * soon as the pairs materialize).
-    *
-    * Lifetime: entries live until [[evict]] (harness-driven — `graft.Caches
-    * .reset` between bench runs, or at session teardown in tests). In a
-    * long-lived multi-session JVM the map would otherwise accumulate one
-    * small checkpointed frame per (session, plan), and a memoized result
-    * goes stale if the files under the input path change mid-session —
-    * both acceptable for the bench/verify harness this serves, both
-    * released by eviction. */
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession,
-            org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), DataFrame]
-
+  /** Memoized per (session, canonicalized input plan) in
+    * [[graft.Caches.memo]]: d2, d5 and the x18 pipeline all ask for pairs
+    * over semantically identical shingle frames, so one computation
+    * serves them all, and only the SMALL pairs result stays resident (the
+    * wide hashed-shingle cache is released as soon as the pairs
+    * materialize). */
   def over(shingled: DataFrame): DataFrame =
-    memo.getOrElseUpdate(
-      (shingled.sparkSession, shingled.queryExecution.analyzed.canonicalized),
-      compute(shingled))
-
-  /** Drop every memo entry for `session`, releasing the checkpointed pairs
-    * frames for GC/BlockManager cleanup. */
-  def evict(session: org.apache.spark.sql.SparkSession): Unit =
-    memo.keys.filter(_._1 eq session).foreach(memo.remove)
+    graft.Caches.memo(shingled.sparkSession,
+        ("neardup pairs", shingled.queryExecution.analyzed.canonicalized))(
+      compute(shingled))(_ => ())
 
   private def compute(shingled: DataFrame): DataFrame = {
     // `sh` is read three times (inverted index + both verify-join

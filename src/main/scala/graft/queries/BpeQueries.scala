@@ -1,7 +1,5 @@
 package graft.queries
 
-import scala.collection.concurrent.TrieMap
-
 import graft.{QueryDef, Tables}
 import graft.QueryDef.q
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -59,21 +57,13 @@ object BpeQueries {
   private val S = "\u0001" // symbol-open delimiter
   private val E = "\u0002" // symbol-close delimiter
 
-  /** Trained merge table, memoized per (session, dir) like
-    * PipelineQueries' stage frames: x34 and x38 share one training run
-    * within a session; Caches.reset evicts so the bench never hands a
-    * query a model another query paid for. */
-  private val mergeCache =
-    TrieMap.empty[(SparkSession, String), Seq[(Long, String, String, Long)]]
-
-  def evictMerges(session: SparkSession): Unit =
-    mergeCache.keys.filter(_._1 eq session).foreach(mergeCache.remove)
-
   /** One driver-side training loop; per round only the argmax (pattern,
-    * count) row crosses to the driver (bounded collect). */
+    * count) row crosses to the driver (bounded collect). The trained table
+    * is memoized per (session, dir) in [[graft.Caches.memo]]: x34 and x38
+    * share one training run within a session. */
   private def trainMerges(s: SparkSession, dir: String)
       : Seq[(Long, String, String, Long)] =
-    mergeCache.getOrElseUpdate((s, dir), {
+    graft.Caches.memo(s, ("bpe merges", dir)) {
       val words0 = Tables.load(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("word"))
         .filter(length(col("word")) >= 2 &&
@@ -120,40 +110,24 @@ object BpeQueries {
         }
       }
       merges.result()
-    })
+    }(_ => ())
 
   private val MergesCkptVersion = "v1"
-  private val mergesCkptWritten = scala.collection.mutable.Set.empty[String]
 
   /** Write-once parquet checkpoint of the TRAINED merge table (the
-    * GraphQueries shared-frame pattern): a tokenizer is a MODEL —
-    * trained once per corpus release, consumed by every downstream
-    * encode run — so x38 reads the standing copy while x34 keeps
-    * timing the training itself (its session memo IS evicted by
-    * Caches.reset). Content is a pure deterministic function of
-    * (version, rounds, dir), so the oracle — which retrains in SQL —
-    * replays the same table; the per-JVM rewrite heals any stale copy
-    * an older binary left in /tmp. */
+    * GraphQueries shared-frame pattern, [[graft.Caches.once]]): a
+    * tokenizer is a MODEL — trained once per corpus release, consumed by
+    * every downstream encode run — so x38 reads the standing copy while
+    * x34 keeps timing the training itself. Content is a pure
+    * deterministic function of (version, rounds, dir), so the oracle —
+    * which retrains in SQL — replays the same table. */
   private def standingMerges(s: SparkSession, dir: String)
       : Seq[(Long, String, String, Long)] = {
-    // keyed by the FULL md5 of the absolute dir string (a 32-bit
-    // dir.hashCode could collide across two data dirs in one JVM and
-    // silently serve the wrong model), under a per-user subdirectory so
-    // a world-shared /tmp path is neither guessable-by-convention nor
-    // cross-user writable
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val path = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_${System.getProperty("user.name", "anon")}/" +
-      s"bpe_${MergesCkptVersion}_r${Rounds}_$digest"
-    synchronized {
-      if (!mergesCkptWritten.contains(path)) {
-        import s.implicits._
-        trainMerges(s, dir).toDF("round", "left_sym", "right_sym", "freq")
-          .coalesce(1).write.mode("overwrite").parquet(path)
-        mergesCkptWritten.add(path)
-      }
+    val path = graft.Caches.scratch(s"bpe_${MergesCkptVersion}_r$Rounds", dir)
+    graft.Caches.once(path, "bpe merges") {
+      import s.implicits._
+      trainMerges(s, dir).toDF("round", "left_sym", "right_sym", "freq")
+        .coalesce(1).write.mode("overwrite").parquet(path)
     }
     Tables.parquet(s, path).orderBy("round").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))

@@ -135,38 +135,24 @@ object PipelineQueries {
   private val profileCodes: Array[String] = langProfiles.map(_._1).toArray
 
   /** Spark stage frames (raw-features, lang, quality, exact, neardup,
-    * decon), built once per (session, data dir) and shared by x18/x19 —
-    * memoized so the second caller reuses the cached frames instead of
-    * pinning a second copy in storage memory (cache lifetime = session
-    * lifetime, two narrow scalar frames). The near-dup drop rule is
-    * greedy-by-id: a doc is dropped when ANY lower-id survivor is a
-    * J ≥ 0.7 near-dup (same rule on both engines; full transitive
-    * clustering is d5's job).
-    *
-    * Lifetime: until [[evictStages]] (harness-driven via `graft.Caches
-    * .reset`), which unpersists the two pinned frames. Without eviction a
-    * long-lived multi-session JVM accumulates cached frames per (session,
-    * dir) and a memoized build goes stale if the files under `dir` change
-    * mid-session — acceptable for the bench/verify harness, released by
-    * eviction. */
-  private val stageCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (Seq[(String, DataFrame)], DataFrame, Seq[DataFrame])]
+    * decon), built once per (session, data dir) in
+    * [[graft.Caches.memo]] and shared by x18/x19, so the second caller
+    * reuses the two cached frames instead of pinning a second copy in
+    * storage memory. Releasing the memo unpersists them. The near-dup drop
+    * rule is greedy-by-id: a doc is dropped when ANY lower-id survivor is
+    * a J ≥ 0.7 near-dup (same rule on both engines; full transitive
+    * clustering is d5's job). */
+  private def built(s: SparkSession, dir: String)
+      : (Seq[(String, DataFrame)], DataFrame, Seq[DataFrame]) =
+    graft.Caches.memo(s, ("pipeline stages", dir))(buildStages(s, dir))(
+      _._3.foreach(_.unpersist(blocking = false)))
 
   private def stages(s: SparkSession, dir: String): Seq[(String, DataFrame)] =
-    stageCache.getOrElseUpdate((s, dir), buildStages(s, dir))._1
+    built(s, dir)._1
 
   /** One row per RAW doc with `stage_reached` = index of the last stage
     * the doc survives (0_raw=0 .. 5_decon=5) — x19's single-pass input. */
-  private def labeled(s: SparkSession, dir: String): DataFrame =
-    stageCache.getOrElseUpdate((s, dir), buildStages(s, dir))._2
-
-  /** Drop the memoized stage frames for `session` and unpersist the cached
-    * frames they pin (raw-features + shingled survivors). */
-  def evictStages(session: SparkSession): Unit =
-    stageCache.keys.filter(_._1 eq session).foreach { k =>
-      stageCache.remove(k).foreach(_._3.foreach(_.unpersist(blocking = false)))
-    }
+  private def labeled(s: SparkSession, dir: String): DataFrame = built(s, dir)._2
 
   private def buildStages(s: SparkSession, dir: String)
       : (Seq[(String, DataFrame)], DataFrame, Seq[DataFrame]) = {

@@ -806,7 +806,7 @@ object SimilarityQueries {
       ivfSql(nCells = 16, nProbe = 6,
              iters = graft.operators.IvfAnn.LloydIters, k = 5)) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_${dir.hashCode.toHexString}"
+      val path = graft.Caches.scratch("ivf", dir)
       graft.operators.IvfAnn.ensureIndex(
         e.select("vec_id", "embedding"), nCells = 16, path = path)
       graft.operators.IvfAnn.topKFromIndex(s, path,
@@ -901,7 +901,7 @@ object SimilarityQueries {
                pqIters = graft.operators.PqAnn.PqIters,
                k = 5, cand = 200)) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_${dir.hashCode.toHexString}"
+      val path = graft.Caches.scratch("ivfpq", dir)
       graft.operators.IvfPqAnn.ensureIndex(
         e.select("vec_id", "embedding"), path)
       graft.operators.IvfPqAnn.topKFromIndex(s, path,
@@ -960,7 +960,7 @@ object SimilarityQueries {
           Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id"))))
         .filter(col("rnk") <= 5)
         .select("query_id", "neighbor_id")
-      val idxPath = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_${dir.hashCode.toHexString}"
+      val idxPath = graft.Caches.scratch("ivfpq", dir)
       graft.operators.IvfPqAnn.ensureIndex(e.select("vec_id", "embedding"), idxPath)
       val approx = graft.operators.IvfPqAnn.topKFromIndex(s, idxPath,
           queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding"),
@@ -1010,7 +1010,7 @@ object SimilarityQueries {
          |SELECT query_id, neg_id, cos, rnk
          |FROM hard WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      val idxPath = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_${dir.hashCode.toHexString}"
+      val idxPath = graft.Caches.scratch("ivfpq", dir)
       graft.operators.IvfPqAnn.ensureIndex(e.select("vec_id", "embedding"), idxPath)
       val cands = graft.operators.IvfPqAnn.topKFromIndex(s, idxPath,
           queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding"),
@@ -1055,7 +1055,7 @@ object SimilarityQueries {
          |      / (${sqlNorm("q.embedding")} * ${sqlNorm("c.embedding")}) >= 0.3
          |ORDER BY query_id, neighbor_id""".stripMargin) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_${dir.hashCode.toHexString}"
+      val path = graft.Caches.scratch("ivf", dir)
       graft.operators.IvfAnn.ensureIndex(
         e.select("vec_id", "embedding"), nCells = 16, path = path)
       graft.operators.IvfAnn.rangeSearch(s, path,
@@ -1084,7 +1084,7 @@ object SimilarityQueries {
              iters = graft.operators.IvfAnn.LloydIters, k = 5,
              fitWhere = Some("vec_id % 5 <> 0"))) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfupd_${dir.hashCode.toHexString}"
+      val path = graft.Caches.scratch("ivfupd", dir)
       graft.operators.IvfAnn.ensureUpdatedIndex(
         base = e.filter(col("vec_id") % 5 =!= 0).select("vec_id", "embedding"),
         delta = e.filter(col("vec_id") % 5 === 0).select("vec_id", "embedding"),
@@ -1117,7 +1117,7 @@ object SimilarityQueries {
       val e = Tables.load(s, dir, "embeddings")
       // the standing v16 index path: drift is measured against the SAME
       // frozen centroids the update lifecycle serves queries from
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfupd_${dir.hashCode.toHexString}"
+      val path = graft.Caches.scratch("ivfupd", dir)
       graft.operators.IvfAnn.ensureUpdatedIndex(
         base = e.filter(col("vec_id") % 5 =!= 0).select("vec_id", "embedding"),
         delta = e.filter(col("vec_id") % 5 === 0).select("vec_id", "embedding"),
@@ -1170,7 +1170,7 @@ object SimilarityQueries {
              iters = graft.operators.IvfAnn.LloydIters, k = 5,
              deleteWhere = Some("a.vec_id % 7 = 3"))) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfdel_${dir.hashCode.toHexString}"
+      val path = graft.Caches.scratch("ivfdel", dir)
       graft.operators.IvfAnn.ensureDeletedIndex(
         corpus = e.select("vec_id", "embedding"),
         deleteIds = e.filter(col("vec_id") % 7 === 3).select("vec_id"),
@@ -1200,7 +1200,7 @@ object SimilarityQueries {
                k = 5, cand = 200,
                deleteWhere = Some("af0.vec_id % 7 = 3"))) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpqdel_${dir.hashCode.toHexString}"
+      val path = graft.Caches.scratch("ivfpqdel", dir)
       graft.operators.IvfPqAnn.ensureDeletedIndex(
         corpus = e.select("vec_id", "embedding"),
         deleteIds = e.filter(col("vec_id") % 7 === 3).select("vec_id"),

@@ -1,8 +1,8 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Caches, QueryDef, Tables}
 import graft.QueryDef.q
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -13,8 +13,8 @@ import java.nio.file.Files
   *
   * Each query WRITES to a scratch dir then reads its own output back, so
   * the oracle (plain SQL over the original table) also proves the
-  * round-trip is lossless. Scratch dirs are per-(query, sfDir) so
-  * concurrent verify/bench runs don't collide.
+  * round-trip is lossless. Scratch dirs are per-(query, sfDir)
+  * ([[graft.Caches.scratch]]) so runs over two data dirs don't collide.
   *
   * Scale notes: all writes go through Spark's committer — partition-
   * parallel, no driver bottleneck; `repartition(n)` stands in for the
@@ -23,11 +23,6 @@ import java.nio.file.Files
   * partition by the join/filter key, prune to one directory).
   */
 object SourceQueries {
-
-  private def scratch(s: SparkSession, dir: String, name: String): String = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_${name}_${dir.hashCode.toHexString}"
-    base
-  }
 
   /** s26's injected structurally-broken JSONL lines. The single source of
     * truth for BOTH the fixture write and the oracle's quarantined count
@@ -51,7 +46,7 @@ object SourceQueries {
       """SELECT event_id, user_id, value FROM events
         |WHERE user_id BETWEEN 2 AND 6 AND value BETWEEN 50 AND 150
         |ORDER BY event_id""".stripMargin) { (s, dir) =>
-      val path = scratch(s, dir, "s18")
+      val path = Caches.scratch("s18", dir)
       val e = Tables.load(s, dir, "events").select("event_id", "user_id", "value")
       graft.operators.ZOrder.cluster(e, "user_id", "value")
         .write.mode("overwrite").parquet(path)
@@ -65,7 +60,7 @@ object SourceQueries {
     q("s1_csv_roundtrip",
       """SELECT n_nationkey, n_name, n_regionkey FROM nation
         |ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-      val out = scratch(s, dir, "s1")
+      val out = Caches.scratch("s1", dir)
       Tables.load(s, dir, "nation")
         .select("n_nationkey", "n_name", "n_regionkey")
         .write.mode(SaveMode.Overwrite).option("header", "true").csv(out)
@@ -87,7 +82,7 @@ object SourceQueries {
     q("s24_jsonl_roundtrip",
       """SELECT doc_id, text, lang, source, n_chars FROM documents
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val out = scratch(s, dir, "s24")
+      val out = Caches.scratch("s24", dir)
       Tables.load(s, dir, "documents")
         .write.mode(SaveMode.Overwrite).json(out)
       s.read
@@ -105,7 +100,7 @@ object SourceQueries {
       """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag, l_shipdate
         |FROM lineitem WHERE l_orderkey <= 100
         |ORDER BY l_orderkey, l_linenumber, l_quantity, l_returnflag, l_shipdate""".stripMargin) { (s, dir) =>
-      val out = scratch(s, dir, "s25")
+      val out = Caches.scratch("s25", dir)
       Tables.load(s, dir, "lineitem")
         .filter(col("l_orderkey") <= 100)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_shipdate")
@@ -119,7 +114,7 @@ object SourceQueries {
     // file families, read them back with one glob, no manual union
     q("s2_glob_scan",
       """SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey""") { (s, dir) =>
-      val out = scratch(s, dir, "s2")
+      val out = Caches.scratch("s2", dir)
       val r = Tables.load(s, dir, "region").select("r_regionkey", "r_name")
       r.filter(col("r_regionkey") % 2 === 0)
         .write.mode(SaveMode.Overwrite).option("header", "true").csv(s"$out/week_0")
@@ -135,7 +130,7 @@ object SourceQueries {
     // present exactly twice
     q("s3_write_modes",
       """SELECT r_regionkey, 2 AS n_copies FROM region ORDER BY r_regionkey""") { (s, dir) =>
-      val out = scratch(s, dir, "s3")
+      val out = Caches.scratch("s3", dir)
       val r = Tables.load(s, dir, "region").select("r_regionkey")
       r.write.mode(SaveMode.Overwrite).parquet(out)
       r.write.mode(SaveMode.Append).parquet(out)
@@ -152,7 +147,7 @@ object SourceQueries {
         |FROM (SELECT o_orderpriority, o_custkey, sum(o_totalprice) AS total
         |      FROM orders GROUP BY 1, 2)
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-      val out = scratch(s, dir, "s8")
+      val out = Caches.scratch("s8", dir)
       Tables.load(s, dir, "orders")
         .groupBy("o_orderpriority", "o_custkey")
         .agg(sum("o_totalprice").as("total"))
@@ -170,7 +165,7 @@ object SourceQueries {
       """SELECT l_linestatus, count(*) AS n, round(sum(l_quantity), 2) AS qty
         |FROM lineitem WHERE l_returnflag = 'R'
         |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin) { (s, dir) =>
-      val out = scratch(s, dir, "s9")
+      val out = Caches.scratch("s9", dir)
       Tables.load(s, dir, "lineitem")
         .select("l_returnflag", "l_linestatus", "l_quantity")
         .write.mode(SaveMode.Overwrite)
@@ -265,7 +260,7 @@ object SourceQueries {
       val bottom = HtmlSink.renderTable(
         ranked.filter(col("rnk").between(24, 33)), "Orders 24-33")
       val html = HtmlSink.document(HtmlSink.sideBySide(Seq(top, bottom)))
-      HtmlSink.write(s, html, s"${scratch(s, dir, "s11")}/leaderboard.html")
+      HtmlSink.write(s, html, s"${Caches.scratch("s11", dir)}/leaderboard.html")
       import s.implicits._
       Seq(("top10", top), ("rows24_33", bottom), ("combined", html))
         .toDF("section", "html").orderBy("section")
@@ -430,7 +425,7 @@ object SourceQueries {
         |       round(sum(CASE WHEN event_type = 'click' THEN value * 2
         |                      ELSE value END), 2) AS total
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
-      val path = scratch(s, dir, "s15")
+      val path = Caches.scratch("s15", dir)
       val e = Tables.load(s, dir, "events")
       e.write.mode("overwrite").partitionBy("event_type").parquet(path)
       val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
@@ -543,7 +538,7 @@ object SourceQueries {
       """SELECT r_regionkey, r_name,
         |       CASE WHEN r_regionkey < 3 THEN NULL ELSE 'v2' END AS batch_tag
         |FROM region ORDER BY r_regionkey""".stripMargin) { (s, dir) =>
-      val out = scratch(s, dir, "s20")
+      val out = Caches.scratch("s20", dir)
       val r = Tables.load(s, dir, "region")
       r.filter(col("r_regionkey") < 3).select("r_regionkey", "r_name")
         .write.mode(SaveMode.Overwrite).parquet(out)
@@ -563,8 +558,8 @@ object SourceQueries {
     q("s21_compaction",
       """SELECT o_orderpriority, count(*) AS n FROM orders
         |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-      val frag = scratch(s, dir, "s21frag")
-      val opt = scratch(s, dir, "s21opt")
+      val frag = Caches.scratch("s21frag", dir)
+      val opt = Caches.scratch("s21opt", dir)
       Tables.load(s, dir, "orders").select("o_orderkey", "o_orderpriority")
         .repartition(64) // the incremental-append fragmentation
         .write.mode(SaveMode.Overwrite).parquet(frag)
@@ -585,7 +580,7 @@ object SourceQueries {
     // per-file error isolation, not a driver-side retry loop.
     q("s22_corrupt_tolerance",
       """SELECT n_nationkey, n_name FROM nation ORDER BY n_nationkey""") { (s, dir) =>
-      val out = scratch(s, dir, "s22")
+      val out = Caches.scratch("s22", dir)
       val good = Tables.load(s, dir, "nation").select("n_nationkey", "n_name")
       good.repartition(2)
         .write.mode(SaveMode.Overwrite).parquet(out)
@@ -619,7 +614,7 @@ object SourceQueries {
          |SELECT '_corrupt' AS lang, CAST(0 AS BIGINT) AS n_good,
          |       CAST(${s26BadLines.size} AS BIGINT) AS n_bad
          |ORDER BY lang""".stripMargin) { (s, dir) =>
-      val out = scratch(s, dir, "s26")
+      val out = Caches.scratch("s26", dir)
       Tables.load(s, dir, "documents")
         .write.mode(SaveMode.Overwrite).json(out)
       java.nio.file.Files.write(

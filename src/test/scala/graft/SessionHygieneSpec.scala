@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * (named by `Graft.configure`) is the only way the engine's functions,
   * rule and strategy reach a session. The production tree ships no dev
   * tools: its only mains are Bench and Verify. Parquet is read through
-  * `Tables.parquet`, so no read runs a schema-inference job. Every doc
-  * block in src/main documents a definition. The needles are
-  * concatenated so this file never matches itself. */
+  * `Tables.parquet`, so no read runs a schema-inference job. Engine-owned
+  * state (memos, build-once artifacts, scratch paths) is kept only by
+  * `Caches`. Every doc block in src/main documents a definition. The
+  * needles are concatenated so this file never matches itself. */
 class SessionHygieneSpec extends AnyFunSuite {
 
   private def assertNone(what: String, offenders: Seq[String], why: String): Unit =
@@ -61,6 +62,13 @@ class SessionHygieneSpec extends AnyFunSuite {
       m <- raw.findAllMatchIn(text) if !exempt(name -> m.matched)
     } yield s"$path:${text.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
     assertNone("a raw parquet read", found, "read through Tables.parquet")
+  }
+
+  test("src/main keeps engine state only in Caches.scala") {
+    Seq("java.io." + "tmpdir", "hashCode." + "toHexString", "concurrent." + "TrieMap").foreach { needle =>
+      assertNone(needle, mainOffenders(_.contains(needle), Set("Caches.scala")),
+        "use Caches.memo, Caches.once and Caches.scratch")
+    }
   }
 
   test("src/main never reaches the private[spark] listener bus") {

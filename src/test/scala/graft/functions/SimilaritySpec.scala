@@ -331,7 +331,7 @@ class SimilaritySpec extends SparkSpec {
       import org.apache.spark.sql.functions._
       val dir = s"/root/testdata/$sf"
       val e = graft.Tables.load(spark, dir, "embeddings")
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_${dir.hashCode.toHexString}"
+      val path = graft.Caches.scratch("ivf", dir)
       graft.operators.IvfAnn.ensureIndex(
         e.select("vec_id", "embedding"), nCells = 16, path = path)
       val queries = e.filter(col("vec_id") < 8)
@@ -419,7 +419,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
     val e = graft.Tables.load(spark, dir, "embeddings")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_${dir.hashCode.toHexString}"
+    val path = graft.Caches.scratch("ivf", dir)
     graft.operators.IvfAnn.ensureIndex(
       e.select("vec_id", "embedding"), nCells = 16, path = path)
     val queries = e.filter(col("vec_id") < 8)
@@ -446,7 +446,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
     val e = graft.Tables.load(spark, dir, "embeddings")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfupd_${dir.hashCode.toHexString}"
+    val path = graft.Caches.scratch("ivfupd", dir)
     graft.operators.IvfAnn.ensureUpdatedIndex(
       base = e.filter(col("vec_id") % 5 =!= 0).select("vec_id", "embedding"),
       delta = e.filter(col("vec_id") % 5 === 0).select("vec_id", "embedding"),

@@ -50,16 +50,13 @@ class SourceQueriesSpec extends SparkSpec {
 
   test("compaction rewrites 64 fragments into 4 files losslessly") {
     graft.SparkEntry.queries("s21_compaction")(spark, sfDir).collect()
-    val tmp = System.getProperty("java.io.tmpdir")
-    def parts(tag: String): Int = {
-      val d = new java.io.File(
-        s"$tmp/graft_${tag}_${sfDir.hashCode.toHexString}")
-      d.listFiles().count(_.getName.endsWith(".parquet"))
-    }
+    def parts(tag: String): Int =
+      new java.io.File(graft.Caches.scratch(tag, sfDir))
+        .listFiles().count(_.getName.endsWith(".parquet"))
     assert(parts("s21frag") == 64)
     assert(parts("s21opt") == 4)
-    val a = spark.read.parquet(s"$tmp/graft_s21frag_${sfDir.hashCode.toHexString}")
-    val b = spark.read.parquet(s"$tmp/graft_s21opt_${sfDir.hashCode.toHexString}")
+    val a = spark.read.parquet(graft.Caches.scratch("s21frag", sfDir))
+    val b = spark.read.parquet(graft.Caches.scratch("s21opt", sfDir))
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 

@@ -32,7 +32,7 @@ class HtmlSinkSpec extends SparkSpec {
     assert(rows("combined").contains("display: flex"))
     assert(rows("combined").startsWith("<!DOCTYPE html>"))
     // file landed on disk
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_s11_${sfDir.hashCode.toHexString}"
+    val base = graft.Caches.scratch("s11", sfDir)
     val f = new java.io.File(s"$base/leaderboard.html")
     assert(f.exists && f.length > 0)
     // top-10 really is the global top by price: rank 1 row appears first

@@ -476,7 +476,7 @@ object ExplainDump {
       "CartesianProduct (the bound test is a broadcast join against " +
       "nCells rows). The narrow shape keeps the isin — next entry.",
       { val e = graft.Tables.load(spark, dir, "embeddings")
-        val p = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_${dir.hashCode.toHexString}"
+        val p = graft.Caches.scratch("ivf", dir)
         graft.operators.IvfAnn.ensureIndex(e.select("vec_id", "embedding"), 16, p)
         graft.operators.IvfAnn.rangeSearch(spark, p,
           e.filter(org.apache.spark.sql.functions.col("vec_id") < 8)
@@ -553,7 +553,7 @@ object ExplainDump {
       // the last plan-visible frame, where the tombstone anti-join and
       // the partition pruning both live
       graft.SparkEntry.queries("v19_ann_ivfpq_delete")(spark, dir).count()
-      val idxPath = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpqdel_${dir.hashCode.toHexString}"
+      val idxPath = graft.Caches.scratch("ivfpqdel", dir)
       val e = graft.Tables.load(spark, dir, "embeddings")
       val (codes, qp) = graft.operators.IvfPqAnn.indexedScan(spark, idxPath,
         e.filter(org.apache.spark.sql.functions.col("vec_id") < 8)
