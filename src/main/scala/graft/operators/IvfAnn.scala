@@ -21,23 +21,12 @@ import org.apache.spark.sql.functions._
   *
   * The quantizer is DETERMINISTIC AND ENGINE-PORTABLE — the same trick
   * that made v5's SQ8 quantizer and v3's hyperplanes oracle-replayable:
-  *  - vectors are quantized to exact integer micro-units
-  *    r_i = round_half_away(x_i · 1e6) (float→double widening is exact,
-  *    the ×1e6 and the away-from-zero round are correctly-rounded
-  *    single ops on both engines);
-  *  - init picks the nCells lowest rows under the integer hash
-  *    (vec_id·1103515245 + 12345) mod 2^31 (tie: vec_id) — a
-  *    deterministic pseudo-random sample both engines can rank;
-  *  - each Lloyd step assigns by squared-L2 between v_i = r_i/1e6 and
-  *    the centroid (a left-to-right double fold — identical on both
-  *    engines), then updates centroids from EXACT integer per-dimension
-  *    sums: Σr_i is order-independent BIGINT math (|Σr| < 2^53), so the
-  *    new centroid double S/(n·1e6) is one correctly-rounded division;
-  *  - a fixed iteration count (no convergence test on floats), empty
-  *    cells carry their previous centroid.
-  * DuckDB regenerates the centroids from the same arithmetic and
-  * replays assign→probe→re-rank bit-for-bit (v4/v8 oracle SQL in
-  * SimilarityQueries).
+  * [[Lloyd.fit]] with one block and double means, whose every float step
+  * is a correctly-rounded scalar op or a left-to-right fold (the
+  * arithmetic is documented there), and a fixed round count instead of
+  * a convergence test on floats. DuckDB regenerates the centroids with
+  * [[Lloyd.fitSql]] and [[distSql]] and replays assign→probe→re-rank
+  * bit for bit (v4/v8 oracle SQL in SimilarityQueries).
   *
   * Scale shape: candidate selection is an equi-join on `cell` — the
   * shuffle key cardinality is nCells and Lloyd balances occupancy, so
@@ -111,6 +100,13 @@ object IvfAnn {
     }
     (best, bestD)
   }
+
+  /** SQL twin of [[nearest]]'s distance: squared-L2 between a BIGINT
+    * micro-unit list and a DOUBLE centroid list, same fold order. */
+  private[graft] def distSql(rq: String, c: String): String =
+    s"""list_reduce(list_prepend(0.0::DOUBLE, list_transform(list_zip($rq, $c),
+       |  p -> (CAST(p[1] AS DOUBLE)/1000000.0 - CAST(p[2] AS DOUBLE))
+       |     * (CAST(p[1] AS DOUBLE)/1000000.0 - CAST(p[2] AS DOUBLE)))), (x, y) -> x + y)""".stripMargin
 
   private def assignUdf(cents: Array[Array[Double]]) =
     udf { (rq: Seq[Long]) => nearest(cents, rq.toArray)._1 }

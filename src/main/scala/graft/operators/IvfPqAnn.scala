@@ -18,15 +18,14 @@ import org.apache.spark.sql.functions._
   * IVF-PQ beats flat PQ at equal code size.
   *
   * Engine portability (what makes v11 oracle-replayable): the coarse
-  * quantizer is `IvfAnn.fitCentroids` — already deterministic and
-  * DuckDB-replayed by v4/v8 — and every IVF-PQ-specific step is EXACT
-  * INTEGER arithmetic in micro-units: the final cell assignment is
-  * integer squared-L2 against the MICRO-QUANTIZED centroids (cmicro),
-  * residuals are BIGINT subtractions, the per-subspace Lloyd fit reuses
-  * `PqAnn`'s integer scheme on those residuals, and ADC sums are BIGINT.
-  * The only float ops anywhere are the coarse Lloyd's s/(n·1e6) means
-  * (correctly-rounded scalars, v4's argument) and the query-side cell
-  * probing by cosine (left-to-right double fold, v4's probe).
+  * quantizer is `IvfAnn.fitCentroids` and the residual codebooks are
+  * `PqAnn.fitMicro`, both [[Lloyd.fit]], which the oracle replays with
+  * [[Lloyd.fitSql]]. Every IVF-PQ-specific step is EXACT INTEGER
+  * arithmetic in micro-units: the final cell assignment is integer
+  * squared-L2 against the MICRO-QUANTIZED centroids (cmicro), residuals
+  * are BIGINT subtractions, and ADC sums are BIGINT. The only float ops
+  * outside the coarse fit are the query-side cell probing by cosine
+  * (left-to-right double fold, v4's probe).
   *
   * Scale shape at 100 TB: the index is nCells directories of 8-byte
   * codes — the corpus never shuffles after the one assignment pass;
@@ -50,7 +49,8 @@ object IvfPqAnn {
   val NProbe = 8
 
   /** Integer argmin cell over micro-quantized centroids; ties to the
-    * lowest cell id — the comparison the oracle replays with idist. */
+    * lowest cell id — the comparison the oracle replays with
+    * Lloyd.sqDistSql. */
   private def assignIntUdf(cmicro: Array[Array[Long]]) =
     udf { (rq: Seq[Long]) =>
       val v = rq.toArray
@@ -87,10 +87,9 @@ object IvfPqAnn {
         .map(_._1)
     }
 
-  /** Quantize → integer cell assignment → BIGINT residual (ONE pass
-    * over the corpus — callers persist the result so the residual
-    * codebook fit and the final encode read the same materialization
-    * instead of re-running the lineage each). */
+  /** Quantize → integer cell assignment → BIGINT residual: one
+    * map-only pass over the corpus. The residual codebook fit and the
+    * encode both read it. */
   private def assignResiduals(corpus: DataFrame,
                               cmicro: Array[Array[Long]]): DataFrame =
     corpus
@@ -157,12 +156,10 @@ object IvfPqAnn {
     val coarse = IvfAnn.fitCentroids(corpus, nCells)
     val cmicro = coarse.map(_.map(microOf))
 
-    // persist: the residual fit and the final encode both read it —
-    // uncached, each would re-run the full quantize/assign/residual
-    // lineage, contrary to the one-assignment-pass scale claim above.
-    // Released by the session's cache clear (Caches.reset); the
-    // standing-index path (buildIndex) unpersists explicitly.
-    val assigned = assignResiduals(corpus, cmicro).persist()
+    // not persisted: Lloyd.fit caches the residuals it reads and
+    // releases them, so the encode re-runs one map-only pass. The
+    // standing-index path (buildIndex) persists and unpersists its own.
+    val assigned = assignResiduals(corpus, cmicro)
 
     val cm = PqAnn.fitMicro(assigned.select(col("vec_id"), col("res")))
     val codes = assigned

@@ -10,9 +10,8 @@ import org.apache.spark.sql.functions._
   * score queries against CODES, not vectors.
   *
   * Build: split the 64-dim embedding into M=8 contiguous 8-dim
-  * subspaces; per subspace, fit K=16 centroids with the same
-  * deterministic Lloyd scheme as `IvfAnn` (seeded arithmetic init, fixed
-  * iteration count, exact integer dimension sums). Each vector encodes
+  * subspaces; per subspace, fit K=16 centroids with the deterministic
+  * [[Lloyd.fit]] that `IvfAnn` uses, with M blocks. Each vector encodes
   * as 8 nibbles — a 64-bit code replacing 256 bytes of floats, the
   * memory collapse that lets a 100 TB corpus's index live in RAM.
   *
@@ -23,11 +22,11 @@ import org.apache.spark.sql.functions._
   * re-rank by exact cosine, the family's contract.
   *
   * Engine portability (what makes v9 oracle-replayable, one step past
-  * v4): centroids are re-quantized to integer micro-units at every use
-  * site, so BOTH the Lloyd assignment and the ADC scoring are EXACT
-  * INTEGER arithmetic — sums of (micro - micro)^2 longs. No float fold
-  * to mirror, no ulp risk in any cross-row aggregation; DuckDB replays
-  * init -> 3 Lloyd rounds -> encode -> ADC -> re-rank bit-for-bit.
+  * v4): centroids are re-quantized to integer micro-units
+  * ([[Lloyd.MicroMean]]), so BOTH the Lloyd assignment and the ADC
+  * scoring are EXACT INTEGER arithmetic. No float fold to mirror, no
+  * ulp risk in any cross-row aggregation; the oracle replays the fit
+  * with [[Lloyd.fitSql]], then encode -> ADC -> re-rank, bit for bit.
   *
   * Scale shape: the codebook fit is [[Lloyd.fit]] with M blocks — one
   * stage per round, no shuffle: each partition folds its vectors into
@@ -62,11 +61,7 @@ object PqAnn {
     }
 
   /** Deterministic per-subspace Lloyd fit ([[Lloyd.fit]], M blocks).
-    * Returns micro-quantized codebooks cm(m)(k)(dsub). Seeds: the K
-    * lowest rows of the v4 LCG hash order, each contributing its m-th
-    * subvector to subspace m. Centroids are micro-longs; a double exists
-    * only transiently as each round's s/(n·1e6), the one float op,
-    * replayed identically by the oracle. */
+    * Returns micro-quantized codebooks cm(m)(k)(dsub). */
   def fitCodebooks(corpus: DataFrame): Array[Array[Array[Long]]] =
     fitMicro(corpus.select(col("vec_id"), quantCol(col("embedding"))))
 

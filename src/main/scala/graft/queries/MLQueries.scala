@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.QueryDef.{q, qRowsOnly}
 import graft.ml.Pipelines
+import graft.operators.Lloyd
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.9 — ML surface queries. The two deterministic feature
@@ -164,12 +165,9 @@ object MLQueries {
     // quantization bound).
     q("m10_pca", McolOracle.sql) { (s, dir) =>
       val emb = Tables.load(s, dir, "embeddings")
-      def quant(c: org.apache.spark.sql.Column) =
-        when(c.cast("double") >= 0, floor(c.cast("double") * 1000000.0 + 0.5))
-          .otherwise(-floor(-c.cast("double") * 1000000.0 + 0.5)).cast("long")
       val d = McolOracle.Dims
       val base = emb.select((1 to d).map(i =>
-        quant(element_at(col("embedding"), i)).as(s"r$i")): _*)
+        Lloyd.microCol(element_at(col("embedding"), i)).as(s"r$i")): _*)
       val aggs = Seq(count(lit(1)).as("n")) ++
         (1 to d).map(i => sum(col(s"r$i")).as(s"s$i")) ++
         (for { i <- 1 to d; j <- i to d }
@@ -195,12 +193,8 @@ object MLQueries {
   private object McolOracle {
     val Dims = 16
     val sql: String = {
-      val micro =
-        """CASE WHEN CAST(x AS DOUBLE) >= 0
-          |     THEN CAST(floor(CAST(x AS DOUBLE)*1000000.0 + 0.5) AS BIGINT)
-          |     ELSE -CAST(floor(-CAST(x AS DOUBLE)*1000000.0 + 0.5) AS BIGINT) END""".stripMargin
       s"""WITH r AS (
-         |  SELECT list_transform(embedding[1:$Dims], x -> $micro) AS rq
+         |  SELECT ${Lloyd.quantSql(s"embedding[1:$Dims]")} AS rq
          |  FROM embeddings),
          |cells AS (
          |  SELECT CAST(i.i AS INT) AS i, CAST(j.j AS INT) AS j,

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.QueryDef.{q, qRowsOnly}
+import graft.operators.{IvfAnn, Lloyd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,162 +42,117 @@ object SimilarityQueries {
     * boundary. */
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 
-  /** DuckDB mirror of the product-quantization ANN (operators.PqAnn):
-    * regenerates the per-subspace codebooks (hash-ranked seeds, PqIters
-    * unrolled Lloyd rounds) and replays encode → ADC → re-rank. One step
-    * MORE portable than ivfSql: centroids re-quantize to integer
-    * micro-units at every use site, so assignment and ADC scoring are
-    * pure BIGINT arithmetic — the only float op anywhere is the
-    * per-round s/(n·1e6) centroid mean, a correctly-rounded scalar both
-    * engines compute identically. */
-  private def pqSql(m: Int, kCents: Int, iters: Int, k: Int, cand: Int,
-                    dim: Int = 64): String = {
-    val dsub = dim / m
-    // exact integer squared-L2 between micro-unit BIGINT lists
-    def idist(a: String, b: String) =
-      s"""list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(list_zip($a, $b),
-         |  p -> (CAST(p[1] AS BIGINT) - CAST(p[2] AS BIGINT))
-         |     * (CAST(p[1] AS BIGINT) - CAST(p[2] AS BIGINT)))), (x, y) -> x + y)""".stripMargin
-    // Lloyd.microOf: half-away-from-zero micro-unit rounding
-    def micro(v: String) =
-      s"""CASE WHEN ($v) >= 0 THEN CAST(floor(($v)*1000000.0 + 0.5) AS BIGINT)
-         |     ELSE -CAST(floor(-($v)*1000000.0 + 0.5) AS BIGINT) END""".stripMargin
-    val iterCtes = (1 to iters).map { it =>
-      s"""a$it AS (
-         |  SELECT vec_id, sub, cell FROM (
-         |    SELECT r.vec_id, r.sub, c.cell,
-         |           row_number() OVER (PARTITION BY r.vec_id, r.sub
-         |             ORDER BY ${idist("r.rqm", "c.cm")}, c.cell) AS rn
-         |    FROM rqs r JOIN c${it - 1} c ON r.sub = c.sub) WHERE rn = 1),
-         |s$it AS (
-         |  SELECT a.sub, a.cell, i, sum(r.rqm[i + 1]) AS s, count(*) AS n
-         |  FROM a$it a JOIN rqs r USING (vec_id, sub) CROSS JOIN range($dsub) t(i)
-         |  GROUP BY a.sub, a.cell, i),
-         |n$it AS (
-         |  SELECT sub, cell,
-         |         list(${micro("CAST(s AS DOUBLE)/(CAST(n AS DOUBLE)*1000000.0)")} ORDER BY i) AS cm
-         |  FROM s$it GROUP BY sub, cell),
-         |c$it AS (
-         |  SELECT p.sub, p.cell, coalesce(nn.cm, p.cm) AS cm
-         |  FROM c${it - 1} p LEFT JOIN n$it nn USING (sub, cell))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH rq AS (
-       |  SELECT vec_id,
-       |         list_transform(embedding, x -> CASE WHEN CAST(x AS DOUBLE) >= 0
-       |           THEN CAST(floor(CAST(x AS DOUBLE)*1000000.0 + 0.5) AS BIGINT)
-       |           ELSE -CAST(floor(-CAST(x AS DOUBLE)*1000000.0 + 0.5) AS BIGINT) END) AS rq
-       |  FROM embeddings),
-       |rqs AS (
-       |  SELECT vec_id, CAST(t.m AS INT) AS sub,
-       |         rq[t.m*$dsub + 1 : t.m*$dsub + $dsub] AS rqm
-       |  FROM rq CROSS JOIN range($m) t(m)),
-       |c0 AS (
-       |  SELECT CAST(t.m AS INT) AS sub, CAST(rn - 1 AS INT) AS cell,
-       |         rq[t.m*$dsub + 1 : t.m*$dsub + $dsub] AS cm
-       |  FROM (SELECT rq, row_number() OVER (
-       |          ORDER BY (vec_id*1103515245 + 12345) % 2147483648, vec_id) AS rn
-       |        FROM rq)
-       |  CROSS JOIN range($m) t(m)
-       |  WHERE rn <= $kCents),
-       |$iterCtes,
-       |af AS (
-       |  SELECT vec_id, sub, cell FROM (
-       |    SELECT r.vec_id, r.sub, c.cell,
-       |           row_number() OVER (PARTITION BY r.vec_id, r.sub
-       |             ORDER BY ${idist("r.rqm", "c.cm")}, c.cell) AS rn
-       |    FROM rqs r JOIN c$iters c ON r.sub = c.sub) WHERE rn = 1),
-       |dt AS (
-       |  SELECT q.vec_id AS query_id, c.sub, c.cell, ${idist("q.rqm", "c.cm")} AS d
-       |  FROM rqs q JOIN c$iters c ON q.sub = c.sub WHERE q.vec_id < 8),
-       |adc AS (
-       |  SELECT dt.query_id, af.vec_id AS neighbor_id, sum(dt.d) AS adc
-       |  FROM af JOIN dt ON af.sub = dt.sub AND af.cell = dt.cell
-       |                 AND af.vec_id <> dt.query_id
-       |  GROUP BY dt.query_id, af.vec_id),
-       |cand AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |              ORDER BY adc, neighbor_id) AS crn
-       |    FROM adc) WHERE crn <= $cand),
-       |rerank AS (
+  /** DuckDB-side mirror of dotD/normD (double fold, same order). */
+  private def sqlDot(a: String, b: String) =
+    s"""list_reduce(list_prepend(0.0::DOUBLE,
+       |  list_transform(list_zip($a, $b),
+       |    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), (x, y) -> x + y)""".stripMargin
+  private def sqlNorm(a: String) =
+    s"""sqrt(list_reduce(list_prepend(0.0::DOUBLE,
+       |  list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (x, y) -> x + y))""".stripMargin
+
+  /** Top `k` rows of `rel` (query_id, neighbor_id, cos) per query, by
+    * cos, ties to the lower neighbor_id. */
+  private def topkSql(rel: String, k: Int): String =
+    s"""SELECT query_id, neighbor_id, cos, rnk FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY query_id
+       |            ORDER BY cos DESC, neighbor_id) AS rnk
+       |  FROM $rel)
+       |WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
+
+  /** The ANN oracles' tail: the CTE `cand` (query_id, neighbor_id)
+    * re-ranked by exact rounded cosine, top `k` per query. */
+  private def rerankSql(k: Int): String =
+    s"""rerank AS (
        |  SELECT cand.query_id, cand.neighbor_id,
        |         round(${sqlDot("qv.embedding", "cv.embedding")}
        |           / (${sqlNorm("qv.embedding")} * ${sqlNorm("cv.embedding")}), 6) AS cos
        |  FROM cand
        |  JOIN embeddings cv ON cv.vec_id = cand.neighbor_id
        |  JOIN embeddings qv ON qv.vec_id = cand.query_id)
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |            ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM rerank)
-       |WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
-  }
+       |${topkSql("rerank", k)}""".stripMargin
 
-  /** Squared-L2 between quantized micro-units and a centroid double
-    * list, left-to-right fold — the exact comparison IvfAnn.assignUdf
-    * makes. */
-  private def ivfDist(rq: String, c: String) =
-    s"""list_reduce(list_prepend(0.0::DOUBLE, list_transform(list_zip($rq, $c),
-       |  p -> (CAST(p[1] AS DOUBLE)/1000000.0 - CAST(p[2] AS DOUBLE))
-       |     * (CAST(p[1] AS DOUBLE)/1000000.0 - CAST(p[2] AS DOUBLE)))), (x, y) -> x + y)""".stripMargin
+  /** v1's exact brute-force top-5 oracle — also the GROUND TRUTH side
+    * of the v13 recall report. */
+  private lazy val bruteTopkSql: String =
+    s"""WITH scored AS (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |         round(${sqlDot("q.embedding", "c.embedding")}
+       |           / (${sqlNorm("q.embedding")} * ${sqlNorm("c.embedding")}), 6) AS cos
+       |  FROM embeddings q JOIN embeddings c ON q.vec_id < 8 AND c.vec_id <> q.vec_id)
+       |${topkSql("scored", 5)}""".stripMargin
 
-  /** The shared Lloyd-replay CTE prefix (`rq`, `c0`, unrolled
-    * assign/update rounds ending at `c<iters>`) — the deterministic
-    * quantizer regeneration every IVF-family oracle starts from
-    * (ivfSql's search replay, ivfDriftSql's error replay).
-    * `fitWhere`: the fit — init sample + every iteration — runs over
-    * this subset only (the frozen-quantizer contract, v16/v17); None =
-    * fit on everything (v4/v8). */
-  private def lloydCtes(nCells: Int, iters: Int, dim: Int,
-                        fitWhere: Option[String]): String = {
-    val fit = fitWhere.map(w => s"(SELECT * FROM rq WHERE $w)").getOrElse("rq")
-    // AS MATERIALIZED on the per-iteration CTEs (the ivfpqSql
-    // convention): without it DuckDB may inline a c$it that is
-    // referenced twice (next iteration's assignment + carry-forward),
-    // recomputing the whole prior chain — at 60k vectors (sf3) the
-    // replicated intermediates exceeded a 75 GB spill disk. Pure
-    // evaluation hint; results are bit-identical.
-    val iterCtes = (1 to iters).map { it =>
-      s"""a$it AS MATERIALIZED (
-         |  SELECT vec_id, rq, cell FROM (
-         |    SELECT r.vec_id, r.rq, c.cell,
-         |           row_number() OVER (PARTITION BY r.vec_id
-         |             ORDER BY ${ivfDist("r.rq", "c.c")}, c.cell) AS rn
-         |    FROM $fit r CROSS JOIN c${it - 1} c) WHERE rn = 1),
-         |s$it AS (
-         |  SELECT cell, i, sum(rq[i + 1]) AS s, count(*) AS n
-         |  FROM a$it CROSS JOIN range($dim) t(i) GROUP BY cell, i),
-         |n$it AS (
-         |  SELECT cell, list(CAST(s AS DOUBLE)/(CAST(n AS DOUBLE)*1000000.0) ORDER BY i) AS c
-         |  FROM s$it GROUP BY cell),
-         |c$it AS MATERIALIZED (
-         |  SELECT p.cell, coalesce(nn.c, p.c) AS c
-         |  FROM c${it - 1} p LEFT JOIN n$it nn USING (cell))""".stripMargin
-    }.mkString(",\n")
+  /** `rq` (vec_id, rq): the micro-unit corpus the ANN oracles fit on. */
+  private lazy val rqCte: String =
     s"""rq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |         list_transform(embedding, x -> CASE WHEN CAST(x AS DOUBLE) >= 0
-       |           THEN CAST(floor(CAST(x AS DOUBLE)*1000000.0 + 0.5) AS BIGINT)
-       |           ELSE -CAST(floor(-CAST(x AS DOUBLE)*1000000.0 + 0.5) AS BIGINT) END) AS rq
-       |  FROM embeddings),
-       |c0 AS (
-       |  SELECT CAST(rn - 1 AS INT) AS cell,
-       |         list_transform(rq, r -> CAST(r AS DOUBLE)/1000000.0) AS c
-       |  FROM (SELECT rq, row_number() OVER (
-       |          ORDER BY (vec_id*1103515245 + 12345) % 2147483648, vec_id) AS rn
-       |        FROM $fit)
-       |  WHERE rn <= $nCells),
-       |$iterCtes""".stripMargin
+       |  SELECT vec_id, ${Lloyd.quantSql("embedding")} AS rq
+       |  FROM embeddings)""".stripMargin
+
+  /** `rq`, its one-block slicing `rqb` and the coarse IVF fit on it,
+    * ending at the centroids `c<iters>` (IvfAnn.fitCentroids).
+    * `fitWhere`: the fit (seeds and every round) runs over this subset
+    * of `rqb` only, the frozen-quantizer contract of v16/v17; None fits
+    * on everything. */
+  private def coarseFitCtes(nCells: Int, iters: Int, dim: Int,
+                            fitWhere: Option[String] = None): String = {
+    val fit = fitWhere.fold("")(w => s"fit AS MATERIALIZED (SELECT * FROM rqb WHERE $w),\n")
+    s"""$rqCte,
+       |rqb AS (
+       |  ${Lloyd.blocksSql("rq", "rq", 1, dim)}),
+       |$fit${Lloyd.fitSql("", if (fitWhere.isEmpty) "rqb" else "fit", nCells, 1, dim, iters,
+              Lloyd.DoubleMean)(IvfAnn.distSql)}""".stripMargin
   }
 
-  /** DuckDB mirror of the deterministic IVF quantizer + search
-    * (operators.IvfAnn): regenerates the Lloyd centroids from the same
-    * exact arithmetic — integer micro-unit quantization, hash-ranked
-    * init, `LloydIters` unrolled assign/update steps with exact BIGINT
-    * dimension sums — then replays assign→probe→re-rank. Every float
-    * step is a correctly-rounded scalar op or a left-to-right double
-    * fold, so centroids, cells, probes and the final rounded cosines
-    * hash-match bit-for-bit.
+  /** `probe` (query_id, cell): the `nProbe` cells of `cents` nearest to
+    * each query by cosine, ties to the lower cell — the probe of IvfAnn
+    * and IvfPqAnn. */
+  private def probeCte(cents: String, nProbe: Int): String =
+    s"""probe AS MATERIALIZED (
+       |  SELECT query_id, cell FROM (
+       |    SELECT q.vec_id AS query_id, c.cell,
+       |           row_number() OVER (PARTITION BY q.vec_id ORDER BY
+       |             ${sqlDot("q.embedding", "c.c")}
+       |               / (${sqlNorm("q.embedding")} * ${sqlNorm("c.c")}) DESC, c.cell) AS rn
+       |    FROM embeddings q CROSS JOIN $cents c WHERE q.vec_id < 8)
+       |  WHERE rn <= $nProbe)""".stripMargin
+
+  /** `cand`: the `cand` lowest-ADC neighbors per query of `adc`. */
+  private def adcCandCte(cand: Int): String =
+    s"""cand AS MATERIALIZED (
+       |  SELECT query_id, neighbor_id FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY query_id
+       |              ORDER BY adc, neighbor_id) AS crn
+       |    FROM adc) WHERE crn <= $cand)""".stripMargin
+
+  /** DuckDB mirror of the product-quantization ANN (operators.PqAnn):
+    * the codebook fit (Lloyd.fitSql, M blocks, micro-unit means), then
+    * encode → ADC → re-rank. Assignment and ADC scoring are BIGINT
+    * arithmetic, so the per-round mean is the only float op. */
+  private def pqSql(m: Int, kCents: Int, iters: Int, k: Int, cand: Int,
+                    dim: Int = 64): String = {
+    val dsub = dim / m
+    s"""WITH $rqCte,
+       |rqs AS MATERIALIZED (
+       |  ${Lloyd.blocksSql("rq", "rq", m, dsub)}),
+       |${Lloyd.fitSql("", "rqs", kCents, m, dsub, iters, Lloyd.MicroMean)(Lloyd.sqDistSql)},
+       |af AS (
+       |  ${Lloyd.nearestSql("rqs", s"c$iters", m)(Lloyd.sqDistSql)}),
+       |dt AS (
+       |  SELECT q.vec_id AS query_id, c.sub, c.cell, ${Lloyd.sqDistSql("q.v", "c.c")} AS d
+       |  FROM rqs q JOIN c$iters c ON q.sub = c.sub WHERE q.vec_id < 8),
+       |adc AS (
+       |  SELECT dt.query_id, af.vec_id AS neighbor_id, sum(dt.d) AS adc
+       |  FROM af JOIN dt ON af.sub = dt.sub AND af.cell = dt.cell
+       |                 AND af.vec_id <> dt.query_id
+       |  GROUP BY dt.query_id, af.vec_id),
+       |${adcCandCte(cand)},
+       |${rerankSql(k)}""".stripMargin
+  }
+
+  /** DuckDB mirror of the IVF search (operators.IvfAnn): the coarse
+    * fit, then assign → probe → re-rank. Every float step is a
+    * correctly-rounded scalar op or a left-to-right double fold, so
+    * centroids, cells, probes and the rounded cosines match bit for bit.
     *
     * `candPredicate`: optional SQL boolean over alias `ce` (the
     * candidate's embeddings row) — the filtered-ANN variant (v10).
@@ -208,23 +164,11 @@ object SimilarityQueries {
   private def ivfSql(nCells: Int, nProbe: Int, iters: Int, k: Int,
                      dim: Int = 64, candPredicate: Option[String] = None,
                      fitWhere: Option[String] = None,
-                     deleteWhere: Option[String] = None): String = {
-    def dist(rq: String, c: String) = ivfDist(rq, c)
-    s"""WITH ${lloydCtes(nCells, iters, dim, fitWhere)},
+                     deleteWhere: Option[String] = None): String =
+    s"""WITH ${coarseFitCtes(nCells, iters, dim, fitWhere)},
        |af AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT r.vec_id, c.cell,
-       |           row_number() OVER (PARTITION BY r.vec_id
-       |             ORDER BY ${dist("r.rq", "c.c")}, c.cell) AS rn
-       |    FROM rq r CROSS JOIN c$iters c) WHERE rn = 1),
-       |probe AS (
-       |  SELECT query_id, cell FROM (
-       |    SELECT q.vec_id AS query_id, c.cell,
-       |           row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |             ${sqlDot("q.embedding", "c.c")}
-       |               / (${sqlNorm("q.embedding")} * ${sqlNorm("c.c")}) DESC, c.cell) AS rn
-       |    FROM embeddings q CROSS JOIN c$iters c WHERE q.vec_id < 8)
-       |  WHERE rn <= $nProbe),
+       |  ${Lloyd.nearestSql("rqb", s"c$iters", 1)(IvfAnn.distSql)}),
+       |${probeCte(s"c$iters", nProbe)},
        |cand AS (
        |  SELECT p.query_id, a.vec_id AS neighbor_id
        |  FROM af a JOIN probe p USING (cell)
@@ -232,43 +176,26 @@ object SimilarityQueries {
           .getOrElse("")}
        |  WHERE a.vec_id <> p.query_id
        |  ${deleteWhere.map(w => s"AND NOT ($w)").getOrElse("")}),
-       |rerank AS (
-       |  SELECT cand.query_id, cand.neighbor_id,
-       |         round(${sqlDot("qv.embedding", "cv.embedding")}
-       |           / (${sqlNorm("qv.embedding")} * ${sqlNorm("cv.embedding")}), 6) AS cos
-       |  FROM cand
-       |  JOIN embeddings cv ON cv.vec_id = cand.neighbor_id
-       |  JOIN embeddings qv ON qv.vec_id = cand.query_id)
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |            ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM rerank)
-       |WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
-  }
+       |${rerankSql(k)}""".stripMargin
 
-  /** DuckDB mirror of the v17 quantizer-drift monitor: replays the
-    * fit-on-`fitWhere` Lloyd quantizer (lloydCtes — the v16 split),
-    * assigns EVERY vector to its nearest frozen centroid with the
-    * winning distance, then aggregates per `partExpr` bucket. Every
-    * per-vector error is micro-quantized to exact nano-units
-    * (√d is one correctly-rounded op on an identical double fold; the
-    * ×1e9 half-away round makes it BIGINT), so the means are
-    * order-independent integer sums divided once — hash-stable like the
-    * m10/v4 register trick. */
+  /** DuckDB mirror of the v17 quantizer-drift monitor: the
+    * fit-on-`fitWhere` coarse fit (the v16 split), every vector's
+    * nearest frozen centroid with the winning distance, then per
+    * `partExpr` bucket aggregates. Every per-vector error is
+    * micro-quantized to exact nano-units (√d is one correctly-rounded op
+    * on an identical double fold; the ×1e9 half-away round makes it
+    * BIGINT), so the means are order-independent integer sums divided
+    * once — hash-stable like the m10/v4 register trick. */
   private def ivfDriftSql(nCells: Int, iters: Int, dim: Int = 64,
                           fitWhere: Option[String] = None,
                           partExpr: String =
                             "CASE WHEN vec_id % 5 = 0 THEN 'delta' ELSE 'base' END")
       : String =
-    s"""WITH ${lloydCtes(nCells, iters, dim, fitWhere)},
+    s"""WITH ${coarseFitCtes(nCells, iters, dim, fitWhere)},
        |ad AS (
        |  SELECT vec_id, cell,
        |         CAST(floor(sqrt(d) * 1000000000.0 + 0.5) AS BIGINT) AS qerr_nano
-       |  FROM (
-       |    SELECT r.vec_id, c.cell, ${ivfDist("r.rq", "c.c")} AS d,
-       |           row_number() OVER (PARTITION BY r.vec_id
-       |             ORDER BY ${ivfDist("r.rq", "c.c")}, c.cell) AS rn
-       |    FROM rq r CROSS JOIN c$iters c) WHERE rn = 1),
+       |  FROM (${Lloyd.nearestSql("rqb", s"c$iters", 1)(IvfAnn.distSql)})),
        |p AS (SELECT $partExpr AS part, cell, qerr_nano FROM ad),
        |agg AS (SELECT part, count(*) AS n, sum(qerr_nano) AS s
        |        FROM p GROUP BY part),
@@ -284,13 +211,11 @@ object SimilarityQueries {
        |CROSS JOIN (SELECT n, s FROM agg WHERE part = 'base') bb
        |ORDER BY part""".stripMargin
 
-  /** DuckDB mirror of the IVF-PQ index (operators.IvfPqAnn): replays
-    * v4's coarse Lloyd quantizer (double means, exact integer dimension
-    * sums), micro-quantizes the final centroids, then re-runs every
-    * IVF-PQ-specific step in EXACT BIGINT arithmetic — integer cell
-    * assignment, residual subtraction, the residual-space per-subspace
-    * Lloyd fit (pqSql's scheme over residuals), encoding, and ADC —
-    * plus v4's cosine cell probing for the query side.
+  /** DuckDB mirror of the IVF-PQ index (operators.IvfPqAnn): v4's
+    * coarse fit, its centroids micro-quantized (`cmu`), then every
+    * IVF-PQ-specific step in exact BIGINT arithmetic — cell assignment,
+    * residuals, the residual codebook fit (Lloyd.fitSql over `rss`, CTEs
+    * `pc*`), encoding and ADC — plus v4's cosine probe on the query side.
     *
     * `deleteWhere` (v19): SQL boolean over alias `af0` (the coarse
     * assignment row) naming the TOMBSTONED ids — matching codes are
@@ -301,121 +226,30 @@ object SimilarityQueries {
                        k: Int, cand: Int, dim: Int = 64,
                        deleteWhere: Option[String] = None): String = {
     val dsub = dim / m
-    // double squared-L2 (coarse Lloyd assignment — ivfSql's comparison)
-    def dist(rq: String, c: String) =
-      s"""list_reduce(list_prepend(0.0::DOUBLE, list_transform(list_zip($rq, $c),
-         |  p -> (CAST(p[1] AS DOUBLE)/1000000.0 - CAST(p[2] AS DOUBLE))
-         |     * (CAST(p[1] AS DOUBLE)/1000000.0 - CAST(p[2] AS DOUBLE)))), (x, y) -> x + y)""".stripMargin
-    // exact integer squared-L2 between micro-unit BIGINT lists
-    def idist(a: String, b: String) =
-      s"""list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(list_zip($a, $b),
-         |  p -> (CAST(p[1] AS BIGINT) - CAST(p[2] AS BIGINT))
-         |     * (CAST(p[1] AS BIGINT) - CAST(p[2] AS BIGINT)))), (x, y) -> x + y)""".stripMargin
-    def micro(v: String) =
-      s"""CASE WHEN ($v) >= 0 THEN CAST(floor(($v)*1000000.0 + 0.5) AS BIGINT)
-         |     ELSE -CAST(floor(-($v)*1000000.0 + 0.5) AS BIGINT) END""".stripMargin
-    // coarse Lloyd rounds — identical to ivfSql's iterCtes
-    val coarseCtes = (1 to coarseIters).map { it =>
-      s"""a$it AS (
-         |  SELECT vec_id, rq, cell FROM (
-         |    SELECT r.vec_id, r.rq, c.cell,
-         |           row_number() OVER (PARTITION BY r.vec_id
-         |             ORDER BY ${dist("r.rq", "c.c")}, c.cell) AS rn
-         |    FROM rq r CROSS JOIN c${it - 1} c) WHERE rn = 1),
-         |s$it AS MATERIALIZED (
-         |  SELECT cell, i, sum(rq[i + 1]) AS s, count(*) AS n
-         |  FROM a$it CROSS JOIN range($dim) t(i) GROUP BY cell, i),
-         |n$it AS MATERIALIZED (
-         |  SELECT cell, list(CAST(s AS DOUBLE)/(CAST(n AS DOUBLE)*1000000.0) ORDER BY i) AS c
-         |  FROM s$it GROUP BY cell),
-         |c$it AS MATERIALIZED (
-         |  SELECT p.cell, coalesce(nn.c, p.c) AS c
-         |  FROM c${it - 1} p LEFT JOIN n$it nn USING (cell))""".stripMargin
-    }.mkString(",\n")
-    // residual-space PQ Lloyd rounds — pqSql's iterCtes over `rss`/`pc*`
-    val pqCtes = (1 to pqIters).map { it =>
-      s"""pa$it AS (
-         |  SELECT vec_id, sub, cell FROM (
-         |    SELECT r.vec_id, r.sub, c.cell,
-         |           row_number() OVER (PARTITION BY r.vec_id, r.sub
-         |             ORDER BY ${idist("r.rqm", "c.cm")}, c.cell) AS rn
-         |    FROM rss r JOIN pc${it - 1} c ON r.sub = c.sub) WHERE rn = 1),
-         |ps$it AS MATERIALIZED (
-         |  SELECT a.sub, a.cell, i, sum(r.rqm[i + 1]) AS s, count(*) AS n
-         |  FROM pa$it a JOIN rss r USING (vec_id, sub) CROSS JOIN range($dsub) t(i)
-         |  GROUP BY a.sub, a.cell, i),
-         |pn$it AS MATERIALIZED (
-         |  SELECT sub, cell,
-         |         list(${micro("CAST(s AS DOUBLE)/(CAST(n AS DOUBLE)*1000000.0)")} ORDER BY i) AS cm
-         |  FROM ps$it GROUP BY sub, cell),
-         |pc$it AS MATERIALIZED (
-         |  SELECT p.sub, p.cell, coalesce(nn.cm, p.cm) AS cm
-         |  FROM pc${it - 1} p LEFT JOIN pn$it nn USING (sub, cell))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH rq AS MATERIALIZED (
-       |  SELECT vec_id,
-       |         list_transform(embedding, x -> CASE WHEN CAST(x AS DOUBLE) >= 0
-       |           THEN CAST(floor(CAST(x AS DOUBLE)*1000000.0 + 0.5) AS BIGINT)
-       |           ELSE -CAST(floor(-CAST(x AS DOUBLE)*1000000.0 + 0.5) AS BIGINT) END) AS rq
-       |  FROM embeddings),
-       |c0 AS MATERIALIZED (
-       |  SELECT CAST(rn - 1 AS INT) AS cell,
-       |         list_transform(rq, r -> CAST(r AS DOUBLE)/1000000.0) AS c
-       |  FROM (SELECT rq, row_number() OVER (
-       |          ORDER BY (vec_id*1103515245 + 12345) % 2147483648, vec_id) AS rn
-       |        FROM rq)
-       |  WHERE rn <= $nCells),
-       |$coarseCtes,
+    def minus(a: String, b: String) =
+      s"list_transform(list_zip($a, $b), pz -> CAST(pz[1] AS BIGINT) - CAST(pz[2] AS BIGINT))"
+    s"""WITH ${coarseFitCtes(nCells, coarseIters, dim)},
        |cmu AS MATERIALIZED (
-       |  SELECT cell, list_transform(c, x -> ${micro("x")}) AS cmu
+       |  SELECT sub, cell, list_transform(c, x -> ${Lloyd.microSql("x")}) AS c
        |  FROM c$coarseIters),
        |af0 AS MATERIALIZED (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT r.vec_id, mm.cell,
-       |           row_number() OVER (PARTITION BY r.vec_id
-       |             ORDER BY ${idist("r.rq", "mm.cmu")}, mm.cell) AS rn
-       |    FROM rq r CROSS JOIN cmu mm) WHERE rn = 1),
+       |  ${Lloyd.nearestSql("rqb", "cmu", 1)(Lloyd.sqDistSql)}),
        |res AS MATERIALIZED (
-       |  SELECT r.vec_id, a.cell,
-       |         list_transform(list_zip(r.rq, mm.cmu),
-       |           p -> CAST(p[1] AS BIGINT) - CAST(p[2] AS BIGINT)) AS res
-       |  FROM rq r JOIN af0 a USING (vec_id) JOIN cmu mm ON mm.cell = a.cell),
+       |  SELECT a.vec_id, ${minus("a.v", "mm.c")} AS res
+       |  FROM af0 a JOIN cmu mm ON mm.cell = a.cell),
        |rss AS MATERIALIZED (
-       |  SELECT vec_id, CAST(t.m AS INT) AS sub,
-       |         res[t.m*$dsub + 1 : t.m*$dsub + $dsub] AS rqm
-       |  FROM res CROSS JOIN range($m) t(m)),
-       |pc0 AS MATERIALIZED (
-       |  SELECT CAST(t.m AS INT) AS sub, CAST(rn - 1 AS INT) AS cell,
-       |         res[t.m*$dsub + 1 : t.m*$dsub + $dsub] AS cm
-       |  FROM (SELECT res, row_number() OVER (
-       |          ORDER BY (vec_id*1103515245 + 12345) % 2147483648, vec_id) AS rn
-       |        FROM res)
-       |  CROSS JOIN range($m) t(m)
-       |  WHERE rn <= $kCents),
-       |$pqCtes,
+       |  ${Lloyd.blocksSql("res", "res", m, dsub)}),
+       |${Lloyd.fitSql("p", "rss", kCents, m, dsub, pqIters, Lloyd.MicroMean)(Lloyd.sqDistSql)},
        |afq AS MATERIALIZED (
-       |  SELECT vec_id, sub, cell FROM (
-       |    SELECT r.vec_id, r.sub, c.cell,
-       |           row_number() OVER (PARTITION BY r.vec_id, r.sub
-       |             ORDER BY ${idist("r.rqm", "c.cm")}, c.cell) AS rn
-       |    FROM rss r JOIN pc$pqIters c ON r.sub = c.sub) WHERE rn = 1),
-       |probe AS MATERIALIZED (
-       |  SELECT query_id, cell FROM (
-       |    SELECT q.vec_id AS query_id, c.cell,
-       |           row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |             ${sqlDot("q.embedding", "c.c")}
-       |               / (${sqlNorm("q.embedding")} * ${sqlNorm("c.c")}) DESC, c.cell) AS rn
-       |    FROM embeddings q CROSS JOIN c$coarseIters c WHERE q.vec_id < 8)
-       |  WHERE rn <= $nProbe),
+       |  ${Lloyd.nearestSql("rss", s"pc$pqIters", m)(Lloyd.sqDistSql)}),
+       |${probeCte(s"c$coarseIters", nProbe)},
        |qres AS MATERIALIZED (
-       |  SELECT q.vec_id AS query_id, p.cell AS pcell,
-       |         list_transform(list_zip(q.rq, mm.cmu),
-       |           pz -> CAST(pz[1] AS BIGINT) - CAST(pz[2] AS BIGINT)) AS qres
+       |  SELECT q.vec_id AS query_id, p.cell AS pcell, ${minus("q.rq", "mm.c")} AS qres
        |  FROM rq q JOIN probe p ON p.query_id = q.vec_id
        |  JOIN cmu mm ON mm.cell = p.cell),
        |qdt AS MATERIALIZED (
        |  SELECT qr.query_id, qr.pcell, c.sub, c.cell,
-       |         ${idist(s"qr.qres[c.sub*$dsub + 1 : c.sub*$dsub + $dsub]", "c.cm")} AS d
+       |         ${Lloyd.sqDistSql(s"qr.qres[c.sub*$dsub + 1 : c.sub*$dsub + $dsub]", "c.c")} AS d
        |  FROM qres qr CROSS JOIN pc$pqIters c),
        |adc AS MATERIALIZED (
        |  SELECT qdt.query_id, afq.vec_id AS neighbor_id, sum(qdt.d) AS adc
@@ -425,47 +259,9 @@ object SimilarityQueries {
        |          AND qdt.cell = afq.cell AND afq.vec_id <> qdt.query_id
        |  ${deleteWhere.map(w => s"WHERE NOT ($w)").getOrElse("")}
        |  GROUP BY qdt.query_id, afq.vec_id),
-       |cand AS MATERIALIZED (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |              ORDER BY adc, neighbor_id) AS crn
-       |    FROM adc) WHERE crn <= $cand),
-       |rerank AS MATERIALIZED (
-       |  SELECT cand.query_id, cand.neighbor_id,
-       |         round(${sqlDot("qv.embedding", "cv.embedding")}
-       |           / (${sqlNorm("qv.embedding")} * ${sqlNorm("cv.embedding")}), 6) AS cos
-       |  FROM cand
-       |  JOIN embeddings cv ON cv.vec_id = cand.neighbor_id
-       |  JOIN embeddings qv ON qv.vec_id = cand.query_id)
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |            ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM rerank)
-       |WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
+       |${adcCandCte(cand)},
+       |${rerankSql(k)}""".stripMargin
   }
-
-  /** DuckDB-side mirror of dotD/normD (double fold, same order). */
-  private def sqlDot(a: String, b: String) =
-    s"""list_reduce(list_prepend(0.0::DOUBLE,
-       |  list_transform(list_zip($a, $b),
-       |    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), (x, y) -> x + y)""".stripMargin
-  private def sqlNorm(a: String) =
-    s"""sqrt(list_reduce(list_prepend(0.0::DOUBLE,
-       |  list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (x, y) -> x + y))""".stripMargin
-
-  /** v1's exact brute-force top-5 oracle — also the GROUND TRUTH side
-    * of the v13 recall report. */
-  private lazy val bruteTopkSql: String =
-    s"""WITH scored AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |         round(${sqlDot("q.embedding", "c.embedding")}
-       |           / (${sqlNorm("q.embedding")} * ${sqlNorm("c.embedding")}), 6) AS cos
-       |  FROM embeddings q JOIN embeddings c ON q.vec_id < 8 AND c.vec_id <> q.vec_id)
-       |SELECT query_id, neighbor_id, cos, rnk FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |            ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM scored)
-       |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -587,18 +383,7 @@ object SimilarityQueries {
          |  SELECT DISTINCT p.query_id, c.vec_id AS neighbor_id
          |  FROM corpus_tb c JOIN probe_tb p USING (tb)
          |  WHERE c.vec_id <> p.query_id),
-         |rerank AS (
-         |  SELECT cand.query_id, cand.neighbor_id,
-         |         round(${sqlDot("qv.embedding", "cv.embedding")}
-         |           / (${sqlNorm("qv.embedding")} * ${sqlNorm("cv.embedding")}), 6) AS cos
-         |  FROM cand
-         |  JOIN embeddings cv ON cv.vec_id = cand.neighbor_id
-         |  JOIN embeddings qv ON qv.vec_id = cand.query_id)
-         |SELECT query_id, neighbor_id, cos, rnk FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |            ORDER BY cos DESC, neighbor_id) AS rnk
-         |  FROM rerank)
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
+         |${rerankSql(5)}""".stripMargin) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       // Deterministic iid-Gaussian hyperplanes (fixed seed, one stream
       // indexed h[t][b][i] = g[((t*bits)+b)*dim + i]). NOT a closed-form
@@ -736,18 +521,7 @@ object SimilarityQueries {
          |                  ELSE dot / sqrt(CAST(na AS DOUBLE)*CAST(nb AS DOUBLE)) END DESC,
          |             vec_id) AS r
          |    FROM pairs) WHERE r <= 20),
-         |rerank AS (
-         |  SELECT cand.query_id, cand.neighbor_id,
-         |         round(${sqlDot("qv.embedding", "cv.embedding")}
-         |           / (${sqlNorm("qv.embedding")} * ${sqlNorm("cv.embedding")}), 6) AS cos
-         |  FROM cand
-         |  JOIN embeddings cv ON cv.vec_id = cand.neighbor_id
-         |  JOIN embeddings qv ON qv.vec_id = cand.query_id)
-         |SELECT query_id, neighbor_id, cos, rnk FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |            ORDER BY cos DESC, neighbor_id) AS rnk
-         |  FROM rerank)
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
+         |${rerankSql(5)}""".stripMargin) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       // compiled one-loop-per-row quantize + int cosine (ArrayOps.sq8*):
       // the HOF formulation (aggregate/zip_with lambdas) ran interpreted
@@ -1109,7 +883,7 @@ object SimilarityQueries {
     // delta tripping it and a clean one not). One map-only assignment
     // pass + two tiny aggregates — at 100 TB this rides the SAME pass
     // updateIndex already makes, so monitoring is free at the margin.
-    // The oracle replays fit/assign via lloydCtes and the identical
+    // The oracle replays fit/assign via Lloyd.fitSql and the identical
     // integer registers, so the monitor itself is hash-gated.
     q("v17_quantizer_drift",
       ivfDriftSql(nCells = 16, iters = graft.operators.IvfAnn.LloydIters,

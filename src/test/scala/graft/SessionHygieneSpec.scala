@@ -10,8 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * tools: its only mains are Bench and Verify. Parquet is read through
   * `Tables.parquet`, so no read runs a schema-inference job. Engine-owned
   * state (memos, build-once artifacts, scratch paths) is kept only by
-  * `Caches`. Every doc block in src/main documents a definition. The
-  * needles are concatenated so this file never matches itself. */
+  * `Caches`. The ANN fits' seed order and micro-unit rounding are
+  * written only in `Lloyd`. Every doc block in src/main documents a
+  * definition. The needles are concatenated so this file never matches
+  * itself. */
 class SessionHygieneSpec extends AnyFunSuite {
 
   private def assertNone(what: String, offenders: Seq[String], why: String): Unit =
@@ -68,6 +70,15 @@ class SessionHygieneSpec extends AnyFunSuite {
     Seq("java.io." + "tmpdir", "hashCode." + "toHexString", "concurrent." + "TrieMap").foreach { needle =>
       assertNone(needle, mainOffenders(_.contains(needle), Set("Caches.scala")),
         "use Caches.memo, Caches.once and Caches.scratch")
+    }
+  }
+
+  test("src/main writes the Lloyd seed order and micro rounding only in Lloyd.scala") {
+    // the oracles replay the ANN fits bit for bit only while both
+    // engines share one copy of each; use Lloyd's Sql twins
+    Seq("% 2147" + "483648", "1000000.0 + " + "0.5").foreach { needle =>
+      assertNone(needle, mainOffenders(_.contains(needle), Set("Lloyd.scala")),
+        "use Lloyd.seedOrderSql, Lloyd.microSql, Lloyd.quantSql or Lloyd.microCol")
     }
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** The shared Lloyd fit's budget: one job for the seeds plus one per
   * round, and nothing left cached afterwards, whether the fit returns
-  * or throws. Suites share the SparkContext, so "nothing left" means no
+  * or throws, nor after an IVF-PQ search that runs two fits. Suites share the SparkContext, so "nothing left" means no
   * persisted RDD whose lineage reaches this test's own input, and no
   * cache-manager entry for the quantized frame the fits read. */
 class LloydSpec extends SparkSpec {
@@ -57,6 +57,12 @@ class LloydSpec extends SparkSpec {
     val (e, source) = corpus(40, big = false)
     IvfAnn.fitCentroids(e, 4)
     PqAnn.fitCodebooks(e)
+    assertNothingCached(e, source)
+  }
+
+  test("v11's search leaves nothing cached over its input") {
+    val (e, source) = corpus(40, big = false)
+    IvfPqAnn.topK(e, e.filter(col("vec_id") < 4), k = 5, cand = 20).collect()
     assertNothingCached(e, source)
   }
 

@@ -48,7 +48,8 @@ def col_types(con, sql):
     return {r[0]: r[1] for r in con.execute(f"DESCRIBE {sql}").fetchall()}
 
 
-def main(sf_dir, out_dir, skip=()):
+def connect(sf_dir):
+    """A DuckDB connection with one view per table of sf_dir."""
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -56,6 +57,11 @@ def main(sf_dir, out_dir, skip=()):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}/*.parquet'")
         elif os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def main(sf_dir, out_dir, skip=()):
+    con = connect(sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     names = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(os.path.join(out_dir, d)))
