@@ -6,9 +6,10 @@ import org.apache.spark.sql.SparkSession
   * Each query is materialized through the `noop` sink — every output column
   * is computed and serialized, unlike a bare `.count()` which lets Catalyst
   * prune unused projections (a pure-projection query would only time the
-  * scan). Two JSON lines are printed: the full per-query map first, then a
-  * COMPACT summary line LAST (total + slowest-10) so a tail-truncating
-  * capture still gets a parsable line.
+  * scan). Two JSON lines are printed, both with the total and the full
+  * per-query map: `per_query` first, which also carries both raw runs of
+  * every query, then `total` LAST, for a reader that parses the last JSON
+  * line.
   *
   * Noise control: every query is timed TWICE and reported as the MIN of
   * the two runs (both raw runs are kept in the `"runs"` field). A
@@ -18,8 +19,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Honesty control: `Caches.reset` runs before EVERY timed run, so each
   * run pays the query's full cost — the second run can never return a
-  * memoized result (NearDupPairs pairs, x18/x19 stage frames) another run
-  * already computed. The bench states per-query cost, not marginal cost.
+  * memoized result (NearDupPairs pairs, x18/x19 stage frames) or a frame
+  * another run pinned. The bench states per-query cost, not marginal cost.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -83,14 +84,6 @@ object Bench {
     val total = results.values.filter(_ >= 0).sum
     val errs = s""""errors":${jlist(errors.distinct)}"""
     println(s"""{"metric":"per_query","value":$total,"unit":"sec","timing":"min_of_2_cache_reset","queries":${jmap(results)},"runs":${jruns(runs)},$errs,"sf":"$sfDir"}""")
-    // Round-14 measurement-reporting fix: the LAST line used to carry only
-    // the slowest-10 queries (a tail-truncation hedge), but the driver
-    // parses the LAST JSON line as THE per-query map — PERF_r13 compared
-    // only 3 common queries and flagged 7 as "dropped_from_bench" that
-    // were merely absent from the compact line. The final line now carries
-    // the FULL map (entries added, none removed or renamed; total and
-    // timing methodology unchanged — still min-of-2 with a cache reset
-    // before every run).
     println(s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2_cache_reset","queries":${jmap(results)},$errs,"sf":"$sfDir"}""")
     spark.stop()
   }

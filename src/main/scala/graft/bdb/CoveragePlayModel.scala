@@ -141,13 +141,13 @@ object CoveragePlayModel {
   private def newRf() = new org.apache.spark.ml.classification.RandomForestClassifier()
     .setNumTrees(50).setMaxDepth(8).setSeed(42)
 
-  /** Shared model prep for rfMetrics/confusion: cache the feature
+  /** Shared model prep for rfMetrics/predictions: pin the feature
     * matrix (indexer fit, split, RF fit and evaluations are separate
-    * actions — uncached, each would recompute the whole defender-stats
+    * actions — unpinned, each would recompute the whole defender-stats
     * pipeline), label-encode, assemble. */
   private def prepared(features0: DataFrame)
       : (DataFrame, Seq[String], org.apache.spark.ml.feature.StringIndexerModel, DataFrame) = {
-    val features = features0.cache()
+    val features = graft.Caches.pin(features0)
     val fc = featureCols(features)
     val indexerModel = new org.apache.spark.ml.feature.StringIndexer()
       .setInputCol("pff_passCoverage").setOutputCol("label")
@@ -160,40 +160,41 @@ object CoveragePlayModel {
     // count (immune to AQE/conf) + hash-by-key + unique-key local sort
     // makes layout a pure function of the data — the property the
     // committed goldens assert.
-    val data = indexerModel.transform(
+    val data = graft.Caches.pin(indexerModel.transform(
       Pipelines.assembleZeroFilled(features, fc))
       .repartition(4, col("gameId"), col("playId"))
-      .sortWithinPartitions("gameId", "playId", "defensiveTeam")
-      .cache()
+      .sortWithinPartitions("gameId", "playId", "defensiveTeam"))
     (features, fc, indexerModel, data)
   }
 
   def rfMetrics(features0: DataFrame): DataFrame = {
     val (features, fc, _, data) = prepared(features0)
-    val inTrain = Pipelines.stratifiedInTrain(
-      "label", 0.8, seed = 42, idCols = Seq("gameId", "playId", "defensiveTeam"))
-    val model = newRf().fit(data.filter(inTrain))
-    // With unit weights, MulticlassClassificationEvaluator's accuracy is
-    // (rows predicted right) / (rows), a ratio of exact integer counts,
-    // so one aggregation over the scored matrix yields the same doubles
-    // for both sides and the row count as a single job.
-    val hit = (col("prediction") === col("label")).cast("long")
-    val held = !inTrain
-    val r = model.transform(data)
-      .agg(sum(hit), count(lit(1)), sum(when(held, hit)), count(when(held, lit(1))))
-      .head()
-    val nPlays = r.getLong(1)
-    val nTest = r.getLong(3)
-    val spark = features.sparkSession
-    import spark.implicits._
-    val out = Seq(
-      ("overall_accuracy", r.getLong(0).toDouble / nPlays),
-      ("val_accuracy", if (nTest == 0) -1.0 else r.getLong(2).toDouble / nTest),
-      ("n_plays", nPlays.toDouble),
-      ("n_features", fc.size.toDouble)
-    ).toDF("metric", "value")
-    data.unpersist(); features.unpersist() // metrics are driver scalars
-    out
+    try {
+      val inTrain = Pipelines.stratifiedInTrain(
+        "label", 0.8, seed = 42, idCols = Seq("gameId", "playId", "defensiveTeam"))
+      val model = newRf().fit(data.filter(inTrain))
+      // With unit weights, MulticlassClassificationEvaluator's accuracy is
+      // (rows predicted right) / (rows), a ratio of exact integer counts,
+      // so one aggregation over the scored matrix yields the same doubles
+      // for both sides and the row count as a single job.
+      val hit = (col("prediction") === col("label")).cast("long")
+      val held = !inTrain
+      val r = model.transform(data)
+        .agg(sum(hit), count(lit(1)), sum(when(held, hit)), count(when(held, lit(1))))
+        .head()
+      val nPlays = r.getLong(1)
+      val nTest = r.getLong(3)
+      val spark = features.sparkSession
+      import spark.implicits._
+      Seq(
+        ("overall_accuracy", r.getLong(0).toDouble / nPlays),
+        ("val_accuracy", if (nTest == 0) -1.0 else r.getLong(2).toDouble / nTest),
+        ("n_plays", nPlays.toDouble),
+        ("n_features", fc.size.toDouble)
+      ).toDF("metric", "value")
+    } finally { // the metrics are driver scalars by now
+      graft.Caches.release(data); graft.Caches.release(features)
+    }
   }
 
   /** Per-play prediction probabilities over the full frame — the
@@ -203,6 +204,7 @@ object CoveragePlayModel {
     * per-class columns become one map keyed by coverage name — schema
     * stays stable however many classes the label indexer finds. */
   def predictions(features0: DataFrame): DataFrame = {
+    // the returned plan reads `data`, so prepared's pins live until reset
     val (_, _, indexerModel, data) = prepared(features0)
     val model = newRf().fit(data)
     val labels = indexerModel.labelsArray(0)

@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
   * column expressions, no UDFs.
   *
   * Reference: Euclidean distance `DefPosModel.ipynb:143-147`,
-  * `radius_model.R:134,141,160`; angle normalization/wraparound
-  * `radius_model.R:153,168-182`; kinematics step
+  * `radius_model.R:134,141,160`; kinematics step
   * `BuildingReadOrder.R:87` (s·0.1 + ½·a·0.1²).
   */
 object Kinematics {
@@ -16,19 +15,6 @@ object Kinematics {
   /** Euclidean distance between (x1,y1) and (x2,y2). */
   def dist(x1: Column, y1: Column, x2: Column, y2: Column): Column =
     sqrt(pow(x1 - x2, 2) + pow(y1 - y2, 2))
-
-  /** Normalize an angle in radians to [0, 2π). */
-  def angleNorm(a: Column): Column = {
-    val tau = lit(2 * math.Pi)
-    ((a % tau) + tau) % tau
-  }
-
-  /** Absolute angular difference with wraparound, in [0, π]. */
-  def angularDiff(a: Column, b: Column): Column = {
-    val tau = lit(2 * math.Pi)
-    val d = abs(angleNorm(a) - angleNorm(b))
-    least(d, tau - d)
-  }
 
   /** Distance covered in one 10 Hz frame: s·dt + ½·a·dt²
     * (BuildingReadOrder.R:87 with dt = 0.1 s). */

@@ -60,10 +60,6 @@ object ArrayOps {
     }
   }
 
-  /** Index (1-based) of the minimum element; first occurrence on ties
-    * (reference: max.col(-diffs) ties.method="first", QBReadStats.R:102). */
-  def argMin(arr: Column): Column = array_position(arr, array_min(arr))
-
   /** Horizontal sum in double, folding left-to-right (reference:
     * rowSums, cover_threshold.R:11). */
   def rowSum(arr: Column): Column =

@@ -18,13 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** MinHash signature: k independent permutations simulated by seeding
-    * xxhash64 with the slot index. Deterministic across runs/engines' Spark
-    * versions (xxhash64 is a pinned algorithm). */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(shingles, sh => xxhash64(i, sh))))
-
   /** Base hash for the cheap two-step minhash: hash each shingle ONCE,
     * then derive the k permutations arithmetically (minhashFromHashes).
     * Materialize this as its own column so the string hashing isn't
@@ -40,12 +33,6 @@ object Dedup {
   def minhashFromHashes(hashes: Column, k: Int): Column =
     transform(sequence(lit(0), lit(k - 1)),
       i => array_min(transform(hashes, h => xxhash64(i, h))))
-
-  /** LSH band keys: hash of each consecutive `rowsPerBand` slice of the
-    * signature. Documents sharing ANY band key are candidate pairs. */
-  def bandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(b, slice(signature, b * rowsPerBand + 1, lit(rowsPerBand))))
 
   /** Exact Jaccard similarity of two pre-distinct shingle arrays — the
     * verification step after LSH candidate generation. */
@@ -84,33 +71,6 @@ object Dedup {
 
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** JVM fast path for 64-bit SimHash (same semantics as `simhash` with
-    * a murmur-based token hash; signatures differ from the expression
-    * version only by the underlying hash family, which is immaterial to
-    * SimHash's locality property). One UDF call per document. */
-  val simhashFast = org.apache.spark.sql.functions.udf { (tokens: Seq[String]) =>
-    val counts = new Array[Int](64)
-    var j = 0
-    while (j < tokens.length) {
-      val s = tokens(j)
-      val h = (scala.util.hashing.MurmurHash3.stringHash(s, 0x9747b28c).toLong << 32) |
-        (scala.util.hashing.MurmurHash3.stringHash(s, 0x5bd1e995).toLong & 0xFFFFFFFFL)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        b += 1
-      }
-      j += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) {
-      if (counts(b) >= 0) sig |= (1L << b)
-      b += 1
-    }
-    sig
-  }
 
   /** Oracle-portable 60-bit SimHash: the token hash is two character
     * polynomials (seeds 7/11, bases 131/137, mod the prime 1e9+7 — the

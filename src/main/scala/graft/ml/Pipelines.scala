@@ -90,45 +90,45 @@ object Pipelines {
 
   /** Multinomial logistic regression, fixed seed + split. */
   def lrMetrics(embeddings: DataFrame, labelCol: String): DataFrame = {
-    // cache: fit/evaluate/count are separate actions over the same frame
-    val data = withFeatures(embeddings).withColumn("label", col(labelCol).cast("double"))
-      .cache()
-    val Array(train, test) = data.randomSplit(Array(0.8, 0.2), seed = 42)
-    val model = new LogisticRegression()
-      .setMaxIter(50).setFamily("multinomial").setFeaturesCol("features")
-      .fit(train)
-    val scored = model.transform(test)
-    import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
-    val acc = new MulticlassClassificationEvaluator()
-      .setMetricName("accuracy").evaluate(scored)
-    val ll = new MulticlassClassificationEvaluator()
-      .setMetricName("logLoss").evaluate(scored)
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val out = Seq(("accuracy", acc), ("logLoss", ll),
-        ("n_train", train.count().toDouble), ("n_test", test.count().toDouble))
-      .toDF("metric", "value")
-    data.unpersist() // all metrics are driver scalars by now
-    out
+    // pinned: fit/evaluate/count are separate actions over the same frame
+    val data = graft.Caches.pin(
+      withFeatures(embeddings).withColumn("label", col(labelCol).cast("double")))
+    try {
+      val Array(train, test) = data.randomSplit(Array(0.8, 0.2), seed = 42)
+      val model = new LogisticRegression()
+        .setMaxIter(50).setFamily("multinomial").setFeaturesCol("features")
+        .fit(train)
+      val scored = model.transform(test)
+      import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
+      val acc = new MulticlassClassificationEvaluator()
+        .setMetricName("accuracy").evaluate(scored)
+      val ll = new MulticlassClassificationEvaluator()
+        .setMetricName("logLoss").evaluate(scored)
+      val spark = embeddings.sparkSession
+      import spark.implicits._
+      Seq(("accuracy", acc), ("logLoss", ll),
+          ("n_train", train.count().toDouble), ("n_test", test.count().toDouble))
+        .toDF("metric", "value")
+    } finally graft.Caches.release(data) // all metrics are driver scalars by now
   }
 
   /** M8 — feed-forward network (the reference's 64→32→16→softmax Keras
     * model, `DefPosModel.ipynb:554-575`) as MultilayerPerceptron. */
   def mlpMetrics(embeddings: DataFrame): DataFrame = {
-    val data = withFeatures(embeddings).withColumn("label", col("label").cast("double"))
-      .cache()
-    val Array(train, test) = data.randomSplit(Array(0.8, 0.2), seed = 42)
-    val mlp = new org.apache.spark.ml.classification.MultilayerPerceptronClassifier()
-      .setLayers(Array(64, 32, 16, 10)).setMaxIter(20).setBlockSize(128).setSeed(42)
-    val model = mlp.fit(train)
-    import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
-    val acc = new MulticlassClassificationEvaluator()
-      .setMetricName("accuracy").evaluate(model.transform(test))
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val out = Seq(("mlp_accuracy", acc), ("n_layers", 4.0)).toDF("metric", "value")
-    data.unpersist()
-    out
+    val data = graft.Caches.pin(
+      withFeatures(embeddings).withColumn("label", col("label").cast("double")))
+    try {
+      val Array(train, test) = data.randomSplit(Array(0.8, 0.2), seed = 42)
+      val mlp = new org.apache.spark.ml.classification.MultilayerPerceptronClassifier()
+        .setLayers(Array(64, 32, 16, 10)).setMaxIter(20).setBlockSize(128).setSeed(42)
+      val model = mlp.fit(train)
+      import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
+      val acc = new MulticlassClassificationEvaluator()
+        .setMetricName("accuracy").evaluate(model.transform(test))
+      val spark = embeddings.sparkSession
+      import spark.implicits._
+      Seq(("mlp_accuracy", acc), ("n_layers", 4.0)).toDF("metric", "value")
+    } finally graft.Caches.release(data)
   }
 
   /** M9 — hyperparameter search via CrossValidator (the reference's
@@ -137,29 +137,29 @@ object Pipelines {
   def cvBestRegParam(embeddings: DataFrame): DataFrame = {
     import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
     import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-    // cache: CV refits the estimator folds x grid times over this frame
-    val data = withFeatures(embeddings).withColumn("label", col("label").cast("double"))
-      .cache()
-    val lr = new LogisticRegression().setMaxIter(20).setFamily("multinomial")
-    val grid = new ParamGridBuilder()
-      .addGrid(lr.regParam, Array(0.0, 0.1)).build()
-    val cv = new CrossValidator()
-      .setEstimator(lr)
-      .setEvaluator(new MulticlassClassificationEvaluator().setMetricName("logLoss"))
-      .setEstimatorParamMaps(grid).setNumFolds(2).setSeed(42)
-      // folds x grid = 4 independent fits; run them concurrently
-      // (per-fit results and avgMetrics are unchanged)
-      .setParallelism(4)
-    val model = cv.fit(data)
-    val best = model.bestModel.asInstanceOf[org.apache.spark.ml.classification.LogisticRegressionModel]
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val out = model.avgMetrics.zip(grid).toSeq
-      .map { case (m, pm) => (pm(lr.regParam), m) }
-      .toDF("regParam", "avg_logloss")
-      .withColumn("is_best", col("regParam") === best.getRegParam)
-    data.unpersist() // avgMetrics are driver-side already
-    out
+    // pinned: CV refits the estimator folds x grid times over this frame
+    val data = graft.Caches.pin(
+      withFeatures(embeddings).withColumn("label", col("label").cast("double")))
+    try {
+      val lr = new LogisticRegression().setMaxIter(20).setFamily("multinomial")
+      val grid = new ParamGridBuilder()
+        .addGrid(lr.regParam, Array(0.0, 0.1)).build()
+      val cv = new CrossValidator()
+        .setEstimator(lr)
+        .setEvaluator(new MulticlassClassificationEvaluator().setMetricName("logLoss"))
+        .setEstimatorParamMaps(grid).setNumFolds(2).setSeed(42)
+        // folds x grid = 4 independent fits; run them concurrently
+        // (per-fit results and avgMetrics are unchanged)
+        .setParallelism(4)
+      val model = cv.fit(data)
+      val best = model.bestModel.asInstanceOf[org.apache.spark.ml.classification.LogisticRegressionModel]
+      val spark = embeddings.sparkSession
+      import spark.implicits._
+      model.avgMetrics.zip(grid).toSeq
+        .map { case (m, pm) => (pm(lr.regParam), m) }
+        .toDF("regParam", "avg_logloss")
+        .withColumn("is_best", col("regParam") === best.getRegParam)
+    } finally graft.Caches.release(data) // avgMetrics are driver-side already
   }
 
   /** M6 — multiclass boosted trees. The reference's best models are
@@ -168,33 +168,34 @@ object Pipelines {
     * fallback SURVEY §2.9 prescribes. One boosted model per class,
     * trained on the same distributed feature frame. */
   def ovrGbtMetrics(embeddings: DataFrame, labelCol: String): DataFrame = {
-    // cache: OneVsRest fits one GBT per class over the same train frame
-    val data = withFeatures(embeddings)
-      .withColumn("label", col(labelCol).cast("double")).cache()
-    val Array(train, test) = data.randomSplit(Array(0.8, 0.2), seed = 42)
-    val gbt = new GBTClassifier().setMaxIter(10).setMaxDepth(4).setSeed(42)
-    // parallelism: the k binary fits are independent; serial (the
-    // default) leaves the cluster idle between them. Per-model results
-    // are unchanged — each binary GBT sees the same train frame + seed.
-    val model = new OneVsRest().setClassifier(gbt).setParallelism(3).fit(train)
-    import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
-    val acc = new MulticlassClassificationEvaluator()
-      .setMetricName("accuracy").evaluate(model.transform(test))
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val out = Seq(("ovr_gbt_accuracy", acc),
-        ("n_classes", model.models.length.toDouble),
-        ("n_test", test.count().toDouble))
-      .toDF("metric", "value")
-    data.unpersist()
-    out
+    // pinned: OneVsRest fits one GBT per class over the same train frame
+    val data = graft.Caches.pin(withFeatures(embeddings)
+      .withColumn("label", col(labelCol).cast("double")))
+    try {
+      val Array(train, test) = data.randomSplit(Array(0.8, 0.2), seed = 42)
+      val gbt = new GBTClassifier().setMaxIter(10).setMaxDepth(4).setSeed(42)
+      // parallelism: the k binary fits are independent; serial (the
+      // default) leaves the cluster idle between them. Per-model results
+      // are unchanged — each binary GBT sees the same train frame + seed.
+      val model = new OneVsRest().setClassifier(gbt).setParallelism(3).fit(train)
+      import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
+      val acc = new MulticlassClassificationEvaluator()
+        .setMetricName("accuracy").evaluate(model.transform(test))
+      val spark = embeddings.sparkSession
+      import spark.implicits._
+      Seq(("ovr_gbt_accuracy", acc),
+          ("n_classes", model.models.length.toDouble),
+          ("n_test", test.count().toDouble))
+        .toDF("metric", "value")
+    } finally graft.Caches.release(data)
   }
 
   /** RandomForest confusion matrix: (label, prediction, n) rows —
     * M10's confusion matrix as groupBy(label, prediction).count. */
   def rfConfusion(embeddings: DataFrame): DataFrame = {
-    val data = withFeatures(embeddings).withColumn("label", col("label").cast("double"))
-      .cache()
+    // the returned plan reads `data` again, so the pin lives until reset
+    val data = graft.Caches.pin(
+      withFeatures(embeddings).withColumn("label", col("label").cast("double")))
     val Array(train, test) = data.randomSplit(Array(0.8, 0.2), seed = 42)
     val model = new RandomForestClassifier()
       .setNumTrees(50).setMaxDepth(8).setSeed(42)

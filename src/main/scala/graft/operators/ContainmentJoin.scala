@@ -47,13 +47,10 @@ import org.apache.spark.sql.functions._
   * distinct; then an array_intersect verify per candidate, map-side
   * after two id-keyed joins.
   *
-  * CACHE LIFECYCLE (round 14, ADVICE): the operators below cache shared
-  * sub-frames (`ranked` in [[frames]], `freq` in [[probeJoin]]) for the
-  * duration of the returned LAZY plan — the operator cannot unpersist
-  * them itself because the consuming action happens in the caller.
-  * Callers owning a long-lived session must release them via
-  * `spark.catalog.clearCache()` (or `graft.Caches.reset`) between
-  * invocations — the bench/verify harness already does.
+  * Pins: the operators below pin shared sub-frames (`ranked` in
+  * [[frames]], `freq` in [[probeJoin]]) with `graft.Caches.pin`. The
+  * returned lazy plan reads them and its action runs in the caller, so
+  * they live until `graft.Caches.reset` of the caller's session.
   */
 object ContainmentJoin {
 
@@ -83,16 +80,15 @@ object ContainmentJoin {
       .select(col("sid"), col("n"), xxhash64(col("gs")).as("g"))
     // global shingle document-frequency → rarest-first canonical order;
     // ONE ranking pass yields both the probe prefix and the index position.
-    // cached (round 13): the prefix and index sides BOTH read this frame,
+    // pinned: the prefix and index sides BOTH read this frame,
     // and when the candidate join broadcasts one side Catalyst cannot
-    // reuse the other side's exchange — uncached, the whole
+    // reuse the other side's exchange — unpinned, the whole
     // explode → df-join → rank pipeline ran twice (visible as two full
     // Window subtrees in the before-plan). One materialization, same rows.
     val freq = exploded.groupBy("g").agg(count(lit(1)).as("df"))
-    val ranked = exploded.join(freq, "g")
+    val ranked = graft.Caches.pin(exploded.join(freq, "g")
       .withColumn("rk", row_number().over(
-        Window.partitionBy("sid").orderBy(col("df"), col("g"))).cast("long"))
-      .cache()
+        Window.partitionBy("sid").orderBy(col("df"), col("g"))).cast("long")))
     // prefix size = n - ceil(t*n) + 1, all in integers
     // (integer ceil division (div, not `/`): the double route is exact
     // only below 2^53 and this bound must never shrink the prefix)
@@ -162,11 +158,11 @@ object ContainmentJoin {
       .select(col("sid"), col("n"), explode(col("sh")).as("gs"))
       .select(col("sid"), col("n"), xxhash64(col("gs")).as("g"))
     val iExploded = hashed(iBase)
-    // cached (round 13): the frozen index-corpus df table is read by BOTH
-    // ranked() calls below (probe side and index side) — uncached, the
+    // pinned: the frozen index-corpus df table is read by BOTH
+    // ranked() calls below (probe side and index side) — unpinned, the
     // index explode + aggregate ran twice. Small frame (distinct index
     // shingles), one materialization.
-    val freq = iExploded.groupBy("g").agg(count(lit(1)).as("df")).cache()
+    val freq = graft.Caches.pin(iExploded.groupBy("g").agg(count(lit(1)).as("df")))
     def ranked(exploded: DataFrame) = exploded
       .join(freq, Seq("g"), "left")
       .withColumn("dfz", coalesce(col("df"), lit(0L)))

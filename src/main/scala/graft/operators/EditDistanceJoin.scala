@@ -47,66 +47,74 @@ import org.apache.spark.sql.functions._
   * the candidate set is deduped, and the length band prunes with the
   * carried lengths before any string moves.
   *
-  * CACHE LIFECYCLE (round 14, ADVICE): [[selfJoin]] caches the collapsed
-  * gram counts and the prefix frame for the duration of the returned
-  * LAZY plan (the consuming action lives in the caller, so the operator
-  * cannot unpersist them itself). Long-lived sessions must release them
-  * via `spark.catalog.clearCache()` / `graft.Caches.reset` between
-  * invocations — the bench/verify harness already does.
+  * Pins: [[selfJoin]] pins the collapsed gram counts and the prefix
+  * frame with `graft.Caches.pin`. The returned lazy plan reads both and
+  * its action runs in the caller, so they live until `graft.Caches.reset`
+  * of the caller's session.
   */
 object EditDistanceJoin {
 
   /** Hashed positional q-grams, one compiled allocation-free pass per
-    * string (round 14): the previous `transform(sequence(…), i ->
-    * xxhash64(substring(…)))` ran Catalyst's INTERPRETED lambda
-    * evaluator per gram — measured as j18's dominant stage CPU (a ~1 KB
-    * doc yields ~1k grams, each paying a substring allocation plus an
-    * interpreted xxhash64 call). The gram hash is purely an INTERNAL
-    * identity/order key (count filter, freq order, prefix rank, candidate
-    * equi-join); the verify is the exact thresholded levenshtein on the
-    * original strings — so ANY 64-bit hash yields the same final pairs
-    * (the prefix theorem holds for every shared total order, and a
-    * collision only merges gram identities). FNV-1a over the q UTF-16
-    * units: zero allocations per gram. */
+    * string. An interpreted `transform(sequence(…), i ->
+    * xxhash64(substring(…)))` paid a substring allocation plus an
+    * interpreted hash call per gram, which dominated j18's stage CPU. The
+    * gram hash is purely an INTERNAL identity/order key (count filter,
+    * freq order, prefix rank, candidate equi-join); the verify is the
+    * exact thresholded levenshtein on the original strings — so ANY
+    * 64-bit hash yields the same final pairs (the prefix theorem holds
+    * for every shared total order, and a collision only merges gram
+    * identities). FNV-1a over q code points, not UTF-16 units: Spark's
+    * `length` and `levenshtein` count code points, so a gram must too,
+    * or one edit to a surrogate pair breaks q+1 grams and the count
+    * filter drops a qualifying pair. On BMP text a code point is one
+    * unit, so the hashes equal the per-unit ones. */
   private def gramHashesUdf(q: Int) = udf { (s: String) =>
     if (s == null) null
-    else if (s.length < q) Array.empty[Long]
     else {
-      val out = new Array[Long](s.length - q + 1)
-      var i = 0
-      while (i < out.length) {
+      val n = s.codePointCount(0, s.length)
+      val out = new Array[Long](math.max(n - q + 1, 0))
+      var i = 0 // UTF-16 offset of the gram's first code point
+      var g = 0
+      while (g < out.length) {
         var h = 0xcbf29ce484222325L
         var j = i
-        while (j < i + q) { h ^= s.charAt(j); h *= 0x100000001b3L; j += 1 }
-        out(i) = h
-        i += 1
+        var c = 0
+        while (c < q) {
+          val cp = s.codePointAt(j)
+          h ^= cp; h *= 0x100000001b3L
+          j += Character.charCount(cp); c += 1
+        }
+        out(g) = h
+        i += Character.charCount(s.codePointAt(i))
+        g += 1
       }
       out
     }
   }
 
-  /** Hashed ≤k-deletion neighbourhood, compiled and deduped in one pass
-    * (round 14): replaces k nested interpreted
-    * `array_distinct(flatten(transform(…)))` layers plus a per-variant
-    * substring-concat — the variant hash, like the gram hash above, is
-    * only an equi-join key (the verify is exact), so hashing the variant
-    * CHARACTERS directly (FNV-1a, skipping the deleted positions) is
-    * output-identical and never materializes a variant string. */
+  /** Hashed ≤k-deletion neighbourhood, compiled and deduped in one pass:
+    * the variant hash, like the gram hash above, is only an equi-join key
+    * (the verify is exact), so hashing the variant's code points directly
+    * (FNV-1a, skipping the deleted positions) never materializes a
+    * variant string. A deletion removes one code point, as one
+    * `levenshtein` edit does. */
   private def deletionHashesUdf(k: Int) = udf { (s: String) =>
     if (s == null) null
     else {
-      val n = s.length
+      val n = s.codePointCount(0, s.length)
       val seen = new java.util.HashSet[java.lang.Long]()
       val out = new scala.collection.mutable.ArrayBuffer[Long]()
       def hashSkipping(skip: Array[Int], nSkip: Int): Long = {
         var h = 0xcbf29ce484222325L
-        var i = 0
+        var i = 0 // UTF-16 offset of code point p
+        var p = 0
         var si = 0
-        while (i < n) {
+        while (p < n) {
+          val cp = s.codePointAt(i)
           // skip positions are strictly ascending by construction
-          if (si < nSkip && skip(si) == i) si += 1
-          else { h ^= s.charAt(i); h *= 0x100000001b3L }
-          i += 1
+          if (si < nSkip && skip(si) == p) si += 1
+          else { h ^= cp; h *= 0x100000001b3L }
+          i += Character.charCount(cp); p += 1
         }
         h
       }
@@ -169,16 +177,16 @@ object EditDistanceJoin {
     // pipeline once per consumer (4 copies, measured slower than the
     // window form it replaced). One materialization of the collapsed
     // counts; the cheap sequence-explode re-runs from cache.
-    val cnts = grams.groupBy("sid", "len", "g").agg(count(lit(1)).as("cnt"))
-      .cache()
+    val cnts = graft.Caches.pin(
+      grams.groupBy("sid", "len", "g").agg(count(lit(1)).as("cnt")))
     // eager materialization (round 14): the freq BROADCAST below is built
     // on a separate thread that starts concurrently with the main job —
     // with the cache still cold, both raced through the full
     // scan→gram→count lineage (the profile showed the ~9 s-CPU gram pass
     // TWICE, once under the broadcast build, once under the action).
-    // One count() action pins the cache first; both consumers then read
-    // it. Per-invocation state only — Caches.reset drops it between
-    // bench runs, so every run still pays the full cost once.
+    // One count() action fills the pin first; both consumers then read
+    // it. Caches.reset frees it between bench runs, so every run still
+    // pays the full cost once.
     cnts.count()
     val tokens = cnts.select(col("sid"), col("len"), col("g"),
       explode(expr("sequence(1L, cnt)")).as("occ"))
@@ -212,12 +220,12 @@ object EditDistanceJoin {
     // broadcast instead of degrading to a shuffle join, so past q = 3
     // the hint drops and Catalyst picks the strategy from sizes.
     val freqSide = if (q <= 3) broadcast(freq) else freq
-    val prefix = tokens.join(freqSide, Seq("g", "occ"))
+    // pinned: both sides of the candidate self-join read this frame
+    val prefix = graft.Caches.pin(tokens.join(freqSide, Seq("g", "occ"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("sid").orderBy(col("freq"), col("g"), col("occ"))))
       .filter(col("rk") <= prefixLen)
-      .select("sid", "len", "g", "occ")
-      .cache() // both sides of the candidate self-join read this frame
+      .select("sid", "len", "g", "occ"))
 
     // id+length only through the join: the length band prunes here, the
     // string payload never enters the candidate exchange

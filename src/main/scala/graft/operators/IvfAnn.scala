@@ -515,11 +515,12 @@ object IvfAnn {
     val fs = fsOf(spark, path)
     val next = cellstatsGenDirs(fs, path).map(_._1).maxOption.getOrElse(0L) + 1
     val keepPrev = currentCellstatsGen(fs, path).map(_._1)
-    // localCheckpoint: the merged-update input reads the PREVIOUS
+    // checkpointed: the merged-update input reads the PREVIOUS
     // generation; materializing first keeps the write's lineage from
     // re-reading it mid-retirement and pins the publish to one job
-    stats.localCheckpoint(true)
-      .write.mode("overwrite").parquet(s"$path/cellstats_v$next")
+    val staged = graft.Caches.checkpoint(stats)
+    try staged.write.mode("overwrite").parquet(s"$path/cellstats_v$next")
+    finally graft.Caches.release(staged)
     cellstatsGenDirs(fs, path)
       .filter { case (n, _) => n != next && !keepPrev.contains(n) }
       .foreach { case (_, p) => fs.delete(p, true) }
@@ -553,12 +554,11 @@ object IvfAnn {
     // final plan sees a tiny ExistingRDD instead of the query×nCells
     // nested-loop bound test (which is broadcast-tiny but would read as
     // a BNLJ in the plan audit)
-    val live = queries
+    val live = graft.Caches.checkpoint(queries
       .select(col("query_id"), col("qe"), unitCol(col("qe")).as("qhat"))
       .join(broadcast(stats),
         distCol(col("qhat"), col("anchor")) <= lit(r + eps) + col("radius"))
-      .select("query_id", "qe", "cell")
-      .localCheckpoint(true)
+      .select("query_id", "qe", "cell"))
     val cells = live.select("cell").distinct().collect().map(_.getInt(0)).toSeq
     (live, cells, stats.count()) // stats = one row per cell
   }

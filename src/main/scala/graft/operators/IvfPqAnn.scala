@@ -220,13 +220,15 @@ object IvfPqAnn {
     IndexTombstones.clear(spark, path)
     val coarse = IvfAnn.fitCentroids(corpus, nCells)
     val cmicro = coarse.map(_.map(microOf))
-    val assigned = assignResiduals(corpus, cmicro).persist()
-    val cm = PqAnn.fitMicro(assigned.select(col("vec_id"), col("res")))
-    assigned
-      .select(col("vec_id"), col("embedding"), col("cell"),
-              PqAnn.encodeUdf(cm)(col("res")).as("codes"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
-    assigned.unpersist()
+    val assigned = graft.Caches.pin(assignResiduals(corpus, cmicro))
+    val cm = try {
+      val cm = PqAnn.fitMicro(assigned.select(col("vec_id"), col("res")))
+      assigned
+        .select(col("vec_id"), col("embedding"), col("cell"),
+                PqAnn.encodeUdf(cm)(col("res")).as("codes"))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
+      cm
+    } finally graft.Caches.release(assigned)
     coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell", "centroid")
       .write.mode("overwrite").parquet(s"$path/centroids")

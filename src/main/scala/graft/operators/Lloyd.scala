@@ -4,7 +4,6 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** The deterministic Lloyd (k-means) fit behind the three ANN
   * quantizers — IvfAnn's coarse centroids, PqAnn's codebooks and
@@ -135,8 +134,7 @@ object Lloyd {
                       (assign: (Array[Array[T]], Array[Long], Int, Int) => Int)
       : Array[Array[Array[T]]] = {
     import vectors.sparkSession.implicits._
-    val rows = vectors.as[(Long, Array[Long])].rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = graft.Caches.pin(vectors.sparkSession, vectors.as[(Long, Array[Long])].rdd)
     try {
       val seeds = rows.takeOrdered(k)(Ordering.by { case (id, _) => (seedKey(id), id) })
         .map(_._2)
@@ -177,7 +175,7 @@ object Lloyd {
         it += 1
       }
       cents
-    } finally rows.unpersist(blocking = false)
+    } finally graft.Caches.release(rows)
   }
 
   private def addAll(a: Array[Long], b: Array[Long]): Array[Long] = {

@@ -39,22 +39,21 @@ object NearDupPairs {
     * [[graft.Caches.memo]]: d2, d5 and the x18 pipeline all ask for pairs
     * over semantically identical shingle frames, so one computation
     * serves them all, and only the SMALL pairs result stays resident (the
-    * wide hashed-shingle cache is released as soon as the pairs
+    * wide hashed-shingle pin is released as soon as the pairs
     * materialize). */
   def over(shingled: DataFrame): DataFrame =
     graft.Caches.memo(shingled.sparkSession,
         ("neardup pairs", shingled.queryExecution.analyzed.canonicalized))(
-      compute(shingled))(_ => ())
+      compute(shingled))
 
   private def compute(shingled: DataFrame): DataFrame = {
     // `sh` is read three times (inverted index + both verify-join
-    // sides), so it caches for the duration of the call; the small
-    // pairs result is materialized eagerly (localCheckpoint) so the
-    // cache can be released before returning.
-    val sh = shFrame(shingled).cache()
-    val pairs = verify(sh, candidatesOf(sh)).localCheckpoint(eager = true)
-    sh.unpersist(blocking = false)
-    pairs
+    // sides), so it is pinned for the duration of the call; the small
+    // pairs result is checkpointed so the pin can be released before
+    // returning.
+    val sh = graft.Caches.pin(shFrame(shingled))
+    try graft.Caches.checkpoint(verify(sh, candidatesOf(sh)))
+    finally graft.Caches.release(sh)
   }
 
   /** Document frequency per shingle hash (one agg over the exploded
@@ -124,12 +123,9 @@ object NearDupPairs {
     * on (AdversarialDedupSpec asserts it; SCALING.md records the
     * decades). Not memoized; bypasses `over`'s cache. */
   private[graft] def stats(shingled: DataFrame): (Long, Long) = {
-    val sh = shFrame(shingled).cache()
-    val cand = candidatesOf(sh).cache()
-    val nCand = cand.count()
-    val nPairs = verify(sh, cand).count()
-    cand.unpersist(blocking = false)
-    sh.unpersist(blocking = false)
-    (nCand, nPairs)
+    val sh = graft.Caches.pin(shFrame(shingled))
+    val cand = graft.Caches.pin(candidatesOf(sh))
+    try (cand.count(), verify(sh, cand).count())
+    finally { graft.Caches.release(cand); graft.Caches.release(sh) }
   }
 }

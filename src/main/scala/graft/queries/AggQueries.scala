@@ -973,10 +973,10 @@ object AggQueries {
         |       ${hllCorrectedSql("est_union", "vu")} AS est_union_corrected,
         |       ${hllBandSql("est_union", "vu")} AS band_union
         |FROM ests ORDER BY flag_a, flag_b""".stripMargin) { (s, dir) =>
-      val sk = Tables.load(s, dir, "lineitem")
+      // 3 rows × 64 longs — the "persisted sketch table"
+      val sk = graft.Caches.pin(Tables.load(s, dir, "lineitem")
         .groupBy("l_returnflag")
-        .agg(expr("hll_sketch(l_orderkey, 6)").as("regs"))
-        .cache() // 3 rows × 64 longs — the "persisted sketch table"
+        .agg(expr("hll_sketch(l_orderkey, 6)").as("regs")))
       val unionRegs = "zip_with(a.regs, b.regs, (x, y) -> greatest(x, y))"
       sk.as("a").join(broadcast(sk.as("b")),
           col("a.l_returnflag") < col("b.l_returnflag"))
@@ -1188,10 +1188,10 @@ object AggQueries {
         |FROM cnts c JOIN pairs p
         |  ON p.flag_a = c.flag_a AND p.flag_b = c.flag_b
         |ORDER BY c.flag_a, c.flag_b""".stripMargin) { (s, dir) =>
-      val sk = Tables.load(s, dir, "lineitem")
+      // 3 rows × ≤64 longs — the persisted sketch table
+      val sk = graft.Caches.pin(Tables.load(s, dir, "lineitem")
         .groupBy("l_returnflag")
-        .agg(expr(s"kmv_sketch(l_orderkey, $KmvK)").as("kept"))
-        .cache() // 3 rows × ≤64 longs — the persisted sketch table
+        .agg(expr(s"kmv_sketch(l_orderkey, $KmvK)").as("kept")))
       sk.as("a").join(broadcast(sk.as("b")),
           col("a.l_returnflag") < col("b.l_returnflag"))
         .select(
@@ -1266,12 +1266,12 @@ object AggQueries {
         |       fp_hits * 10000 // fp_probes AS fpr_bp
         |FROM words CROSS JOIN bset CROSS JOIN stats
         |ORDER BY word_idx""".stripMargin) { (s, dir) =>
-      val bf = Tables.load(s, dir, "orders")
+      // one row: the 16 KiB bitmap + its popcount
+      val bf = graft.Caches.pin(Tables.load(s, dir, "orders")
         .agg(expr(s"bloom_agg(o_orderkey, $BloomBits, 3)").as("words"))
         .withColumn("bits_set",
           expr("aggregate(transform(words, w -> bit_count(w)), 0, (a, b) -> a + b)")
-            .cast("long"))
-        .cache() // one row: the 16 KiB bitmap + its popcount
+            .cast("long")))
       val members = Tables.load(s, dir, "orders")
         .select(col("o_orderkey").as("k")).distinct()
       val nonMembers = Tables.load(s, dir, "lineitem")

@@ -71,7 +71,8 @@ object BpeQueries {
         .groupBy("word").agg(count(lit(1)).as("freq"))
         .withColumn("enc", regexp_replace(col("word"), "(.)", S + "$1" + E))
         .select("freq", "enc")
-      var words = words0.localCheckpoint(eager = true)
+      var ckpt = graft.Caches.checkpoint(words0)
+      var words = ckpt
       val merges = Seq.newBuilder[(Long, String, String, Long)]
       var r = 1
       var exhausted = false
@@ -98,19 +99,26 @@ object BpeQueries {
             .withColumn("enc",
               call_function("replace", col("enc"), lit(pat), lit(mergedSym)))
             .select("freq", "enc")
-          // checkpoint every OTHER round (round 13): each eager
-          // localCheckpoint is a full materialization job over the
-          // vocabulary table, and the lineage between checkpoints is a
-          // single codegen'd replace — recomputing one replace in the
-          // next round's aggregate is cheaper than materializing every
-          // round. Merge results are a pure function of the data either
-          // way (same argmax per round).
-          if (r % 2 == 0) words = words.localCheckpoint(eager = true)
+          // checkpoint every OTHER round: each eager checkpoint is a
+          // full materialization job over the vocabulary table, and the
+          // lineage between checkpoints is a single codegen'd replace —
+          // recomputing one replace in the next round's aggregate is
+          // cheaper than materializing every round. Merge results are a
+          // pure function of the data either way (same argmax per
+          // round). A superseded checkpoint is freed at once.
+          if (r % 2 == 0) {
+            val prev = ckpt
+            ckpt = graft.Caches.checkpoint(words)
+            words = ckpt
+            graft.Caches.release(prev)
+          }
           r += 1
         }
       }
+      // the merges are driver rows, so the last checkpoint dies here
+      graft.Caches.release(ckpt)
       merges.result()
-    }(_ => ())
+    }
 
   private val MergesCkptVersion = "v1"
 

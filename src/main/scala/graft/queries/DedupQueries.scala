@@ -72,10 +72,9 @@ object DedupQueries {
     * (d3 = whole corpus, d3b = the MinhashStratum docs): band-bucket
     * candidate self-join, exact-Jaccard verification. */
   private def minhashLshPairs(sh: DataFrame): DataFrame = {
-    val bandsDf = sh
+    val bandsDf = graft.Caches.pin(sh
       .select(col("doc_id"), posexplode(bandKeysFast(16, 4)(col("s"))))
-      .toDF("doc_id", "band", "bkey")
-      .cache()
+      .toDF("doc_id", "band", "bkey"))
     val cand = bandsDf.as("a")
       .join(bandsDf.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
@@ -128,9 +127,8 @@ object DedupQueries {
 
   /** d4's engine pipeline over an arbitrary documents frame. */
   private def simhashPairs(docs: DataFrame): DataFrame = {
-    val sig = docs
-      .select(col("doc_id"), simhashPortableFast(tokens(col("text"))).as("sig"))
-      .cache()
+    val sig = graft.Caches.pin(docs
+      .select(col("doc_id"), simhashPortableFast(tokens(col("text"))).as("sig")))
     val chunks = sig.select(col("doc_id"), col("sig"),
         explode(simhashChunks(col("sig"), 4, sigBits = 60)).as("c"))
       .select(col("doc_id"), col("sig"), col("c.chunk_idx"), col("c.chunk_val"))
@@ -221,9 +219,9 @@ object DedupQueries {
          |FROM l21 ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
       val edges = jaccardPairs(s, dir).select("doc_a", "doc_b")
-      val und = edges.select(col("doc_a").as("u"), col("doc_b").as("v"))
-        .unionByName(edges.select(col("doc_b").as("u"), col("doc_a").as("v")))
-        .localCheckpoint() // one materialization of the edge list
+      // one materialization of the edge list
+      val und = graft.Caches.checkpoint(edges.select(col("doc_a").as("u"), col("doc_b").as("v"))
+        .unionByName(edges.select(col("doc_b").as("u"), col("doc_a").as("v"))))
       def propagate(l: org.apache.spark.sql.DataFrame) = {
         // one join + one agg per step: own label rides the union into the
         // same min-aggregate, replacing the join + left-join-back form
@@ -236,12 +234,13 @@ object DedupQueries {
       }
       // 3 propagation steps per action (labels travel 3 hops per check —
       // near-dup clusters are shallow, so most corpora converge in one
-      // round plus the confirming round); localCheckpoint truncates the
+      // round plus the confirming round); a checkpoint truncates the
       // lineage so round k does not replan rounds 1..k−1 — the standard
-      // Spark iterative-algorithm shape
-      var labels = und.select(col("u").as("doc_id")).distinct()
-        .withColumn("label", col("doc_id"))
-        .localCheckpoint()
+      // Spark iterative-algorithm shape. A superseded round is freed at
+      // once, and so is the edge list after the loop; the last round
+      // lives until Caches.reset, because the returned plan reads it.
+      var labels = graft.Caches.checkpoint(und.select(col("u").as("doc_id")).distinct()
+        .withColumn("label", col("doc_id")))
       // convergence check via the label sum: propagate only ever lowers a
       // label (min of self and neighbors), so the sum is stationary iff
       // no label changed — a cheap aggregate instead of a change-join
@@ -251,14 +250,15 @@ object DedupQueries {
       var converged = false
       var outer = 0
       while (!converged && outer < 7) {
-        val next = Iterator.iterate(labels)(propagate).drop(3).next()
-          .localCheckpoint()
+        val next = graft.Caches.checkpoint(Iterator.iterate(labels)(propagate).drop(3).next())
         val nextSum = labelSum(next)
         converged = nextSum == prevSum
         prevSum = nextSum
+        graft.Caches.release(labels)
         labels = next
         outer += 1
       }
+      graft.Caches.release(und)
       labels.select(col("doc_id"), col("label").as("canonical_id"))
         .orderBy("doc_id")
     },
@@ -269,7 +269,7 @@ object DedupQueries {
     // per-pair detection probability is ≈1, and both data and xxhash64 are
     // deterministic, so the match is stable (verified at sf0.01).
     q("d3_minhash_lsh", jaccardPairsSql) { (s, dir) =>
-      minhashLshPairs(shingled(s, dir).cache())
+      minhashLshPairs(graft.Caches.pin(shingled(s, dir)))
     },
 
     // d3b — the STRATUM TWIN (round 13): d3's exact pipeline restricted
@@ -282,10 +282,9 @@ object DedupQueries {
     // at sf1 behind a rows-only check.
     q("d3b_minhash_stratum",
       jaccardPairsSqlOver(s"(SELECT * FROM documents WHERE $MinhashStratum)")) { (s, dir) =>
-      val sh = Tables.load(s, dir, "documents")
+      minhashLshPairs(graft.Caches.pin(Tables.load(s, dir, "documents")
         .filter(expr(MinhashStratum))
-        .select(col("doc_id"), shingles(col("text"), 3).as("s")).cache()
-      minhashLshPairs(sh)
+        .select(col("doc_id"), shingles(col("text"), 3).as("s"))))
     },
 
     // Incremental LSH index maintenance: the operational shape at
@@ -310,7 +309,7 @@ object DedupQueries {
         |      / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.7
         |  AND (a.doc_id % 17 = 0 OR b.doc_id % 17 = 0)
         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-      val sh = shingled(s, dir).cache()
+      val sh = graft.Caches.pin(shingled(s, dir))
       val bands = sh
         .select(col("doc_id"), posexplode(bandKeysFast(16, 4)(col("s"))))
         .toDF("doc_id", "band", "bkey")

@@ -142,20 +142,19 @@ object GraphQueries {
         |              CAST(${15 * Scale / 100} + (85 * COALESCE(c3.contrib, 0)) // 100 AS BIGINT) AS pr
         |       FROM n LEFT JOIN c3 USING (node_id))
         |SELECT node_id, pr FROM r3 ORDER BY node_id""".stripMargin) { (s, dir) =>
-      // cache(), not checkpoint: the three iterations re-read the edge
-      // list from cache, and the LAZY plan keeps the full lineage
-      // visible to PlanHygieneSpec / EXPLAIN.md (Caches.reset releases it
-      // between bench runs — the repo-wide pattern)
-      val e = edges(s, dir).cache()
-      // node set + degree-annotated edge list cached across the three
-      // iterations (round 13): each is referenced once PER iteration and
-      // an uncached reference re-ran its distinct/agg-join over `e` every
+      // pinned, not checkpointed: the three iterations re-read the edge
+      // list from the pin, and the LAZY plan keeps the full lineage
+      // visible to PlanHygieneSpec / EXPLAIN.md. The returned plan reads
+      // every pin below, so they live until Caches.reset.
+      val e = graft.Caches.pin(edges(s, dir))
+      // node set + degree-annotated edge list pinned across the three
+      // iterations: each is referenced once PER iteration and an
+      // unpinned reference re-ran its distinct/agg-join over `e` every
       // time (2 extra aggregates + a join per step) — the standard
       // iterative-PageRank persist (GraphX persists exactly these).
-      // Same rows; Caches.reset releases them between bench runs.
-      val n = e.select(col("src").as("node_id")).distinct().cache()
-      val withDeg = e.join(
-        e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src").cache()
+      val n = graft.Caches.pin(e.select(col("src").as("node_id")).distinct())
+      val withDeg = graft.Caches.pin(e.join(
+        e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"))
       var r = n.withColumn("pr", lit(Scale))
       for (_ <- 1 to 3) {
         // broadcast the RANK side (round 14): it is O(|V|) (2.1k rows
@@ -270,7 +269,9 @@ object GraphQueries {
         |UNION ALL SELECT start, step, node FROM s3
         |UNION ALL SELECT start, step, node FROM s4
         |ORDER BY start, step""".stripMargin) { (s, dir) =>
-      val e = edges(s, dir).cache()
+      // the returned plan reads e and every step, so they stay pinned
+      // until Caches.reset
+      val e = graft.Caches.pin(edges(s, dir))
       val starts = e.where(col("src") % 2 === 0)
         .select(col("src").as("start")).distinct()
         .orderBy("start").limit(8)
@@ -284,20 +285,18 @@ object GraphQueries {
         // building a 2M-row hash relation of the whole edge list
         // (profile: 8 broadcast-build stages at 2-3.5 s CPU each, the
         // query's entire cost). With the 8-row side broadcast, e streams
-        // map-side from its cache. Same rows either way.
-        frontier = broadcast(frontier)
+        // map-side from its pin. Same rows either way. Each ≤8-row step
+        // is pinned too: step i's subtree is consumed TWICE — by step
+        // i+1's chain and by the final union — and without the pin each
+        // consumer re-ran the full e-scan + probe + min_by (profile: 8
+        // heavy map stages for 4 steps).
+        frontier = graft.Caches.pin(broadcast(frontier)
           .join(e, frontier("node") === e("src"))
           .withColumn("h",
             md5(concat_ws("|", col("start"), lit(i), col("node"), col("dst"))))
           .groupBy("start")
           .agg(expr("min_by(dst, h)").as("node"))
-          .select(col("start"), lit(i).as("step"), col("node"))
-          // cache each ≤8-row step (round 14): step i's subtree is
-          // consumed TWICE — by step i+1's chain and by the final union —
-          // and without the cache each consumer re-ran the full e-scan +
-          // probe + min_by (profile: 8 heavy map stages for 4 steps).
-          // Caches.reset releases them between bench runs.
-          .cache()
+          .select(col("start"), lit(i).as("step"), col("node")))
         path = path.unionByName(frontier)
       }
       path.orderBy("start", "step")
@@ -341,19 +340,19 @@ object GraphQueries {
         |FROM e3 GROUP BY src HAVING count(*) >= 18
         |ORDER BY node_id""".stripMargin) { (s, dir) =>
       val pairs = doulionPairs(s, dir)
-      var e = pairs.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(pairs.select(col("v").as("src"), col("u").as("dst")))
-        .cache()
+      // the returned plan reads every round's pin, so they live until
+      // Caches.reset
+      var e = graft.Caches.pin(pairs.select(col("u").as("src"), col("v").as("dst"))
+        .unionByName(pairs.select(col("v").as("src"), col("u").as("dst"))))
       for (_ <- 1 to 3) {
         val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
           .where(col("deg") >= 18).select("src")
-        // cache each round's survivor set: round r+1 references round r
-        // TWICE (degree count + endpoint filter), so an uncached chain
+        // pin each round's survivor set: round r+1 references round r
+        // TWICE (degree count + endpoint filter), so an unpinned chain
         // re-evaluates 2^r times (measured: 9.1 s -> 4.4 s at sf0.1)
-        e = e.join(keep, "src")
+        e = graft.Caches.pin(e.join(keep, "src")
           .join(keep.withColumnRenamed("src", "dst"), "dst")
-          .select("src", "dst")
-          .cache()
+          .select("src", "dst"))
       }
       e.groupBy(col("src").as("node_id"))
         .agg(count(lit(1)).as("core_deg"))
@@ -441,8 +440,8 @@ object GraphQueries {
     // upper approximation, this is the production prune): peel rounds
     // repeat until the edge count stops changing, with a
     // `localCheckpoint` every 3rd round truncating lineage (d5's
-    // pattern — an uncached/untruncated chain doubles the plan per
-    // round) and per-round cache so each round's TWO references to the
+    // pattern — an unpinned/untruncated chain doubles the plan per
+    // round) and per-round pin so each round's TWO references to the
     // previous survivor set (degree count + endpoint filter) share one
     // materialization. Convergence measured: 6 effective rounds + 1
     // confirming no-op at BOTH sf0.01 and sf0.1 (the mean degree of the
@@ -454,9 +453,8 @@ object GraphQueries {
     // tail rounds.
     q("g6_kcore_fixpoint", kcoreFixSql(k = 18, rounds = 10)) { (s, dir) =>
       val pairs = doulionPairs(s, dir)
-      var e = pairs.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(pairs.select(col("v").as("src"), col("u").as("dst")))
-        .cache()
+      var e = graft.Caches.pin(pairs.select(col("u").as("src"), col("v").as("dst"))
+        .unionByName(pairs.select(col("v").as("src"), col("u").as("dst"))))
       var n = e.count()
       var round = 0
       var converged = false
@@ -472,9 +470,11 @@ object GraphQueries {
           .join(keep.withColumnRenamed("src", "dst"), "dst")
           .select("src", "dst")
         val staged =
-          if (round % 3 == 2) next.localCheckpoint() else next.cache()
+          if (round % 3 == 2) graft.Caches.checkpoint(next) else graft.Caches.pin(next)
         val m = staged.count()
-        e.unpersist()
+        // a superseded round is freed at once; the last one lives until
+        // Caches.reset, because the returned plan reads it
+        graft.Caches.release(e)
         e = staged
         converged = m == n
         n = m

@@ -137,15 +137,13 @@ object PipelineQueries {
   /** Spark stage frames (raw-features, lang, quality, exact, neardup,
     * decon), built once per (session, data dir) in
     * [[graft.Caches.memo]] and shared by x18/x19, so the second caller
-    * reuses the two cached frames instead of pinning a second copy in
-    * storage memory. Releasing the memo unpersists them. The near-dup drop
-    * rule is greedy-by-id: a doc is dropped when ANY lower-id survivor is
-    * a J ≥ 0.7 near-dup (same rule on both engines; full transitive
-    * clustering is d5's job). */
-  private def built(s: SparkSession, dir: String)
-      : (Seq[(String, DataFrame)], DataFrame, Seq[DataFrame]) =
-    graft.Caches.memo(s, ("pipeline stages", dir))(buildStages(s, dir))(
-      _._3.foreach(_.unpersist(blocking = false)))
+    * reuses the two pinned frames instead of pinning a second copy in
+    * storage memory; `Caches.reset` frees both with the memo. The
+    * near-dup drop rule is greedy-by-id: a doc is dropped when ANY lower-id
+    * survivor is a J ≥ 0.7 near-dup (same rule on both engines; full
+    * transitive clustering is d5's job). */
+  private def built(s: SparkSession, dir: String): (Seq[(String, DataFrame)], DataFrame) =
+    graft.Caches.memo(s, ("pipeline stages", dir))(buildStages(s, dir))
 
   private def stages(s: SparkSession, dir: String): Seq[(String, DataFrame)] =
     built(s, dir)._1
@@ -154,16 +152,15 @@ object PipelineQueries {
     * the doc survives (0_raw=0 .. 5_decon=5) — x19's single-pass input. */
   private def labeled(s: SparkSession, dir: String): DataFrame = built(s, dir)._2
 
-  private def buildStages(s: SparkSession, dir: String)
-      : (Seq[(String, DataFrame)], DataFrame, Seq[DataFrame]) = {
+  private def buildStages(s: SparkSession, dir: String): (Seq[(String, DataFrame)], DataFrame) = {
     val docs = Tables.load(s, dir, "documents")
-    val feat = docs
+    // x19 aggregates 3 stages over this frame; x18 re-walks it
+    val feat = graft.Caches.pin(docs
       .select(col("doc_id"), col("source"), col("text"), docFeatUdf(col("text")).as("ft"))
       .select(col("doc_id"), col("source"), col("text"),
         col("ft.nTokens").as("n_tokens"), col("ft.nStop").as("n_stop"),
         col("ft.sumLen").as("sum_len"), col("ft.pred").as("pred"),
-        col("ft.nBg").as("n_bg"), col("ft.nBgDistinct").as("n_bg_distinct"))
-      .cache() // x19 aggregates 3 stages over this frame; x18 re-walks it
+        col("ft.nBg").as("n_bg"), col("ft.nBgDistinct").as("n_bg_distinct")))
     val s1 = feat.filter(col("pred") === "en")
     val s2 = s1.filter(
       col("n_tokens") >= 10 &&
@@ -176,9 +173,8 @@ object PipelineQueries {
       .agg(min("doc_id").as("doc_id"))
       .select("doc_id")
     val s3 = s2.join(keepers, Seq("doc_id"), "left_semi")
-    val sh3 = s3
-      .select(col("doc_id"), col("source"), col("n_tokens"), shingles(col("text"), 3).as("s"))
-      .cache()
+    val sh3 = graft.Caches.pin(s3
+      .select(col("doc_id"), col("source"), col("n_tokens"), shingles(col("text"), 3).as("s")))
     val nd = graft.operators.NearDupPairs.over(sh3.select("doc_id", "s"))
       .select(col("doc_b").as("doc_id")).distinct()
     val s4 = sh3.join(nd, Seq("doc_id"), "left_anti")
@@ -238,8 +234,7 @@ object PipelineQueries {
 
     (Seq("0_raw" -> feat, "1_lang" -> s1, "2_quality" -> s2,
          "3_exact" -> s3, "4_neardup" -> s4, "5_decon" -> s5),
-     labeledDf,
-     Seq(feat, sh3))
+     labeledDf)
   }
 
   val defs: Seq[QueryDef] = Seq(

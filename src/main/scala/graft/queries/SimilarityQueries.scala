@@ -906,9 +906,8 @@ object SimilarityQueries {
       // every published number folds from it (sums of longs re-associate
       // exactly, so the two-level sum equals the oracle's flat sum);
       // materialized so agg/occ/ratio don't each re-scan the corpus
-      val pc = p.groupBy("part", "cell")
-        .agg(count(lit(1)).as("cn"), sum("qerr_nano").as("cs"))
-        .localCheckpoint(true)
+      val pc = graft.Caches.checkpoint(p.groupBy("part", "cell")
+        .agg(count(lit(1)).as("cn"), sum("qerr_nano").as("cs")))
       val agg = pc.groupBy("part")
         .agg(sum("cn").as("n"), sum("cs").as("s"))
       val occ = pc.groupBy("part").agg(max("cn").as("mx"))

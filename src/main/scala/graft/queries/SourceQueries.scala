@@ -245,20 +245,20 @@ object SourceQueries {
     // asserted in HtmlSinkSpec.
     QueryDef.qRowsOnly("s11_html_sink") { (s, dir) =>
       import graft.sources.HtmlSink
-      // cache: the two renderTable collects below would otherwise each
-      // re-run the global top-33 reduction
-      val ranked = Tables.load(s, dir, "orders")
+      // pinned: the two renderTable collects below would otherwise each
+      // re-run the global top-33 reduction; both run here, so the pin
+      // dies with them
+      val ranked = Caches.pin(Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .orderBy(desc("o_totalprice"), col("o_orderkey"))
         .limit(33)
         .withColumn("rnk", row_number().over(
           org.apache.spark.sql.expressions.Window
-            .orderBy(desc("o_totalprice"), col("o_orderkey"))))
-        .cache()
-      val top = HtmlSink.renderTable(
-        ranked.filter(col("rnk") <= 10), "Top 10 Orders")
-      val bottom = HtmlSink.renderTable(
-        ranked.filter(col("rnk").between(24, 33)), "Orders 24-33")
+            .orderBy(desc("o_totalprice"), col("o_orderkey")))))
+      val (top, bottom) = try (
+        HtmlSink.renderTable(ranked.filter(col("rnk") <= 10), "Top 10 Orders"),
+        HtmlSink.renderTable(ranked.filter(col("rnk").between(24, 33)), "Orders 24-33"))
+      finally Caches.release(ranked)
       val html = HtmlSink.document(HtmlSink.sideBySide(Seq(top, bottom)))
       HtmlSink.write(s, html, s"${Caches.scratch("s11", dir)}/leaderboard.html")
       import s.implicits._

@@ -154,9 +154,8 @@ object TextQueries {
         |FROM p a JOIN p b ON a.f = b.f AND a.doc_id < b.doc_id
         |GROUP BY 1,2 HAVING count(*) >= 2
         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-      val fp = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), explode(winnowing(col("text"), 3, 4)).as("f"))
-        .cache()
+      val fp = graft.Caches.pin(Tables.load(s, dir, "documents")
+        .select(col("doc_id"), explode(winnowing(col("text"), 3, 4)).as("f")))
       // stop-fingerprint removal: window-min selection biases toward
       // small hash values, so popular shingles become fingerprints of
       // MANY docs — hot keys whose self-join cost is freq² with no
@@ -1230,12 +1229,11 @@ object TextQueries {
       val tc = tok.groupBy("term")
         .agg(sum("in_a").as("a"), sum(lit(1) - col("in_a")).as("b"))
       val tot = tc.agg(sum("a").as("na"), sum("b").as("nb"))
-      val scored = tc.crossJoin(broadcast(tot))
+      val scored = graft.Caches.pin(tc.crossJoin(broadcast(tot))
         .select(col("term"), col("a"), col("b"),
           (((col("a") + 1) * (col("nb") - col("b") + 1)).cast("double")
             / ((col("na") - col("a") + 1) * (col("b") + 1)).cast("double"))
-            .as("odds"))
-        .cache()
+            .as("odds")))
       val sideA = scored.orderBy(desc("odds"), col("term")).limit(25)
         .select(lit("A").as("side"), col("term"),
                 col("a").as("n_in"), col("b").as("n_out"), col("odds"))

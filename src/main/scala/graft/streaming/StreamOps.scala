@@ -19,9 +19,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamOps {
 
-  val eventSchema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-    "event_type STRING, value DOUBLE, props STRING"
-
   /** File-source stream over parquet event files. The testdata's ts is
     * TIMESTAMP(NANOS); reading through the nanosAsLong legacy conf (set
     * by `Graft.configure`) and truncating to micros matches Tables.load /
@@ -277,7 +274,7 @@ object StreamOps {
     * survives a checkpoint wipe or a replay from offset 0, because the
     * sink itself is the state.
     *
-    * The fresh set is materialized (persist + count) BEFORE the append
+    * The fresh set is materialized (pinned + count) BEFORE the append
     * so the anti-join's scan of `path` completes before new files land
     * in it. The anti-join is null-safe (`<=>`): a redelivered NULL-key
     * row must be recognized as already landed, or replays would append
@@ -315,18 +312,18 @@ object StreamOps {
        })
         .map(_.select(col("event_id").as("landed_id")))
         .getOrElse(batch.select(col("event_id").as("landed_id")).limit(0))
-    val fresh = batch.dropDuplicates("event_id")
-      .join(existingKeys, col("event_id") <=> col("landed_id"), "left_anti")
-      .persist()
-    fresh.count()
-    fresh.write.mode("append").parquet(path)
-    fresh.unpersist()
-    ()
+    val fresh = graft.Caches.pin(batch.dropDuplicates("event_id")
+      .join(existingKeys, col("event_id") <=> col("landed_id"), "left_anti"))
+    try {
+      fresh.count()
+      fresh.write.mode("append").parquet(path)
+    } finally graft.Caches.release(fresh)
   }
 
   /** x25's streaming twin: model-gated ingest — each arriving
     * micro-batch is scored against a STANDING bigram LM (trained once
-    * on the static corpus, vocab-sized count frames persisted) and only
+    * on the static corpus, vocab-sized count frames pinned until
+    * `Caches.reset` of their session) and only
     * kept docs land. Per-doc scoring is batch-local (a doc's bigrams
     * live in its own row), so per-micro-batch `foreachBatch` scoring
     * equals the batch x25 result exactly, and the read-only LM means
@@ -353,7 +350,7 @@ object StreamOps {
                  checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.functions.TextFunctions._
     val (bi, uni, vocab) = lmCounts(train)
-    bi.persist(); uni.persist(); vocab.persist()
+    Seq(bi, uni, vocab).foreach(graft.Caches.pin(_))
     val lineage = new IdempotentLanding.Lineage(checkpoint)
     docs.dropDuplicates("doc_id").writeStream
       .outputMode("append")
@@ -558,7 +555,7 @@ object StreamOps {
   /** x27's streaming twin: per-micro-batch distribution drift monitor.
     * Each arriving batch's smoothed token distribution is KL-compared
     * to the STANDING corpus distribution (count frame + scalars built
-    * once, persisted) and one (batch_id, n_tokens, kl) row lands per
+    * once, pinned until `Caches.reset`) and one (batch_id, n_tokens, kl) row lands per
     * micro-batch — the ingest alarm that fires when a feed's content
     * mix shifts away from the corpus it is joining. Read-only reference
     * frames ⇒ zero cross-batch state; the epoch id keys the output row
@@ -569,7 +566,7 @@ object StreamOps {
                        checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.functions.TextFunctions._
     val (corpus, gs) = corpusCounts(refCorpus)
-    corpus.persist(); gs.persist()
+    Seq(corpus, gs).foreach(graft.Caches.pin(_))
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)

@@ -10,8 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * tools: its only mains are Bench and Verify. Parquet is read through
   * `Tables.parquet`, so no read runs a schema-inference job. Engine-owned
   * state (memos, build-once artifacts, scratch paths) is kept only by
-  * `Caches`. The ANN fits' seed order and micro-unit rounding are
-  * written only in `Lloyd`. Every doc block in src/main documents a
+  * `Caches`, and so is every pinned frame: src/main persists,
+  * checkpoints and frees frames only through `Caches.pin`,
+  * `Caches.checkpoint` and `Caches.release`, so `Caches.reset` frees
+  * exactly what its session pinned. The ANN fits' seed order and
+  * micro-unit rounding are written only in `Lloyd`. Every doc block in src/main documents a
   * definition. The needles are concatenated so this file never matches
   * itself. */
 class SessionHygieneSpec extends AnyFunSuite {
@@ -70,6 +73,16 @@ class SessionHygieneSpec extends AnyFunSuite {
     Seq("java.io." + "tmpdir", "hashCode." + "toHexString", "concurrent." + "TrieMap").foreach { needle =>
       assertNone(needle, mainOffenders(_.contains(needle), Set("Caches.scala")),
         "use Caches.memo, Caches.once and Caches.scratch")
+    }
+  }
+
+  test("src/main pins and frees frames only in Caches.scala") {
+    // a pin made anywhere else has its own release path, which a failed
+    // fit skips, reset never reaches or a driver GC alone frees
+    Seq(".cache" + "()", ".persist" + "(", "localCheckpoint" + "(", "unpersist" + "(",
+      "clearCache" + "(").foreach { needle =>
+      assertNone(needle, mainOffenders(_.contains(needle), Set("Caches.scala")),
+        "use Caches.pin, Caches.checkpoint and Caches.release")
     }
   }
 
