@@ -14,7 +14,10 @@ import org.apache.spark.storage.StorageLevel
   *
   *  - [[memo]] keeps a per-session result that queries with a common
   *    sub-plan share: d2/d5/x18 share near-dup pairs, x18/x19 share the
-  *    pipeline stage frames, x34/x38 share the trained BPE merges.
+  *    pipeline stage frames, x34/x38 share the trained BPE merges, and
+  *    `serve.PlayQueries` keeps the viewer's last-requested frame: one
+  *    per session, fetched when a request names a frame it does not hold
+  *    and replaced by the next such request.
   *  - [[pin]] persists a frame that several consumers read, and
   *    [[checkpoint]] materializes one eagerly and cuts its lineage. A pin
   *    whose consumers all run inside the call that made it is freed by
@@ -63,6 +66,10 @@ object Caches {
     * pins lives as long as the memo: both end at [[reset]]. */
   def memo[A](session: SparkSession, key: Any)(build: => A): A =
     memos.computeIfAbsent((session, key), _ => new Slot).get(build).asInstanceOf[A]
+
+  /** How many memos `session` holds. */
+  private[graft] def memoCount(session: SparkSession): Int =
+    memos.keySet.asScala.count(_._1 eq session)
 
   /** Every live pin (a Dataset or an RDD, by identity) with the session
     * it belongs to and the call that frees it. */
