@@ -123,6 +123,13 @@ object TextFunctions {
     f(text)
   }
 
+  /** DuckDB twin of [[shingles]] over the SQL text expression `text`:
+    * the distinct `n`-token windows, or the whole text when it has
+    * fewer than `n` tokens. */
+  def shinglesSql(text: String, n: Int): String =
+    s"""list_distinct([array_to_string(string_split($text,' ')[i:i+${n - 1}], ' ')
+       |           for i in range(1, greatest(len(string_split($text,' ')) - ${n - 2}, 2))])""".stripMargin
+
   /** Small per-language marker-word profiles (public common stopwords). */
   val langProfiles: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "a", "and", "of", "to", "in", "is"),

@@ -10,9 +10,8 @@ import org.apache.spark.sql.functions._
   * compressed `codes` layout). One implementation of the protocol —
   * O(|delete|) tombstone appends, broadcast left-anti drops, the
   * survivors-rewrite compaction with its crash ordering — so the two
-  * families cannot drift apart (round-13 review: the first cut carried
-  * two near-verbatim copies, and every protocol fix would have had to
-  * land twice). */
+  * families cannot drift apart: with two copies, every protocol fix
+  * would have to land twice. */
 private[operators] object IndexTombstones {
 
   def fsOf(spark: SparkSession, path: String): FileSystem =

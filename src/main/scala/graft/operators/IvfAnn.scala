@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.operators.Lloyd.quantCol
-import graft.queries.SimilarityQueries.{cosineSim, normD}
+import graft.operators.Cosine.{asQueries, cosineSim, normD}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * nCells ~ √N so cells stay executor-sized, and the assignment/search
   * stay map-side + one join.
   *
-  * == Index lifecycle (round 13 completes it) ==
+  * == Index lifecycle ==
   * build ([[buildIndex]]) → search ([[topKFromIndex]], [[rangeSearch]])
   * → incremental update ([[updateIndex]]) → DELETE ([[deleteFromIndex]])
   * → COMPACTION ([[compactIndex]]). Deletes are TOMBSTONES: an
@@ -52,7 +52,7 @@ import org.apache.spark.sql.functions._
   * over members can only shrink when members leave — the update-path
   * max-merge can never tighten it, only recompute can).
   *
-  * == Cellstats publish (round 13: atomic generations) ==
+  * == Cellstats publish: atomic generations ==
   * Cellstats are published as VERSIONED generations
   * `$path/cellstats_v<N>`; readers take the highest generation whose
   * `_SUCCESS` marker exists (Spark's committer writes `_SUCCESS` only
@@ -180,11 +180,12 @@ object IvfAnn {
   /** Candidate pairs before re-ranking: each query joined to the
     * vectors of its nProbe probed cells. Exposed so the pruning
     * property (candidates ≪ Q·N) is testable — the final top-k output
-    * size says nothing about how much was scanned. */
+    * size says nothing about how much was scanned. queries: (vec_id,
+    * embedding), like the corpus. */
   def candidates(corpus: DataFrame, queries: DataFrame,
                  nCells: Int, nProbe: Int): DataFrame = {
     val (assigned, centroids) = fitAssign(corpus, nCells)
-    assigned.join(probeCells(queries, centroids, nProbe), Seq("cell"))
+    assigned.join(probeCells(asQueries(queries), centroids, nProbe), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
   }
 
@@ -201,7 +202,7 @@ object IvfAnn {
     val spark = corpus.sparkSession
     val fs = fsOf(spark, path)
     fs.delete(new Path(path, "tombstones"), true)
-    fs.delete(new Path(path, "cellstats"), true) // pre-round-13 layout
+    fs.delete(new Path(path, "cellstats"), true) // the flat pre-generation layout
     cellstatsGenDirs(fs, path).foreach { case (_, p) => fs.delete(p, true) }
     val (assigned, centroids) = fitAssign(corpus, nCells)
     assigned.write.mode("overwrite").partitionBy("cell")
@@ -215,10 +216,9 @@ object IvfAnn {
     publishCellstats(spark, path, rangeStats(spark, path))
   }
 
-  /** INCREMENTAL index update (round 12 — the standing-index lifecycle's
-    * missing operation, the ANN analog of d8's incremental LSH): append
-    * a delta corpus to a persisted index WITHOUT refitting the
-    * quantizer. A production index absorbs a crawl's daily arrivals;
+  /** INCREMENTAL index update (the ANN analog of d8's incremental
+    * LSH): append a delta corpus to a persisted index WITHOUT refitting
+    * the quantizer. A production index absorbs a crawl's daily arrivals;
     * refitting would re-pay the Lloyd passes AND silently re-assign the
     * standing corpus (cell ids are only meaningful per quantizer), so
     * the operational contract is FROZEN centroids: delta vectors take
@@ -270,10 +270,10 @@ object IvfAnn {
       .parquet(s"$path/assigned")
   }
 
-  /** DELETE from a persisted index (round 13 — the lifecycle's
-    * departure half: dedup drops, takedowns). Tombstone design: the
-    * ids land as an append into `$path/tombstones` — O(|delete|), the
-    * partitioned assignment layout is untouched — and every search
+  /** DELETE from a persisted index (the lifecycle's departure half:
+    * dedup drops, takedowns). Tombstone design: the ids land as an
+    * append into `$path/tombstones` — O(|delete|), the partitioned
+    * assignment layout is untouched — and every search
     * anti-joins the set, so a deleted vec_id can never surface from
     * [[topKFromIndex]] or [[rangeSearch]]. Deleting is idempotent
     * (anti-join semantics ignore duplicate tombstones) and composes
@@ -290,7 +290,7 @@ object IvfAnn {
                              assigned: DataFrame): DataFrame =
     IndexTombstones.drop(spark, path, assigned)
 
-  /** COMPACTION (round 13): rewrite the accumulated per-delta small
+  /** COMPACTION: rewrite the accumulated per-delta small
     * files (cells × deltas after a run of [[updateIndex]] appends) into
     * ONE file per cell, drop tombstoned rows for good, and RECOMPUTE
     * the cellstats radii over the survivors — the only operation that
@@ -360,24 +360,19 @@ object IvfAnn {
     * probed directories (PartitionFilters — asserted in IvfAnnSpec).
     * Tombstoned vectors are anti-joined out BEFORE ranking, so a
     * deleted vec_id never surfaces (and never displaces a live one from
-    * the top k). */
+    * the top k). queries: (vec_id, embedding), like the corpus. */
   def topKFromIndex(spark: SparkSession, path: String,
                     queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
     val centroids = Tables.parquet(spark, s"$path/centroids")
-    val probes = probeCells(queries, centroids, nProbe)
+    val probes = probeCells(asQueries(queries), centroids, nProbe)
     val cells = probes.select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
     val assigned = dropTombstoned(spark, path,
       Tables.parquet(spark, s"$path/assigned")
         .filter(col("cell").isin(cells: _*))) // static partition pruning
-    assigned.join(probes, Seq("cell"))
+    Cosine.rank(assigned.join(probes, Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-              round(cosineSim(col("qe"), col("embedding")), 6).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id")))
-        .cast("long"))
-      .filter(col("rnk") <= k)
+      .withColumnRenamed("vec_id", "neighbor_id"), k)
   }
 
   /** EXACT range search (radius query) against a persisted index: every
@@ -403,9 +398,9 @@ object IvfAnn {
     * the index build and persisted alongside); queries × nCells
     * bound tests broadcast; corpus work = only the cells a ball
     * overlaps. Tombstoned vectors are anti-joined out of the scanned
-    * survivors.
+    * survivors. queries: (vec_id, embedding), like the corpus.
     *
-    * Wide-radius cutover (round 12): the survivor cells normally arrive
+    * Wide-radius cutover: the survivor cells normally arrive
     * as an isin PARTITION FILTER so the scan prunes to their
     * directories. But when the query balls overlap MOST cells (a loose
     * minCos — r → √2 covers the sphere), the isin literal list
@@ -437,16 +432,15 @@ object IvfAnn {
   /** Survivor fraction past which [[rangeSearch]] drops the isin
     * partition filter: ¼. Below it the pruned directory read wins; above
     * it the isin is pure plan bloat (and at production nCells, a plan
-    * hazard). The cutover computes from THIS constant (round-13 ADVICE:
-    * the logic previously hardcoded the equivalent ×4 comparison, so
-    * editing the documented knob would silently not take effect). */
+    * hazard). The cutover computes from this constant, so editing it
+    * takes effect. */
   val IsinCutoverFraction = 0.25
 
   private def unitCol(v: Column): Column =
-    // the norm is hoisted OUT of the per-element lambda (round-11 ADVICE:
-    // normD(v) written inside the transform lambda re-evaluates the O(d)
-    // fold per element — O(d²) per vector, over the ENTIRE index in
-    // rangeStats and every query in rangeLive). Binding it through a
+    // the norm is hoisted OUT of the per-element lambda: normD(v)
+    // written inside the transform lambda re-evaluates the O(d) fold
+    // per element — O(d²) per vector, over the ENTIRE index in
+    // rangeStats and every query in rangeLive. Binding it through a
     // 1-element array makes the inner division read a lambda VARIABLE, so
     // normD evaluates exactly once per vector: normalization is O(d).
     element_at(transform(array(normD(v)), n =>
@@ -469,7 +463,7 @@ object IvfAnn {
       .groupBy("cell", "anchor").agg(max("d").as("radius"))
   }
 
-  // --- cellstats generations (round 13: atomic publish) ---------------
+  // --- cellstats generations: atomic publish ---------------------------
 
   private def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -506,10 +500,10 @@ object IvfAnn {
     * the previous generation just before this publish can still finish
     * (single-writer contract — see the object scaladoc). Everything
     * else — older complete generations AND incomplete orphans from
-    * crashed publishes — is deleted. (Round-13 review: retiring by
-    * generation NUMBER alone kept a crashed publish's incomplete dir
-    * while deleting the complete generation beneath it, exactly the
-    * one the retain-previous guarantee promises to readers.) */
+    * crashed publishes — is deleted. Retiring by generation NUMBER
+    * alone would keep a crashed publish's incomplete dir while deleting
+    * the complete generation beneath it, exactly the one the
+    * retain-previous guarantee promises to readers. */
   private def publishCellstats(spark: SparkSession, path: String,
                                stats: DataFrame): Unit = {
     val fs = fsOf(spark, path)
@@ -527,7 +521,7 @@ object IvfAnn {
   }
 
   /** The standing cellstats: highest complete generation; falls back to
-    * the pre-round-13 flat `cellstats` dir (an index an older binary
+    * the flat pre-generation `cellstats` dir (an index an older binary
     * built), then to an in-flight recompute (healed on the next
     * ensure* rewrite). */
   private[operators] def readCellstats(spark: SparkSession,
@@ -543,7 +537,8 @@ object IvfAnn {
 
   /** Returns (surviving (query_id, qe, cell) pairs, distinct surviving
     * cell ids, TOTAL cell count) — the total is what [[rangeSearch]]'s
-    * wide-radius cutover compares the survivor count against. */
+    * wide-radius cutover compares the survivor count against. queries:
+    * (vec_id, embedding), like the corpus. */
   def rangeLive(spark: SparkSession, path: String,
                 queries: DataFrame, minCos: Double): (DataFrame, Seq[Int], Long) = {
     val eps = 1e-9
@@ -554,7 +549,7 @@ object IvfAnn {
     // final plan sees a tiny ExistingRDD instead of the query×nCells
     // nested-loop bound test (which is broadcast-tiny but would read as
     // a BNLJ in the plan audit)
-    val live = graft.Caches.checkpoint(queries
+    val live = graft.Caches.checkpoint(asQueries(queries)
       .select(col("query_id"), col("qe"), unitCol(col("qe")).as("qhat"))
       .join(broadcast(stats),
         distCol(col("qhat"), col("anchor")) <= lit(r + eps) + col("radius"))
@@ -564,18 +559,13 @@ object IvfAnn {
   }
 
   /** Top-k cosine neighbors for each query via nProbe-of-nCells IVF.
-    * corpus: (vec_id, embedding); queries: (query_id, qe). */
+    * corpus and queries: (vec_id, embedding). */
   def topK(corpus: DataFrame, queries: DataFrame,
            k: Int, nCells: Int, nProbe: Int): DataFrame =
-    candidates(corpus, queries, nCells, nProbe)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-              round(cosineSim(col("qe"), col("embedding")), 6).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id")))
-        .cast("long"))
-      .filter(col("rnk") <= k)
+    Cosine.rank(candidates(corpus, queries, nCells, nProbe)
+      .withColumnRenamed("vec_id", "neighbor_id"), k)
 
-  /** FILTERED ANN (round 7): top-k among vectors satisfying a metadata
+  /** FILTERED ANN: top-k among vectors satisfying a metadata
     * predicate, expressed as an `allowed` id set — the
     * vector-search-plus-WHERE-clause shape every retrieval stack needs.
     * POST-filter design: the index stays predicate-agnostic (built once
@@ -589,13 +579,8 @@ object IvfAnn {
   def topKFiltered(corpus: DataFrame, queries: DataFrame,
                    allowed: DataFrame, k: Int, nCells: Int,
                    nProbe: Int): DataFrame =
-    candidates(corpus, queries, nCells, nProbe)
+    Cosine.rank(candidates(corpus, queries, nCells, nProbe)
       .join(allowed.select(col(allowed.columns.head).as("vec_id")),
             Seq("vec_id"), "left_semi")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-              round(cosineSim(col("qe"), col("embedding")), 6).as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id")))
-        .cast("long"))
-      .filter(col("rnk") <= k)
+      .withColumnRenamed("vec_id", "neighbor_id"), k)
 }

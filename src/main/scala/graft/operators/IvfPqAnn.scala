@@ -3,7 +3,6 @@ package graft.operators
 import graft.Tables
 import graft.operators.Lloyd.{microOf, quantCol}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF-PQ — the production-shape ANN index (the FAISS IVFPQ layout),
@@ -133,23 +132,14 @@ object IvfPqAnn {
     * integer lookups in whole-stage codegen. */
   private def searchCodes(codes: DataFrame, qp: DataFrame,
                           k: Int, cand: Int): DataFrame = {
-    val adc = adcScores(codes, qp)
-
-    val candidates = GroupTopK
-      .topK(adc, Seq("query_id"), "adc", "vec_id", k = cand, descending = false)
-
-    candidates
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(graft.queries.SimilarityQueries.cosineSim(col("qe"), col("embedding")), 6)
-          .as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id")))
-        .cast("long"))
-      .filter(col("rnk") <= k)
-      .orderBy("query_id", "rnk")
+    val candidates = GroupTopK.topK(adcScores(codes, qp), Seq("query_id"), "adc",
+      "vec_id", k = cand, descending = false)
+    Cosine.rank(candidates.withColumnRenamed("vec_id", "neighbor_id"), k)
   }
 
-  /** Full IVF-PQ search. Output (query_id, neighbor_id, cos, rnk). */
+  /** Full IVF-PQ search. corpus and queries: (vec_id, embedding).
+    * Output (query_id, neighbor_id, cos, rnk), unordered
+    * ([[Cosine.rank]]). */
   def topK(corpus: DataFrame, queries: DataFrame, k: Int,
            cand: Int = 200, nCells: Int = NCells,
            nProbe: Int = NProbe): DataFrame = {

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.operators.Lloyd.quantCol
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product-quantization ANN (v9) — the fourth member of the ANN family
@@ -72,7 +71,8 @@ object PqAnn {
 
   /** Full v-family search: encode corpus, ADC-score against `queries`,
     * take `cand` candidates per query, re-rank by exact cosine to `k`.
-    * Output (query_id, neighbor_id, cos, rnk). */
+    * corpus and queries: (vec_id, embedding). Output (query_id,
+    * neighbor_id, cos, rnk), unordered ([[Cosine.rank]]). */
   def topK(corpus: DataFrame, queries: DataFrame, k: Int,
            cand: Int = 100): DataFrame = {
     val cm = fitCodebooks(corpus)
@@ -96,14 +96,6 @@ object PqAnn {
     // rows per query (the same reason v5 uses it)
     val candidates = GroupTopK
       .topK(adc, Seq("query_id"), "adc", "vec_id", k = cand, descending = false)
-    candidates
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(graft.queries.SimilarityQueries.cosineSim(col("qe"), col("embedding")), 6)
-          .as("cos"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id")))
-        .cast("long"))
-      .filter(col("rnk") <= k)
-      .orderBy("query_id", "rnk")
+    Cosine.rank(candidates.withColumnRenamed("vec_id", "neighbor_id"), k)
   }
 }

@@ -22,53 +22,31 @@ object AggQueries {
     * fixed point (see plans/HllAgg.scala). */
   private val HllEstNum = "1674078918177289228255232"
 
-  /** Shared a29/a30 oracle chain: per-returnflag HLL register file —
-    * DISTINCT keys, the portable mix64 scramble (OracleU64.mix64Ctes),
-    * register = low 6 seed bits, rank = 59 − bitlength(suffix), padded
-    * to all 64 registers per group (empty register ⇒ rho 0). Ends in
-    * CTE `regs(l_returnflag, reg, rho)`. */
-  private val hllRegsCtes: String = {
+  /** Shared a29/a30 oracle chain: per-returnflag HLL register file of
+    * the column `key` — DISTINCT keys, the portable mix64 scramble
+    * (OracleU64.mix64Ctes), register = low 6 seed bits, rank = 59 −
+    * bitlength(suffix), padded to all 64 registers per group (empty
+    * register ⇒ rho 0). Ends in CTE `regs(l_returnflag, reg, rho)`.
+    * A non-empty `tag` suffixes the working CTEs (`regs` becomes
+    * `regs_low`), so a second chain fits in the same WITH. */
+  private def hllRegsCtes(key: String, tag: String = ""): String = {
     import OracleU64.mix64Ctes
-    s"""k AS (
-      |  SELECT DISTINCT l_returnflag, CAST(l_orderkey AS UBIGINT) AS e
+    val (regs, hash) = if (tag.isEmpty) ("regs", "hh") else ("regs_low", s"h$tag")
+    s"""k$tag AS (
+      |  SELECT DISTINCT l_returnflag, CAST($key AS UBIGINT) AS e
       |  FROM lineitem),
-      |${mix64Ctes("k", "e", "sd", "seed", "hh")},
-      |rr AS (
+      |${mix64Ctes(s"k$tag", "e", s"sd$tag", "seed", hash)},
+      |rr$tag AS (
       |  SELECT l_returnflag, CAST(seed & CAST(63 AS UBIGINT) AS BIGINT) AS reg,
       |         CASE WHEN (seed >> 6) = CAST(0 AS UBIGINT) THEN 59
       |              ELSE 59 - length(bin(seed >> 6)) END AS rho1
-      |  FROM sd),
-      |regs AS (
+      |  FROM sd$tag),
+      |$regs AS (
       |  SELECT g.l_returnflag, r.reg,
-      |         CAST(coalesce(max(rr.rho1), 0) AS BIGINT) AS rho
+      |         CAST(coalesce(max(rr$tag.rho1), 0) AS BIGINT) AS rho
       |  FROM (SELECT DISTINCT l_returnflag FROM lineitem) g
       |  CROSS JOIN (SELECT CAST(unnest(range(64)) AS BIGINT) AS reg) r
-      |  LEFT JOIN rr ON rr.l_returnflag = g.l_returnflag AND rr.reg = r.reg
-      |  GROUP BY 1, 2)""".stripMargin
-  }
-
-  /** Second register chain over the LOW-cardinality key l_linenumber
-    * (~7 distinct): the sketch whose raw estimator sits inside the
-    * small-range band, so a29's published correction branch actually
-    * FIRES in the oracle gate instead of being dead code at this SF.
-    * Ends in CTE `regs_low(l_returnflag, reg, rho)`. */
-  private val hllRegsLowCtes: String = {
-    import OracleU64.mix64Ctes
-    s"""kl AS (
-      |  SELECT DISTINCT l_returnflag, CAST(l_linenumber AS UBIGINT) AS e
-      |  FROM lineitem),
-      |${mix64Ctes("kl", "e", "sdl", "seed", "hl")},
-      |rrl AS (
-      |  SELECT l_returnflag, CAST(seed & CAST(63 AS UBIGINT) AS BIGINT) AS reg,
-      |         CASE WHEN (seed >> 6) = CAST(0 AS UBIGINT) THEN 59
-      |              ELSE 59 - length(bin(seed >> 6)) END AS rho1
-      |  FROM sdl),
-      |regs_low AS (
-      |  SELECT g.l_returnflag, r.reg,
-      |         CAST(coalesce(max(rrl.rho1), 0) AS BIGINT) AS rho
-      |  FROM (SELECT DISTINCT l_returnflag FROM lineitem) g
-      |  CROSS JOIN (SELECT CAST(unnest(range(64)) AS BIGINT) AS reg) r
-      |  LEFT JOIN rrl ON rrl.l_returnflag = g.l_returnflag AND rrl.reg = r.reg
+      |  LEFT JOIN rr$tag ON rr$tag.l_returnflag = g.l_returnflag AND rr$tag.reg = r.reg
       |  GROUP BY 1, 2)""".stripMargin
   }
 
@@ -879,8 +857,8 @@ object AggQueries {
     // the correction is live code, not a spec-only assertion. The
     // large-range branch has no 64-bit-hash analog (HllAgg scaladoc).
     q("a29_hll_distinct",
-      s"""WITH $hllRegsCtes,
-        |$hllRegsLowCtes,
+      s"""WITH ${hllRegsCtes("l_orderkey")},
+        |${hllRegsCtes("l_linenumber", tag = "l")},
         |est AS (
         |  SELECT l_returnflag,
         |         CAST(CAST('$HllEstNum' AS HUGEINT)
@@ -945,7 +923,7 @@ object AggQueries {
     // estimator noise can push inclusion–exclusion slightly negative
     // for near-disjoint sets — reported as computed, not clamped.
     q("a30_hll_union",
-      s"""WITH $hllRegsCtes,
+      s"""WITH ${hllRegsCtes("l_orderkey")},
         |pairs AS (
         |  SELECT a.l_returnflag AS flag_a, b.l_returnflag AS flag_b,
         |         a.rho AS rho_a, b.rho AS rho_b,

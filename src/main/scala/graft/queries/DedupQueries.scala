@@ -23,13 +23,12 @@ object DedupQueries {
 
   /** Shared DuckDB SQL for exact all-pairs 3-gram Jaccard ≥ 0.7 over
     * `src` (the documents table, or a stratum subselect — d3b).
-    * List-comprehension shingling mirrors TextFunctions.shingles (distinct,
-    * whole-text shingle when the doc is shorter than n). */
+    * Shingles come from TextFunctions.shinglesSql, the twin of
+    * TextFunctions.shingles. */
   private def jaccardPairsSqlOver(src: String) =
     s"""WITH sh AS (
       |  SELECT doc_id,
-      |         list_distinct([array_to_string(string_split(text,' ')[i:i+2], ' ')
-      |           for i in range(1, greatest(len(string_split(text,' ')) - 1, 2))]) AS s
+      |         ${shinglesSql("text", 3)} AS s
       |  FROM $src)
       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
       |       round(len(list_intersect(a.s, b.s)) * 1.0
@@ -203,8 +202,7 @@ object DedupQueries {
       }.mkString(",\n")
       s"""WITH sh AS MATERIALIZED (
          |  SELECT doc_id,
-         |         list_distinct([array_to_string(string_split(text,' ')[i:i+2], ' ')
-         |           for i in range(1, greatest(len(string_split(text,' ')) - 1, 2))]) AS s
+         |         ${shinglesSql("text", 3)} AS s
          |  FROM documents),
          |pairs AS MATERIALIZED (
          |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -296,10 +294,9 @@ object DedupQueries {
     // is ≈1 for J ≥ 0.7 (as for d3), so the oracle is the exact
     // all-pairs result restricted to pairs touching the delta.
     q("d8_incremental_lsh",
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id,
-        |         list_distinct([array_to_string(string_split(text,' ')[i:i+2], ' ')
-        |           for i in range(1, greatest(len(string_split(text,' ')) - 1, 2))]) AS s
+        |         ${shinglesSql("text", 3)} AS s
         |  FROM documents)
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |       round(len(list_intersect(a.s, b.s)) * 1.0
@@ -506,10 +503,9 @@ object DedupQueries {
     // is the brute-force quadratic join — the d2/v2 oracle-of-record
     // pattern. The score divides two exact integers, so it hash-matches.
     q("d10_containment_pairs",
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id,
-        |         list_distinct([array_to_string(string_split(text,' ')[i:i+2], ' ')
-        |           for i in range(1, greatest(len(string_split(text,' ')) - 1, 2))]) AS s
+        |         ${shinglesSql("text", 3)} AS s
         |  FROM documents)
         |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
         |       CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
@@ -537,10 +533,9 @@ object DedupQueries {
     // re-self-joins. Oracle: quadratic probe restricted to delta ×
     // index pairs with the lossless size prefilter.
     q("d11_containment_probe",
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id,
-        |         list_distinct([array_to_string(string_split(text,' ')[i:i+2], ' ')
-        |           for i in range(1, greatest(len(string_split(text,' ')) - 1, 2))]) AS s
+        |         ${shinglesSql("text", 3)} AS s
         |  FROM documents)
         |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
         |       CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
@@ -592,8 +587,7 @@ object DedupQueries {
       import OracleU64.{mix64Ctes, toSigned}
       s"""WITH sh AS (
         |  SELECT doc_id,
-        |         list_distinct([array_to_string(string_split(text,' ')[i:i+2], ' ')
-        |           for i in range(1, greatest(len(string_split(text,' ')) - 1, 2))]) AS s
+        |         ${shinglesSql("text", 3)} AS s
         |  FROM documents),
         |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
         |hx AS (

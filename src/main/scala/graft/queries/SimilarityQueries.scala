@@ -1,85 +1,67 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.QueryDef.{q, qRowsOnly}
-import graft.operators.{IvfAnn, Lloyd}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.QueryDef.q
+import graft.operators.{Cosine, IvfAnn, IvfPqAnn, Lloyd, PqAnn}
+import graft.operators.Cosine.{cosineSim, rerankSql, sqlDot, sqlNorm, topkSql}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Similarity search over the `embeddings` table (builder prompt):
-  * brute-force cosine top-k as the correctness baseline, plus a
-  * random-hyperplane-LSH bucketed variant as the scale path.
+/** Similarity search over the `embeddings` table: the vector family.
   *
-  * Scale notes: brute-force is O(Q·N) — correct and shuffle-light when the
-  * query set broadcasts (it does here, and at 100 TB the query side is
-  * still tiny relative to the corpus, so the join stays broadcast and the
-  * corpus is scanned exactly once, map-side). The LSH variant buckets the
-  * corpus by sign-pattern hash per table so each query probes only its
-  * (multi-probe) buckets — corpus-side work per query drops to
-  * L·(bits+1)/2^bits of N at a bounded recall cost; the candidate join
-  * shuffles on (table, bucket), near-uniform for mean-centered
-  * embeddings. Dot products fold left-to-right in DOUBLE on both
-  * engines, so scores are bitwise comparable pre-round.
+  *  - Exact: v1's brute-force cosine top-k (the ground truth of every
+  *    recall check, and of the v13 recall report), v2's near-dup pairs,
+  *    v15's range search, v6's semantic dedup and v7's MMR top-k.
+  *  - Approximate top-k, one member per scale lever: random-hyperplane
+  *    LSH (v3), SQ8 scalar quantization (v5), IVF ([[IvfAnn]]: v4, v10),
+  *    PQ ([[PqAnn]]: v9) and IVF-PQ ([[IvfPqAnn]]: v11).
+  *  - The standing-index lifecycle: build once and search (v8, v12),
+  *    incremental update (v16), drift monitor (v17), tombstone deletes
+  *    (v18, v19), and the queries that ride the standing IVF-PQ index
+  *    (v13's recall report, v14's hard negatives).
+  *
+  * Every search answers the same probe batch ([[probes]]) and ends in
+  * [[Cosine.rank]], the exact re-rank by rounded cosine; each oracle
+  * ends in its DuckDB twin, [[Cosine.rerankSql]] or [[Cosine.topkSql]].
+  * The ANN oracles replay the quantizer fits with `Lloyd`'s SQL twins,
+  * so the whole approximate path hash-matches, not just its recall.
+  *
+  * Scale notes: brute force is O(Q·N) — correct and shuffle-light when
+  * the query set broadcasts (it does here, and at 100 TB the query side
+  * is still tiny relative to the corpus, so the join stays broadcast and
+  * the corpus is scanned exactly once, map-side). The approximate paths
+  * cut the corpus-side work per query: LSH probes L·(bits+1)/2^bits of
+  * N, IVF nProbe/nCells of it, and PQ scores 8-byte codes instead of
+  * vectors. Their per-operator scale shapes are in the operators'
+  * scaladoc.
   */
 object SimilarityQueries {
 
-  /** Left-to-right double fold of sum(a[i]*b[i]) — same order as DuckDB's
-    * list_reduce, so results match bitwise. */
-  def dotD(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
+  /** The probe batch every search here answers: the first eight corpus
+    * vectors, in the corpus's (vec_id, embedding) shape. */
+  private def probes(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 8).select("vec_id", "embedding")
 
-  def normD(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double")))
+  /** DuckDB twin of [[probes]]' predicate, used bare or after a table
+    * alias. */
+  private val ProbeSql = "vec_id < 8"
 
-  def cosine(a: Column, b: Column): Column = dotD(a, b) / (normD(a) * normD(b))
+  /** v1's exact brute-force top-`k`: every probe against the whole
+    * corpus, re-ranked by [[Cosine.rank]]. Also the ground truth of the
+    * v13 recall report. */
+  private def bruteTopK(e: DataFrame, k: Int): DataFrame =
+    Cosine.rank(e.join(broadcast(Cosine.asQueries(probes(e))),
+        col("vec_id") =!= col("query_id"))
+      .withColumnRenamed("vec_id", "neighbor_id"), k)
 
-  /** Codegen fast path: the native `CosineSim` Catalyst expression
-    * (graft.plans) — identical math to `cosine` (left-to-right double
-    * folds, so the result is bitwise equal to the DuckDB oracle) with
-    * the loop compiled into whole-stage codegen instead of a UDF
-    * boundary. */
-  def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
-
-  /** DuckDB-side mirror of dotD/normD (double fold, same order). */
-  private def sqlDot(a: String, b: String) =
-    s"""list_reduce(list_prepend(0.0::DOUBLE,
-       |  list_transform(list_zip($a, $b),
-       |    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), (x, y) -> x + y)""".stripMargin
-  private def sqlNorm(a: String) =
-    s"""sqrt(list_reduce(list_prepend(0.0::DOUBLE,
-       |  list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (x, y) -> x + y))""".stripMargin
-
-  /** Top `k` rows of `rel` (query_id, neighbor_id, cos) per query, by
-    * cos, ties to the lower neighbor_id. */
-  private def topkSql(rel: String, k: Int): String =
-    s"""SELECT query_id, neighbor_id, cos, rnk FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |            ORDER BY cos DESC, neighbor_id) AS rnk
-       |  FROM $rel)
-       |WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
-
-  /** The ANN oracles' tail: the CTE `cand` (query_id, neighbor_id)
-    * re-ranked by exact rounded cosine, top `k` per query. */
-  private def rerankSql(k: Int): String =
-    s"""rerank AS (
-       |  SELECT cand.query_id, cand.neighbor_id,
-       |         round(${sqlDot("qv.embedding", "cv.embedding")}
-       |           / (${sqlNorm("qv.embedding")} * ${sqlNorm("cv.embedding")}), 6) AS cos
-       |  FROM cand
-       |  JOIN embeddings cv ON cv.vec_id = cand.neighbor_id
-       |  JOIN embeddings qv ON qv.vec_id = cand.query_id)
-       |${topkSql("rerank", k)}""".stripMargin
-
-  /** v1's exact brute-force top-5 oracle — also the GROUND TRUTH side
-    * of the v13 recall report. */
+  /** DuckDB twin of [[bruteTopK]] at k = 5. */
   private lazy val bruteTopkSql: String =
     s"""WITH scored AS (
        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
        |         round(${sqlDot("q.embedding", "c.embedding")}
        |           / (${sqlNorm("q.embedding")} * ${sqlNorm("c.embedding")}), 6) AS cos
-       |  FROM embeddings q JOIN embeddings c ON q.vec_id < 8 AND c.vec_id <> q.vec_id)
+       |  FROM embeddings q JOIN embeddings c ON q.$ProbeSql AND c.vec_id <> q.vec_id)
        |${topkSql("scored", 5)}""".stripMargin
 
   /** `rq` (vec_id, rq): the micro-unit corpus the ANN oracles fit on. */
@@ -113,7 +95,7 @@ object SimilarityQueries {
        |           row_number() OVER (PARTITION BY q.vec_id ORDER BY
        |             ${sqlDot("q.embedding", "c.c")}
        |               / (${sqlNorm("q.embedding")} * ${sqlNorm("c.c")}) DESC, c.cell) AS rn
-       |    FROM embeddings q CROSS JOIN $cents c WHERE q.vec_id < 8)
+       |    FROM embeddings q CROSS JOIN $cents c WHERE q.$ProbeSql)
        |  WHERE rn <= $nProbe)""".stripMargin
 
   /** `cand`: the `cand` lowest-ADC neighbors per query of `adc`. */
@@ -128,8 +110,8 @@ object SimilarityQueries {
     * the codebook fit (Lloyd.fitSql, M blocks, micro-unit means), then
     * encode → ADC → re-rank. Assignment and ADC scoring are BIGINT
     * arithmetic, so the per-round mean is the only float op. */
-  private def pqSql(m: Int, kCents: Int, iters: Int, k: Int, cand: Int,
-                    dim: Int = 64): String = {
+  private def pqSql(k: Int, cand: Int, m: Int = PqAnn.M, kCents: Int = PqAnn.K,
+                    iters: Int = PqAnn.PqIters, dim: Int = 64): String = {
     val dsub = dim / m
     s"""WITH $rqCte,
        |rqs AS MATERIALIZED (
@@ -139,7 +121,7 @@ object SimilarityQueries {
        |  ${Lloyd.nearestSql("rqs", s"c$iters", m)(Lloyd.sqDistSql)}),
        |dt AS (
        |  SELECT q.vec_id AS query_id, c.sub, c.cell, ${Lloyd.sqDistSql("q.v", "c.c")} AS d
-       |  FROM rqs q JOIN c$iters c ON q.sub = c.sub WHERE q.vec_id < 8),
+       |  FROM rqs q JOIN c$iters c ON q.sub = c.sub WHERE q.$ProbeSql),
        |adc AS (
        |  SELECT dt.query_id, af.vec_id AS neighbor_id, sum(dt.d) AS adc
        |  FROM af JOIN dt ON af.sub = dt.sub AND af.cell = dt.cell
@@ -161,7 +143,8 @@ object SimilarityQueries {
     * are excluded before re-rank, replaying IvfAnn's tombstone
     * anti-join exactly (the fit and assignment still cover the full
     * corpus: deletes never refit the quantizer). */
-  private def ivfSql(nCells: Int, nProbe: Int, iters: Int, k: Int,
+  private def ivfSql(nCells: Int, nProbe: Int, k: Int,
+                     iters: Int = IvfAnn.LloydIters,
                      dim: Int = 64, candPredicate: Option[String] = None,
                      fitWhere: Option[String] = None,
                      deleteWhere: Option[String] = None): String =
@@ -186,7 +169,7 @@ object SimilarityQueries {
     * on an identical double fold; the ×1e9 half-away round makes it
     * BIGINT), so the means are order-independent integer sums divided
     * once — hash-stable like the m10/v4 register trick. */
-  private def ivfDriftSql(nCells: Int, iters: Int, dim: Int = 64,
+  private def ivfDriftSql(nCells: Int, iters: Int = IvfAnn.LloydIters, dim: Int = 64,
                           fitWhere: Option[String] = None,
                           partExpr: String =
                             "CASE WHEN vec_id % 5 = 0 THEN 'delta' ELSE 'base' END")
@@ -221,10 +204,11 @@ object SimilarityQueries {
     * assignment row) naming the TOMBSTONED ids — matching codes are
     * excluded from ADC scoring (before the `cand` cut), replaying
     * IvfPqAnn's tombstone anti-join exactly. */
-  private def ivfpqSql(nCells: Int, nProbe: Int, coarseIters: Int,
-                       m: Int, kCents: Int, pqIters: Int,
-                       k: Int, cand: Int, dim: Int = 64,
-                       deleteWhere: Option[String] = None): String = {
+  private def ivfpqSql(k: Int, cand: Int, deleteWhere: Option[String] = None,
+                       nCells: Int = IvfPqAnn.NCells, nProbe: Int = IvfPqAnn.NProbe,
+                       coarseIters: Int = IvfAnn.LloydIters, m: Int = PqAnn.M,
+                       kCents: Int = PqAnn.K, pqIters: Int = PqAnn.PqIters,
+                       dim: Int = 64): String = {
     val dsub = dim / m
     def minus(a: String, b: String) =
       s"list_transform(list_zip($a, $b), pz -> CAST(pz[1] AS BIGINT) - CAST(pz[2] AS BIGINT))"
@@ -266,28 +250,15 @@ object SimilarityQueries {
   val defs: Seq[QueryDef] = Seq(
 
     // Brute-force cosine top-k: 8 query vectors × full corpus, top-5 each.
-    // Rank on the rounded score (+ vec_id tie-break) so ordering is robust
-    // to sub-round float drift between engines.
     q("v1_cosine_topk", bruteTopkSql) { (s, dir) =>
-      val e = Tables.load(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val scored = e.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-                round(cosineSim(col("qe"), col("embedding")), 6).as("cos"))
-      scored
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id")))
-          .cast("long"))
-        .filter(col("rnk") <= 5)
-        .orderBy("query_id", "rnk")
+      bruteTopK(Tables.load(s, dir, "embeddings"), 5).orderBy("query_id", "rnk")
     },
 
     // Embedding near-dup detection: all pairs with cosine ≥ 0.35 (the
     // embedding-cosine dedup gate). Near-dups in this corpus share a label
     // cluster by construction, and both engines compare the same pair set,
     // so results align. A naive self-join on `label` alone has two scale
-    // problems (seen in the round-1 plan): only 10 distinct join keys (max
+    // problems: only 10 distinct join keys (max
     // 10-way parallelism) and quadratic work per key in ONE task. Fix is
     // an exact triangle split: each label block is cut into K chunks on
     // vec_id, each side is replicated over its chunk-pair combos, and the
@@ -378,7 +349,7 @@ object SimilarityQueries {
          |    SELECT vec_id AS query_id,
          |           list_prepend(t*65536 + bucket,
          |             [t*65536 + xor(bucket, 1::BIGINT << pb) for pb in range(0, 4)]) AS tbs
-         |    FROM buckets WHERE vec_id < 8)),
+         |    FROM buckets WHERE $ProbeSql)),
          |cand AS (
          |  SELECT DISTINCT p.query_id, c.vec_id AS neighbor_id
          |  FROM corpus_tb c JOIN probe_tb p USING (tb)
@@ -404,7 +375,7 @@ object SimilarityQueries {
       // squaring is the nonlinearity that a polynomial/LCG chain lacks —
       // any affine-mod-P scheme stays affine in (i, j), so consecutive
       // dims draw near-identical uniforms and the planes collapse to
-      // low rank exactly like the r4 sinusoid bug (measured: recall
+      // low rank exactly like the sinusoid planes above (measured: recall
       // 0.45 with a base-131 poly chain here; ≥ 0.9 with the squaring
       // mixer). (h+0.5)/P and the 12-term left-to-right sum are IEEE-
       // correctly-rounded on both engines ⇒ identical coefficient
@@ -462,19 +433,13 @@ object SimilarityQueries {
       val probesOf = udf((emb: Seq[Float]) => packedBuckets(emb, probeExpand = true))
       val corpus = e.select(col("vec_id"), col("embedding"),
         explode(bucketsOf(col("embedding"))).as("tb"))
-      val probes = e.filter(col("vec_id") < 8)
+      val probeTbs = probes(e)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
           explode(probesOf(col("embedding"))).as("tb"))
-      corpus.join(broadcast(probes), Seq("tb"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"), col("qe"), col("embedding"))
-        .dropDuplicates("query_id", "neighbor_id")
-        .select(col("query_id"), col("neighbor_id"),
-                round(cosineSim(col("qe"), col("embedding")), 6).as("cos"))
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id")))
-          .cast("long"))
-        .filter(col("rnk") <= 5)
+      Cosine.rank(corpus.join(broadcast(probeTbs), Seq("tb"))
+          .filter(col("vec_id") =!= col("query_id"))
+          .select(col("query_id"), col("vec_id").as("neighbor_id"), col("qe"), col("embedding"))
+          .dropDuplicates("query_id", "neighbor_id"), 5)
         .orderBy("query_id", "rnk")
     },
 
@@ -512,7 +477,7 @@ object SimilarityQueries {
          |           p -> p[1]*p[2])), (x,y)->x+y) AS dot,
          |         list_reduce(list_prepend(0::BIGINT, list_transform(c.cq, v -> v*v)), (x,y)->x+y) AS na,
          |         list_reduce(list_prepend(0::BIGINT, list_transform(q.cq, v -> v*v)), (x,y)->x+y) AS nb
-         |  FROM q8 q JOIN q8 c ON q.vec_id < 8 AND c.vec_id <> q.vec_id),
+         |  FROM q8 q JOIN q8 c ON q.$ProbeSql AND c.vec_id <> q.vec_id),
          |cand AS (
          |  SELECT query_id, vec_id AS neighbor_id FROM (
          |    SELECT query_id, vec_id,
@@ -528,25 +493,18 @@ object SimilarityQueries {
       // and dominated the bench at 12.8 s/sf0.1
       val corpus = e.select(col("vec_id"),
         graft.functions.ArrayOps.sq8Quantize(col("embedding")).as("cq"))
-      val probes = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"),
-          graft.functions.ArrayOps.sq8Quantize(col("embedding")).as("qq"))
-      val approx = corpus.join(broadcast(probes), col("vec_id") =!= col("query_id"))
+      val batch = probes(e)
+      val qq = batch.select(col("vec_id").as("query_id"),
+        graft.functions.ArrayOps.sq8Quantize(col("embedding")).as("qq"))
+      val approx = corpus.join(broadcast(qq), col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"),
           graft.functions.ArrayOps.sq8Cosine(col("cq"), col("qq")).as("approx"))
       val cand = graft.operators.GroupTopK
         .topK(approx, Seq("query_id"), "approx", "vec_id", k = 20)
         .select(col("query_id"), col("vec_id").as("neighbor_id"))
-      cand
-        .join(e.select(col("vec_id").as("neighbor_id"), col("embedding")), "neighbor_id")
-        .join(broadcast(e.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))), "query_id")
-        .select(col("query_id"), col("neighbor_id"),
-          round(cosineSim(col("qe"), col("embedding")), 6).as("cos"))
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id")))
-          .cast("long"))
-        .filter(col("rnk") <= 5)
+      Cosine.rank(cand
+          .join(e.select(col("vec_id").as("neighbor_id"), col("embedding")), "neighbor_id")
+          .join(broadcast(Cosine.asQueries(batch)), "query_id"), 5)
         .orderBy("query_id", "rnk")
     },
 
@@ -558,14 +516,9 @@ object SimilarityQueries {
     // unrolled steps with exact integer dimension sums) and replays
     // assign→probe→re-rank bit-for-bit. Recall vs exact v1 is asserted
     // in SimilaritySpec at three scales.
-    q("v4_ann_ivf_topk",
-      ivfSql(nCells = 16, nProbe = 6,
-             iters = graft.operators.IvfAnn.LloydIters, k = 5)) { (s, dir) =>
+    q("v4_ann_ivf_topk", ivfSql(nCells = 16, nProbe = 6, k = 5)) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      graft.operators.IvfAnn.topK(
-          corpus = e.select("vec_id", "embedding"),
-          queries = e.filter(col("vec_id") < 8)
-            .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
+      IvfAnn.topK(corpus = e.select("vec_id", "embedding"), queries = probes(e),
           k = 5, nCells = 16, nProbe = 6)
         .orderBy("query_id", "rnk")
     },
@@ -576,17 +529,11 @@ object SimilarityQueries {
     // nProbe directories of the partitioned layout, no retraining, no
     // full-corpus scan. Deterministic quantizer ⇒ identical results to
     // v4 (spec), and the SAME oracle SQL replays it.
-    q("v8_ann_ivf_persisted",
-      ivfSql(nCells = 16, nProbe = 6,
-             iters = graft.operators.IvfAnn.LloydIters, k = 5)) { (s, dir) =>
+    q("v8_ann_ivf_persisted", ivfSql(nCells = 16, nProbe = 6, k = 5)) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       val path = graft.Caches.scratch("ivf", dir)
-      graft.operators.IvfAnn.ensureIndex(
-        e.select("vec_id", "embedding"), nCells = 16, path = path)
-      graft.operators.IvfAnn.topKFromIndex(s, path,
-          queries = e.filter(col("vec_id") < 8)
-            .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
-          k = 5, nProbe = 6)
+      IvfAnn.ensureIndex(e.select("vec_id", "embedding"), nCells = 16, path = path)
+      IvfAnn.topKFromIndex(s, path, queries = probes(e), k = 5, nProbe = 6)
         .orderBy("query_id", "rnk")
     },
 
@@ -600,18 +547,14 @@ object SimilarityQueries {
     // micro-quantized centroids, so the oracle replays the entire
     // algorithm with zero float folds. Recall vs exact v1 asserted in
     // SimilaritySpec.
-    q("v9_ann_pq_topk",
-      pqSql(m = graft.operators.PqAnn.M, kCents = graft.operators.PqAnn.K,
-            iters = graft.operators.PqAnn.PqIters, k = 5, cand = 100)) { (s, dir) =>
+    q("v9_ann_pq_topk", pqSql(k = 5, cand = 100)) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      graft.operators.PqAnn.topK(
-          corpus = e.select("vec_id", "embedding"),
-          queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding"),
+      PqAnn.topK(corpus = e.select("vec_id", "embedding"), queries = probes(e),
           k = 5, cand = 100)
         .orderBy("query_id", "rnk")
     },
 
-    // FILTERED ANN (round 7): top-k cosine among vectors whose label is
+    // FILTERED ANN: top-k cosine among vectors whose label is
     // in {0, 3, 6, 9} — the vector-search-plus-WHERE-clause shape every
     // retrieval stack needs (RAG over one tenant/language/license).
     // POST-filter design (IvfAnn.topKFiltered): the IVF index stays
@@ -621,20 +564,16 @@ object SimilarityQueries {
     // standard recall lever under selective filters. Oracle replays
     // quantizer + probing + the same candidate predicate.
     q("v10_ann_filtered",
-      ivfSql(nCells = 16, nProbe = 8,
-             iters = graft.operators.IvfAnn.LloydIters, k = 5,
+      ivfSql(nCells = 16, nProbe = 8, k = 5,
              candPredicate = Some("ce.label % 3 = 0"))) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      graft.operators.IvfAnn.topKFiltered(
-          corpus = e.select("vec_id", "embedding"),
-          queries = e.filter(col("vec_id") < 8)
-            .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
+      IvfAnn.topKFiltered(corpus = e.select("vec_id", "embedding"), queries = probes(e),
           allowed = e.filter(col("label") % 3 === 0).select("vec_id"),
           k = 5, nCells = 16, nProbe = 8)
         .orderBy("query_id", "rnk")
     },
 
-    // IVF-PQ (round 7) — the production-shape index (FAISS IVFPQ): the
+    // IVF-PQ — the production-shape index (FAISS IVFPQ): the
     // coarse quantizer prunes to nProbe cells AND product quantization
     // compresses each vector's RESIDUAL (vector − cell centroid) to a
     // 64-bit code scored by ADC lookups. Residual encoding is the point:
@@ -644,47 +583,30 @@ object SimilarityQueries {
     // 100 TB shape; every IVF-PQ-specific step is exact BIGINT
     // arithmetic, so the oracle replays coarse fit → assignment →
     // residuals → residual Lloyd → encode → probe → ADC bit-for-bit.
-    q("v11_ann_ivfpq",
-      ivfpqSql(nCells = graft.operators.IvfPqAnn.NCells,
-               nProbe = graft.operators.IvfPqAnn.NProbe,
-               coarseIters = graft.operators.IvfAnn.LloydIters,
-               m = graft.operators.PqAnn.M, kCents = graft.operators.PqAnn.K,
-               pqIters = graft.operators.PqAnn.PqIters,
-               k = 5, cand = 200)) { (s, dir) =>
+    q("v11_ann_ivfpq", ivfpqSql(k = 5, cand = 200)) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      graft.operators.IvfPqAnn.topK(
-          corpus = e.select("vec_id", "embedding"),
-          queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding"),
+      IvfPqAnn.topK(corpus = e.select("vec_id", "embedding"), queries = probes(e),
           k = 5, cand = 200)
         .orderBy("query_id", "rnk")
     },
 
-    // v11's standing-index twin (round 8, the v8 pattern applied to
-    // IVF-PQ): the index — 8-byte codes partitioned by cell, coarse
+    // v11's standing-index twin (the v8 pattern applied to IVF-PQ):
+    // the index — 8-byte codes partitioned by cell, coarse
     // centroids, residual codebooks — is built ONCE per corpus
     // (IvfPqAnn.ensureIndex) and each query batch pays only probe +
     // pruned code scan + ADC + re-rank; the two deterministic Lloyd
     // fits are NOT re-run per batch. Identical results to v11 (the
     // quantizers are deterministic), so the SAME oracle replays it;
     // IvfPqAnnSpec asserts v11 ≡ v12 and the partition-pruned scan.
-    q("v12_ann_ivfpq_persisted",
-      ivfpqSql(nCells = graft.operators.IvfPqAnn.NCells,
-               nProbe = graft.operators.IvfPqAnn.NProbe,
-               coarseIters = graft.operators.IvfAnn.LloydIters,
-               m = graft.operators.PqAnn.M, kCents = graft.operators.PqAnn.K,
-               pqIters = graft.operators.PqAnn.PqIters,
-               k = 5, cand = 200)) { (s, dir) =>
+    q("v12_ann_ivfpq_persisted", ivfpqSql(k = 5, cand = 200)) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       val path = graft.Caches.scratch("ivfpq", dir)
-      graft.operators.IvfPqAnn.ensureIndex(
-        e.select("vec_id", "embedding"), path)
-      graft.operators.IvfPqAnn.topKFromIndex(s, path,
-          queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding"),
-          k = 5, cand = 200)
+      IvfPqAnn.ensureIndex(e.select("vec_id", "embedding"), path)
+      IvfPqAnn.topKFromIndex(s, path, queries = probes(e), k = 5, cand = 200)
         .orderBy("query_id", "rnk")
     },
 
-    // v13 — ANN recall REPORT (round 8): the evaluation harness every
+    // v13 — ANN recall REPORT: the evaluation harness every
     // retrieval stack runs before trusting an index — per-query
     // recall@5 of the IVF-PQ index (v11's exact algorithm) against the
     // brute-force ground truth (v1's exact top-5), as a first-class
@@ -697,11 +619,11 @@ object SimilarityQueries {
     // the join/agg run on 8×5 rows. SimilaritySpec's recall floor
     // (≥ 0.6) is asserted on the SAME numbers this query publishes.
     //
-    // Round 9 (verdict ask #4 — bench the PRODUCTION form): the approx
-    // side probes v12's STANDING index (ensureIndex builds once per
-    // corpus and persists; later runs pay probe + pruned code scan +
-    // ADC only) instead of re-running both Lloyd fits per evaluation.
-    // Identical output — the quantizers are deterministic, so
+    // The approx side probes v12's STANDING index, the production form
+    // (ensureIndex builds once per corpus and persists; later runs pay
+    // probe + pruned code scan + ADC only), instead of re-running both
+    // Lloyd fits per evaluation. Identical output — the quantizers are
+    // deterministic, so
     // topKFromIndex ≡ topK row-for-row (IvfPqAnnSpec asserts v11 ≡
     // v12) and the SAME oracle replays it. This is also how the
     // harness runs at 100 TB: recall is evaluated against the index
@@ -710,13 +632,7 @@ object SimilarityQueries {
       s"""WITH exact_r AS (
          |  SELECT query_id, neighbor_id FROM ($bruteTopkSql)),
          |approx_r AS (
-         |  SELECT query_id, neighbor_id FROM (${ivfpqSql(
-               nCells = graft.operators.IvfPqAnn.NCells,
-               nProbe = graft.operators.IvfPqAnn.NProbe,
-               coarseIters = graft.operators.IvfAnn.LloydIters,
-               m = graft.operators.PqAnn.M, kCents = graft.operators.PqAnn.K,
-               pqIters = graft.operators.PqAnn.PqIters,
-               k = 5, cand = 200)}))
+         |  SELECT query_id, neighbor_id FROM (${ivfpqSql(k = 5, cand = 200)}))
          |SELECT e.query_id,
          |       CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
          |       CAST(5 AS BIGINT) AS k,
@@ -725,20 +641,10 @@ object SimilarityQueries {
          |  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
          |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val exact = e.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-                round(cosineSim(col("qe"), col("embedding")), 6).as("cos"))
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id"))))
-        .filter(col("rnk") <= 5)
-        .select("query_id", "neighbor_id")
+      val exact = bruteTopK(e, 5).select("query_id", "neighbor_id")
       val idxPath = graft.Caches.scratch("ivfpq", dir)
-      graft.operators.IvfPqAnn.ensureIndex(e.select("vec_id", "embedding"), idxPath)
-      val approx = graft.operators.IvfPqAnn.topKFromIndex(s, idxPath,
-          queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding"),
-          k = 5, cand = 200)
+      IvfPqAnn.ensureIndex(e.select("vec_id", "embedding"), idxPath)
+      val approx = IvfPqAnn.topKFromIndex(s, idxPath, queries = probes(e), k = 5, cand = 200)
         .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
       exact.join(broadcast(approx), Seq("query_id", "neighbor_id"), "left")
         .groupBy("query_id")
@@ -748,7 +654,7 @@ object SimilarityQueries {
         .orderBy("query_id")
     },
 
-    // v14 — HARD-NEGATIVE MINING (round 9): the contrastive-training
+    // v14 — HARD-NEGATIVE MINING: the contrastive-training
     // data op every retrieval/embedding pipeline runs — for each query,
     // mine the most-confusable NON-positive candidates as training
     // negatives. Composition of standing machinery, no new plumbing:
@@ -767,13 +673,7 @@ object SimilarityQueries {
     q("v14_hard_negatives",
       s"""WITH cands AS (
          |  SELECT query_id, neighbor_id AS neg_id, cos
-         |  FROM (${ivfpqSql(
-               nCells = graft.operators.IvfPqAnn.NCells,
-               nProbe = graft.operators.IvfPqAnn.NProbe,
-               coarseIters = graft.operators.IvfAnn.LloydIters,
-               m = graft.operators.PqAnn.M, kCents = graft.operators.PqAnn.K,
-               pqIters = graft.operators.PqAnn.PqIters,
-               k = 25, cand = 200)})),
+         |  FROM (${ivfpqSql(k = 25, cand = 200)})),
          |t1 AS (SELECT query_id, max(cos) AS top1 FROM cands GROUP BY 1),
          |hard AS (
          |  SELECT c.query_id, c.neg_id, c.cos,
@@ -785,10 +685,8 @@ object SimilarityQueries {
          |FROM hard WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       val idxPath = graft.Caches.scratch("ivfpq", dir)
-      graft.operators.IvfPqAnn.ensureIndex(e.select("vec_id", "embedding"), idxPath)
-      val cands = graft.operators.IvfPqAnn.topKFromIndex(s, idxPath,
-          queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding"),
-          k = 25, cand = 200)
+      IvfPqAnn.ensureIndex(e.select("vec_id", "embedding"), idxPath)
+      val cands = IvfPqAnn.topKFromIndex(s, idxPath, queries = probes(e), k = 25, cand = 200)
         .select(col("query_id"), col("neighbor_id").as("neg_id"), col("cos"))
       val wq = Window.partitionBy("query_id")
       cands
@@ -801,7 +699,7 @@ object SimilarityQueries {
         .orderBy("query_id", "rnk")
     },
 
-    // v15 — EXACT RANGE SEARCH (round 11): every corpus vector with
+    // v15 — EXACT RANGE SEARCH: every corpus vector with
     // cos ≥ 0.3 of each query — the radius-query API top-k cannot
     // express (dedup sweeps, "all documents similar enough", threshold
     // retrieval). Unlike v3-v14 this is NOT approximate: on unit
@@ -824,22 +722,18 @@ object SimilarityQueries {
          |       round(${sqlDot("q.embedding", "c.embedding")}
          |         / (${sqlNorm("q.embedding")} * ${sqlNorm("c.embedding")}), 6) AS cos
          |FROM embeddings q JOIN embeddings c
-         |  ON q.vec_id < 8 AND c.vec_id <> q.vec_id
+         |  ON q.$ProbeSql AND c.vec_id <> q.vec_id
          |WHERE ${sqlDot("q.embedding", "c.embedding")}
          |      / (${sqlNorm("q.embedding")} * ${sqlNorm("c.embedding")}) >= 0.3
          |ORDER BY query_id, neighbor_id""".stripMargin) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       val path = graft.Caches.scratch("ivf", dir)
-      graft.operators.IvfAnn.ensureIndex(
-        e.select("vec_id", "embedding"), nCells = 16, path = path)
-      graft.operators.IvfAnn.rangeSearch(s, path,
-          queries = e.filter(col("vec_id") < 8)
-            .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
-          minCos = 0.3)
+      IvfAnn.ensureIndex(e.select("vec_id", "embedding"), nCells = 16, path = path)
+      IvfAnn.rangeSearch(s, path, queries = probes(e), minCos = 0.3)
         .orderBy("query_id", "neighbor_id")
     },
 
-    // v16 — INCREMENTAL INDEX UPDATE (round 12): the standing-index
+    // v16 — INCREMENTAL INDEX UPDATE: the standing-index
     // lifecycle's missing operation (build → probe → range → UPDATE),
     // the ANN analog of d8's incremental LSH. The quantizer fits on the
     // BASE corpus only (vec_id % 5 ≠ 0); the delta (every 5th vector)
@@ -854,23 +748,19 @@ object SimilarityQueries {
     // range search under update (merged radii stay sound) is spec-gated
     // in SimilaritySpec.
     q("v16_ann_index_update",
-      ivfSql(nCells = 16, nProbe = 6,
-             iters = graft.operators.IvfAnn.LloydIters, k = 5,
+      ivfSql(nCells = 16, nProbe = 6, k = 5,
              fitWhere = Some("vec_id % 5 <> 0"))) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       val path = graft.Caches.scratch("ivfupd", dir)
-      graft.operators.IvfAnn.ensureUpdatedIndex(
+      IvfAnn.ensureUpdatedIndex(
         base = e.filter(col("vec_id") % 5 =!= 0).select("vec_id", "embedding"),
         delta = e.filter(col("vec_id") % 5 === 0).select("vec_id", "embedding"),
         nCells = 16, path = path)
-      graft.operators.IvfAnn.topKFromIndex(s, path,
-          queries = e.filter(col("vec_id") < 8)
-            .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
-          k = 5, nProbe = 6)
+      IvfAnn.topKFromIndex(s, path, queries = probes(e), k = 5, nProbe = 6)
         .orderBy("query_id", "rnk")
     },
 
-    // v17 — QUANTIZER DRIFT MONITOR (round 13): the number that turns
+    // v17 — QUANTIZER DRIFT MONITOR: the number that turns
     // v16's frozen-quantizer caveat ("refit when the delta distribution
     // diverges — that is a rebuild, not an update") into an operational
     // trigger. Over the v16 split (fit on vec_id % 5 ≠ 0, delta = the
@@ -886,19 +776,18 @@ object SimilarityQueries {
     // The oracle replays fit/assign via Lloyd.fitSql and the identical
     // integer registers, so the monitor itself is hash-gated.
     q("v17_quantizer_drift",
-      ivfDriftSql(nCells = 16, iters = graft.operators.IvfAnn.LloydIters,
-                  fitWhere = Some("vec_id % 5 <> 0"))) { (s, dir) =>
+      ivfDriftSql(nCells = 16, fitWhere = Some("vec_id % 5 <> 0"))) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       // the standing v16 index path: drift is measured against the SAME
       // frozen centroids the update lifecycle serves queries from
       val path = graft.Caches.scratch("ivfupd", dir)
-      graft.operators.IvfAnn.ensureUpdatedIndex(
+      IvfAnn.ensureUpdatedIndex(
         base = e.filter(col("vec_id") % 5 =!= 0).select("vec_id", "embedding"),
         delta = e.filter(col("vec_id") % 5 === 0).select("vec_id", "embedding"),
         nCells = 16, path = path)
       val cents = Tables.parquet(s, s"$path/centroids").orderBy("cell").collect()
         .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
-      val p = graft.operators.IvfAnn
+      val p = IvfAnn
         .assignWithDist(e.select("vec_id", "embedding"), cents)
         .withColumn("part",
           when(col("vec_id") % 5 === 0, "delta").otherwise("base"))
@@ -925,7 +814,7 @@ object SimilarityQueries {
         .orderBy("part")
     },
 
-    // v18 — DELETE-THEN-SEARCH (round 13): the lifecycle's departure
+    // v18 — DELETE-THEN-SEARCH: the lifecycle's departure
     // half. The index is built over the FULL corpus, then every
     // vec_id % 7 = 3 is tombstoned (IvfAnn.deleteFromIndex — an
     // O(|delete|) parquet append, the partitioned layout untouched) and
@@ -939,23 +828,19 @@ object SimilarityQueries {
     // files, radii recomputed not merged) is spec-gated in
     // IvfLifecycleSpec.
     q("v18_ann_delete_search",
-      ivfSql(nCells = 16, nProbe = 6,
-             iters = graft.operators.IvfAnn.LloydIters, k = 5,
+      ivfSql(nCells = 16, nProbe = 6, k = 5,
              deleteWhere = Some("a.vec_id % 7 = 3"))) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       val path = graft.Caches.scratch("ivfdel", dir)
-      graft.operators.IvfAnn.ensureDeletedIndex(
+      IvfAnn.ensureDeletedIndex(
         corpus = e.select("vec_id", "embedding"),
         deleteIds = e.filter(col("vec_id") % 7 === 3).select("vec_id"),
         nCells = 16, path = path)
-      graft.operators.IvfAnn.topKFromIndex(s, path,
-          queries = e.filter(col("vec_id") < 8)
-            .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
-          k = 5, nProbe = 6)
+      IvfAnn.topKFromIndex(s, path, queries = probes(e), k = 5, nProbe = 6)
         .orderBy("query_id", "rnk")
     },
 
-    // v19 — IVF-PQ DELETE-THEN-SEARCH (round 13): v18's tombstone
+    // v19 — IVF-PQ DELETE-THEN-SEARCH: v18's tombstone
     // contract applied to the compressed standing index (v12's layout).
     // Tombstoned codes drop BEFORE ADC scoring, so a deleted vector
     // neither surfaces nor consumes the cand re-rank budget — the
@@ -965,22 +850,14 @@ object SimilarityQueries {
     // same ids from the adc CTE, so the budget semantics are
     // hash-gated too.
     q("v19_ann_ivfpq_delete",
-      ivfpqSql(nCells = graft.operators.IvfPqAnn.NCells,
-               nProbe = graft.operators.IvfPqAnn.NProbe,
-               coarseIters = graft.operators.IvfAnn.LloydIters,
-               m = graft.operators.PqAnn.M, kCents = graft.operators.PqAnn.K,
-               pqIters = graft.operators.PqAnn.PqIters,
-               k = 5, cand = 200,
-               deleteWhere = Some("af0.vec_id % 7 = 3"))) { (s, dir) =>
+      ivfpqSql(k = 5, cand = 200, deleteWhere = Some("af0.vec_id % 7 = 3"))) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
       val path = graft.Caches.scratch("ivfpqdel", dir)
-      graft.operators.IvfPqAnn.ensureDeletedIndex(
+      IvfPqAnn.ensureDeletedIndex(
         corpus = e.select("vec_id", "embedding"),
         deleteIds = e.filter(col("vec_id") % 7 === 3).select("vec_id"),
         path = path)
-      graft.operators.IvfPqAnn.topKFromIndex(s, path,
-          queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding"),
-          k = 5, cand = 200)
+      IvfPqAnn.topKFromIndex(s, path, queries = probes(e), k = 5, cand = 200)
         .orderBy("query_id", "rnk")
     },
 

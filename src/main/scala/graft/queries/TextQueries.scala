@@ -404,9 +404,8 @@ object TextQueries {
     // corpus slice) the eval side is broadcast and the whole pass is
     // map-only over the corpus scan.
     q("x14_decontaminate",
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(list_distinct([array_to_string(string_split(text,' ')[i:i+2], ' ')
-        |    for i in range(1, greatest(len(string_split(text,' ')) - 1, 2))])) AS g
+      s"""WITH sh AS (
+        |  SELECT doc_id, unnest(${shinglesSql("text", 3)}) AS g
         |  FROM documents)
         |SELECT t.doc_id AS train_doc, e.doc_id AS eval_doc, count(*) AS n_shared
         |FROM sh t JOIN sh e ON t.g = e.g AND t.doc_id % 29 <> 0 AND e.doc_id % 29 = 0
@@ -503,9 +502,8 @@ object TextQueries {
     // map-only projection that runs unchanged over a readStream
     // micro-batch — the stream-static ingest gate (see StreamOpsSpec).
     q("x16_decon_survivors",
-      """WITH sh AS (
-        |  SELECT doc_id, list_distinct([array_to_string(string_split(text,' ')[i:i+2], ' ')
-        |    for i in range(1, greatest(len(string_split(text,' ')) - 1, 2))]) AS s
+      s"""WITH sh AS (
+        |  SELECT doc_id, ${shinglesSql("text", 3)} AS s
         |  FROM documents),
         |ev AS (SELECT list_distinct(flatten(list(s))) AS es FROM sh WHERE doc_id % 29 = 0)
         |SELECT doc_id, CAST(len(list_intersect(s, es)) AS BIGINT) AS n_shared

@@ -483,11 +483,8 @@ object StreamOps {
   def annGateBatch(batch: DataFrame, batchId: Long, indexPath: String,
                    k: Int, nProbe: Int, path: String,
                    lineage: String = ""): Unit = {
-    val spark = batch.sparkSession
-    val queries = batch
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     IdempotentLanding.land(
-      graft.operators.IvfAnn.topKFromIndex(spark, indexPath, queries, k, nProbe),
+      graft.operators.IvfAnn.topKFromIndex(batch.sparkSession, indexPath, batch, k, nProbe),
       path, batchId, lineage)
   }
 

@@ -29,6 +29,21 @@ class BenchPlanSpec extends SparkSpec {
     assert(GraftBenchPlan.withoutTerminalSort(df) eq df)
   }
 
+  test("no vector-family query keeps a global sort under its terminal one") {
+    // the operators return unordered frames and the registered query owns
+    // the one terminal sort, so Bench, which strips it, times no sort
+    val vFamily = SparkEntry.queries.keys.filter(_.matches("v\\d+_.*")).toSeq.sorted
+    assert(vFamily.size >= 19, s"vector family not found: $vFamily")
+    val sorted = vFamily.filter { name =>
+      GraftBenchPlan.withoutTerminalSort(SparkEntry.queries(name)(spark, sfDir))
+        .queryExecution.optimizedPlan.exists {
+          case s: Sort => s.global
+          case _       => false
+        }
+    }
+    assert(sorted.isEmpty, s"global sorts left after the strip in $sorted")
+  }
+
   test("interior sorts (window order) survive the strip") {
     val df = Tables.load(spark, sfDir, "orders")
       .withColumn("rnk", row_number().over(

@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * checkpoints and frees frames only through `Caches.pin`,
   * `Caches.checkpoint` and `Caches.release`, so `Caches.reset` frees
   * exactly what its session pinned. The ANN fits' seed order and
-  * micro-unit rounding are written only in `Lloyd`. Every doc block in src/main documents a
+  * micro-unit rounding are written only in `Lloyd`, and the exact
+  * cosine top-k only in `Cosine`. No layer below the queries reaches
+  * back into `graft.queries`. Every doc block in src/main documents a
   * definition. The needles are concatenated so this file never matches
   * itself. */
 class SessionHygieneSpec extends AnyFunSuite {
@@ -93,6 +95,27 @@ class SessionHygieneSpec extends AnyFunSuite {
       assertNone(needle, mainOffenders(_.contains(needle), Set("Lloyd.scala")),
         "use Lloyd.seedOrderSql, Lloyd.microSql, Lloyd.quantSql or Lloyd.microCol")
     }
+  }
+
+  test("src/main writes the exact top-k's ordering only in Cosine.scala") {
+    // one copy keeps every vector search on the tie-break its DuckDB
+    // twin (Cosine.topkSql) replays
+    val needle = "orderBy(desc(\"cos\"), " + "col(\"neighbor_id\"))"
+    assertNone(needle, mainOffenders(_.contains(needle), Set("Cosine.scala")),
+      "re-rank with Cosine.rank")
+  }
+
+  test("no layer below the queries depends on graft.queries") {
+    // the registered queries compose operators, functions and sources;
+    // a reference back makes an operator depend on its callers
+    val lower = Seq("operators", "plans", "functions", "domain", "bdb", "ml", "serve",
+      "sources", "streaming").map(d => s"src/main/scala/graft/$d/")
+    val needle = "graft." + "queries"
+    val found = for {
+      (path, text) <- SourceTree.files
+      if lower.exists(path.toString.startsWith) && text.contains(needle)
+    } yield path.toString
+    assertNone(needle, found, "move what the lower layer needs into it, as Cosine holds the cosine kernel")
   }
 
   test("src/main never reaches the private[spark] listener bus") {

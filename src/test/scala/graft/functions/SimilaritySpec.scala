@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.queries.SimilarityQueries.{cosine, dotD, normD}
+import graft.operators.Cosine.{asQueries, cosine, cosineSim, dotD, normD}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -23,6 +23,30 @@ class SimilaritySpec extends SparkSpec {
     val r = df.select(cosine(col("a"), col("b")), cosine(col("a"), col("c"))).head
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
     assert(math.abs(r.getDouble(1) + 1.0) < 1e-12)
+  }
+
+  test("Cosine.rank: rounded ties go to the lower neighbor_id, rnk is a long, " +
+       "and k past the candidate count keeps every candidate") {
+    import spark.implicits._
+    val q = Seq(1.0f, 0.0f)
+    val pairs = Seq(
+      (1L, q, 5L, Seq(1.0f, 0.0f)),    // cos 1
+      (1L, q, 3L, Seq(2.0f, 0.0f)),    // cos 1
+      (1L, q, 2L, Seq(1.0f, 1.0e-4f)), // cos just under 1, rounds to 1
+      (1L, q, 9L, Seq(0.0f, 1.0f)),    // cos 0
+      (2L, q, 4L, Seq(0.0f, 1.0f)))
+      .toDF("query_id", "qe", "neighbor_id", "embedding")
+    val ranked = graft.operators.Cosine.rank(pairs, k = 5)
+    assert(ranked.columns.toSeq == Seq("query_id", "neighbor_id", "cos", "rnk"))
+    assert(ranked.schema("rnk").dataType == org.apache.spark.sql.types.LongType)
+    val rows = ranked.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+      .sortBy(r => (r._1, r._4)).toSeq
+    assert(rows == Seq((1L, 2L, 1.0, 1L), (1L, 3L, 1.0, 2L), (1L, 5L, 1.0, 3L),
+      (1L, 9L, 0.0, 4L), (2L, 4L, 0.0, 1L)))
+    val top2 = graft.operators.Cosine.rank(pairs, k = 2)
+      .filter(col("query_id") === 1).select("neighbor_id").as[Long].collect().sorted
+    assert(top2.toSeq == Seq(2L, 3L))
   }
 
   // Recall bounds are asserted at THREE scales: sf0.001 (fast dev
@@ -136,7 +160,7 @@ class SimilaritySpec extends SparkSpec {
         .crossJoin(broadcast(qv))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(graft.queries.SimilarityQueries.cosineSim(col("qe"), col("embedding")), 6)
+          round(cosineSim(col("qe"), col("embedding")), 6)
             .as("cos"))
         .withColumn("rnk", row_number().over(
           Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id"))))
@@ -220,8 +244,7 @@ class SimilaritySpec extends SparkSpec {
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_spec"
     graft.operators.IvfAnn.buildIndex(e.select("vec_id", "embedding"), 16, path)
     val q = graft.operators.IvfAnn.topKFromIndex(spark, path,
-      e.filter(col("vec_id") < 2)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
+      e.filter(col("vec_id") < 2).select("vec_id", "embedding"),
       k = 5, nProbe = 2)
     val scan = q.queryExecution.executedPlan.toString
       .linesIterator.find(l => l.contains("PartitionFilters") && l.contains("cell"))
@@ -252,8 +275,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val e = graft.Tables.load(spark, sfDir, "embeddings")
     val corpus = e.select("vec_id", "embedding")
-    val queries = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding")
     val nCand = graft.operators.IvfAnn
       .candidates(corpus, queries, nCells = 16, nProbe = 6).count()
     val full = corpus.count() * queries.count()
@@ -334,11 +356,10 @@ class SimilaritySpec extends SparkSpec {
       val path = graft.Caches.scratch("ivf", dir)
       graft.operators.IvfAnn.ensureIndex(
         e.select("vec_id", "embedding"), nCells = 16, path = path)
-      val queries = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val brute = e.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+      val queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding")
+      val brute = e.join(broadcast(asQueries(queries)), col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          graft.queries.SimilarityQueries.cosineSim(col("qe"), col("embedding")).as("c"))
+          cosineSim(col("qe"), col("embedding")).as("c"))
       for (tau <- Seq(0.25, 0.3, 0.4)) {
         val got = graft.operators.IvfAnn.rangeSearch(spark, path, queries, tau)
           .select("query_id", "neighbor_id").collect()
@@ -377,14 +398,12 @@ class SimilaritySpec extends SparkSpec {
     val e = vecs.toDF("vec_id", "embedding")
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_tight_${System.nanoTime()}"
     graft.operators.IvfAnn.buildIndex(e, nCells = 16, path = path)
-    val queries = e.filter(col("vec_id") % 20 === 0).limit(8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val queries = e.filter(col("vec_id") % 20 === 0).limit(8).select("vec_id", "embedding")
     val got = graft.operators.IvfAnn.rangeSearch(spark, path, queries, 0.9)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = e.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .filter(graft.queries.SimilarityQueries
-        .cosineSim(col("qe"), col("embedding")) >= 0.9)
+    val want = e.join(broadcast(asQueries(queries)), col("vec_id") =!= col("query_id"))
+      .filter(cosineSim(col("qe"), col("embedding")) >= 0.9)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want, "tight-cluster range search diverged from brute force")
@@ -422,8 +441,7 @@ class SimilaritySpec extends SparkSpec {
     val path = graft.Caches.scratch("ivf", dir)
     graft.operators.IvfAnn.ensureIndex(
       e.select("vec_id", "embedding"), nCells = 16, path = path)
-    val queries = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding")
     val (_, cells, total) = graft.operators.IvfAnn.rangeLive(spark, path, queries, 0.05)
     assert(cells.size.toLong * 4 > total,
       s"fixture must survive > 25% of cells (got ${cells.size}/$total) or the cutover is untested")
@@ -433,9 +451,8 @@ class SimilaritySpec extends SparkSpec {
         "(a full-width literal list prunes nothing and bloats the plan)")
     val got = wide.select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = e.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .filter(graft.queries.SimilarityQueries
-        .cosineSim(col("qe"), col("embedding")) >= 0.05)
+    val want = e.join(broadcast(asQueries(queries)), col("vec_id") =!= col("query_id"))
+      .filter(cosineSim(col("qe"), col("embedding")) >= 0.05)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want, "non-isin path lost/invented results")
@@ -462,14 +479,12 @@ class SimilaritySpec extends SparkSpec {
       "no delta vector surfaced in any top-5 — the update is invisible")
     // v15's EXACTNESS survives the update: the merged coverage radii
     // (max of old and delta per cell) must still never prune a result
-    val queries = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding")
     val got = graft.operators.IvfAnn.rangeSearch(spark, path, queries, 0.25)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = e.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .filter(graft.queries.SimilarityQueries
-        .cosineSim(col("qe"), col("embedding")) >= 0.25)
+    val want = e.join(broadcast(asQueries(queries)), col("vec_id") =!= col("query_id"))
+      .filter(cosineSim(col("qe"), col("embedding")) >= 0.25)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want, "range search over the updated index diverged from brute force")
@@ -494,14 +509,12 @@ class SimilaritySpec extends SparkSpec {
     val assigned = spark.read.parquet(s"$path/assigned")
     assert(assigned.count() == e.count())
     assert(assigned.groupBy("vec_id").count().filter(col("count") > 1).count() == 0)
-    val queries = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding")
     val got = graft.operators.IvfAnn.rangeSearch(spark, path, queries, 0.25)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = e.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .filter(graft.queries.SimilarityQueries
-        .cosineSim(col("qe"), col("embedding")) >= 0.25)
+    val want = e.join(broadcast(asQueries(queries)), col("vec_id") =!= col("query_id"))
+      .filter(cosineSim(col("qe"), col("embedding")) >= 0.25)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want,

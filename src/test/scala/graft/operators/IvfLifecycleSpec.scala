@@ -27,9 +27,9 @@ class IvfLifecycleSpec extends SparkSpec {
 
   private def bruteTopK(corpus: DataFrame, queries: DataFrame, k: Int) = {
     import org.apache.spark.sql.expressions.Window
-    corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+    corpus.join(broadcast(Cosine.asQueries(queries)), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(graft.queries.SimilarityQueries.cosineSim(col("qe"), col("embedding")), 6)
+        round(Cosine.cosineSim(col("qe"), col("embedding")), 6)
           .as("cos"))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id"))))
@@ -39,9 +39,8 @@ class IvfLifecycleSpec extends SparkSpec {
   }
 
   private def bruteRange(corpus: DataFrame, queries: DataFrame, tau: Double) =
-    corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .filter(graft.queries.SimilarityQueries
-        .cosineSim(col("qe"), col("embedding")) >= tau)
+    corpus.join(broadcast(Cosine.asQueries(queries)), col("vec_id") =!= col("query_id"))
+      .filter(Cosine.cosineSim(col("qe"), col("embedding")) >= tau)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
@@ -54,8 +53,7 @@ class IvfLifecycleSpec extends SparkSpec {
     val e = graft.Tables.load(spark, sfDir, "embeddings")
     val path = tmp("del")
     IvfAnn.buildIndex(e.select("vec_id", "embedding"), nCells = 16, path)
-    val queries = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding")
     // delete ids that DO appear in the pre-delete results, so the test
     // cannot pass vacuously
     val pre = IvfAnn.topKFromIndex(spark, path, queries, k = 5, nProbe = 16)
@@ -115,8 +113,7 @@ class IvfLifecycleSpec extends SparkSpec {
     val outlierIds = outliers.map(_._1)
     IvfAnn.deleteFromIndex(outlierIds.toDF("vec_id"), path)
 
-    val queries = e.filter(col("vec_id") % 30 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val queries = e.filter(col("vec_id") % 30 === 0).select("vec_id", "embedding")
     // the expected survivor corpus, held as LOCAL rows: a frame lazily
     // read from $path/assigned would break once compaction swaps the
     // files out from under its cached listing
@@ -169,8 +166,7 @@ class IvfLifecycleSpec extends SparkSpec {
     val e = graft.Tables.load(spark, sfDir, "embeddings")
     val path = tmp("gen")
     IvfAnn.buildIndex(e.select("vec_id", "embedding"), nCells = 16, path)
-    val queries = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding")
     val want = gotRange(path, queries, 0.3)
     assert(want.nonEmpty, "fixture must produce range results")
 
@@ -244,8 +240,7 @@ class IvfLifecycleSpec extends SparkSpec {
     assert(!after.contains("cellstats_v5"),
       s"the crashed incomplete generation must be retired: $after")
     // and the index still serves exact results
-    val queries = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val queries = e.filter(col("vec_id") < 8).select("vec_id", "embedding")
     assert(gotRange(path, queries, 0.25) ==
       bruteRange(e, queries, 0.25))
   }
@@ -267,8 +262,7 @@ class IvfLifecycleSpec extends SparkSpec {
     assert(ex.getMessage.contains("empty survivor set"))
     // the live layout is untouched: still readable, tombstones still
     // applied (empty result, not an exception)
-    val queries = e.limit(2)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val queries = e.limit(2).select("vec_id", "embedding")
     assert(IvfAnn.topKFromIndex(spark, path, queries, k = 3, nProbe = 4)
       .count() == 0)
   }

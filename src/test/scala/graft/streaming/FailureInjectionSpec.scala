@@ -313,7 +313,7 @@ class FailureInjectionSpec extends SparkSpec {
       "no (query, rank) may land twice across crash + redelivery")
     val batchRes = graft.operators.IvfAnn.topKFromIndex(
       spark, s"$base/idx",
-      delta.select(col("vec_id").as("query_id"), col("embedding").as("qe")),
+      delta,
       k = 5, nProbe = 6)
     assert(landed.collect().map(_.toString).toSet ==
            batchRes.collect().map(_.toString).toSet,

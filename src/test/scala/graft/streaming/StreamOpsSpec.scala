@@ -622,7 +622,7 @@ class StreamOpsSpec extends SparkSpec {
     val landed = canon(spark.read.parquet(s"$base/out"))
     val batch = canon(graft.operators.IvfAnn.topKFromIndex(
       spark, s"$base/idx",
-      delta.select(col("vec_id").as("query_id"), col("embedding").as("qe")),
+      delta,
       k = 5, nProbe = 6))
     info(s"results: streamed=${landed.size} batch=${batch.size}")
     assert(landed == batch)

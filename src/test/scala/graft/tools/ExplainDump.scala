@@ -480,8 +480,7 @@ object ExplainDump {
         graft.operators.IvfAnn.ensureIndex(e.select("vec_id", "embedding"), 16, p)
         graft.operators.IvfAnn.rangeSearch(spark, p,
           e.filter(org.apache.spark.sql.functions.col("vec_id") < 8)
-            .select(org.apache.spark.sql.functions.col("vec_id").as("query_id"),
-                    org.apache.spark.sql.functions.col("embedding").as("qe")),
+            .select("vec_id", "embedding"),
           minCos = 0.3) },
       l => interesting(l) || l.contains("PartitionFilters"),
       width = 400)
@@ -508,8 +507,7 @@ object ExplainDump {
         val p = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_explain_tight"
         graft.operators.IvfAnn.buildIndex(e, nCells = 16, path = p)
         graft.operators.IvfAnn.rangeSearch(spark, p,
-          e.filter(col("vec_id") === 0)
-            .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
+          e.filter(col("vec_id") === 0),
           minCos = 0.9) },
       l => l.contains("PartitionFilters") || l.contains("Scan parquet") ||
            l.contains("Join"),

@@ -86,6 +86,8 @@ def main():
     ap.add_argument("--json", default=None, help="also write every run's metrics here")
     a = ap.parse_args()
 
+    if a.workdir:
+        os.makedirs(a.workdir, exist_ok=True)
     work = tempfile.mkdtemp(prefix="ab_layerbench_", dir=a.workdir)
     parent = export(a.ref, work)
     sides = {"parent": parent, "change": ROOT}
